@@ -53,15 +53,17 @@ _TABLE_CACHE: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
 _TABLE_CACHE_LOCK = threading.Lock()
 
 
+def session_stopped(spark: SparkSession) -> bool:
+    """True once ``spark`` has been stopped (its SparkContext's _jsc goes
+    None on stop) — a cache entry owned by it can only be dropped, never
+    unpersisted."""
+    return getattr(getattr(spark, "_sc", None), "_jsc", None) is None
+
+
 def _prune_table_cache() -> None:
-    """Drop cache entries whose SparkSession has been stopped (its
-    SparkContext's _jsc goes None on stop). Caller must hold
-    ``_TABLE_CACHE_LOCK``."""
-    dead = [
-        k
-        for k, (sess, _) in list(_TABLE_CACHE.items())
-        if getattr(getattr(sess, "_sc", None), "_jsc", None) is None
-    ]
+    """Drop cache entries whose SparkSession has been stopped. Caller must
+    hold ``_TABLE_CACHE_LOCK``."""
+    dead = [k for k, (sess, _) in list(_TABLE_CACHE.items()) if session_stopped(sess)]
     for k in dead:
         _TABLE_CACHE.pop(k, None)
 

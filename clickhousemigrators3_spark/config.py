@@ -100,9 +100,9 @@ class MigrationConfig:
     checksum: bool = True
     parallelism: int = 1
     # Programmatic-only (not a CLI flag): swap the source backend without
-    # touching the state machine — e.g. the ClickHouse HTTP reader
-    # (sources/clickhouse_http.read_table_http) instead of parquet fixtures.
-    # Called as source_loader(spark, table) -> DataFrame.
+    # touching the state machine — e.g. spark.read.format("clickhouse_http")
+    # (sources/clickhouse_ds.py, the one ClickHouse HTTP transport) instead
+    # of parquet fixtures. Called as source_loader(spark, table) -> DataFrame.
     source_loader: Any = None
 
 

@@ -905,19 +905,19 @@ _UNSUPPORTED_FUNCS = {
     ),
     "remote": (
         "distributed fan-out is Spark's job — read the underlying table "
-        "through the catalog / sources/clickhouse_http.py instead"
+        "through the catalog / spark.read.format(\"clickhouse_http\") instead"
     ),
     "remotesecure": (
         "distributed fan-out is Spark's job — read the underlying table "
-        "through the catalog / sources/clickhouse_http.py instead"
+        "through the catalog / spark.read.format(\"clickhouse_http\") instead"
     ),
     "cluster": (
         "distributed fan-out is Spark's job — read the underlying table "
-        "through the catalog / sources/clickhouse_http.py instead"
+        "through the catalog / spark.read.format(\"clickhouse_http\") instead"
     ),
     "clusterallreplicas": (
         "distributed fan-out is Spark's job — read the underlying table "
-        "through the catalog / sources/clickhouse_http.py instead"
+        "through the catalog / spark.read.format(\"clickhouse_http\") instead"
     ),
     "merge": (
         "the merge() multi-table view — union the tables explicitly "
@@ -4505,7 +4505,7 @@ _STATEMENT_POINTERS = {
     "insert": "run_ch_insert in this module (INSERT INTO … SELECT/VALUES "
               "→ translated query + catalog parquet append) / "
               "operators/migrate.py (S10 bulk copy) / "
-              "sources/clickhouse_http.py write_table_http",
+              "df.write.format(\"clickhouse_http\") (sources/clickhouse_ds.py)",
     "alter": "operators/maintenance.py (mutations, schema evolution, TTL, "
              "DROP/ATTACH/MOVE PARTITION)",
     "create": "operators/migrate.py:214-251 (CREATE sink = first staged "
@@ -8707,8 +8707,8 @@ def split_ch_insert(sql: str) -> tuple[str, list[str] | None, str] | None:
     if lead == "format":
         raise UnsupportedCHSQL(  # no-golden: run-path (split_ch_insert) -- pytest test_insert_parser_refusals
             "INSERT … FORMAT ships data out-of-band — use "
-            "sources/clickhouse_http.py write_table_http (the same wire, "
-            "JSONEachRow/Parquet both directions)"
+            "df.write.format(\"clickhouse_http\") (sources/clickhouse_ds.py: "
+            "the same wire, JSONEachRow/Parquet both directions)"
         )
     raise UnsupportedCHSQL(f"INSERT source {lead!r} not supported")  # no-golden: run-path (split_ch_insert) -- pytest test_insert_parser_refusals
 

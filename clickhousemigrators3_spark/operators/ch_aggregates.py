@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
+from ..catalog import dataset_tag, load_table
 from ..registry import register
 
 
@@ -416,16 +416,16 @@ def groupingsets_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     group by day yield NULL dates, which external comparators normalize
     inconsistently (None vs NaT). Spark plans one Expand + one distinct-aggregate; no re-scan per
     grain."""
-    e = load_table(spark, sf_dir, "events")
-    e.createOrReplaceTempView("gsd_events")
+    view = f"gsd_events_{dataset_tag(sf_dir)}"
+    load_table(spark, sf_dir, "events").createOrReplaceTempView(view)
     return spark.sql(
-        """
+        f"""
         WITH g AS (
           SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
                  COUNT(DISTINCT user_id) AS uniq_users,
                  CAST(GROUPING(CAST(date_trunc('day', ts) AS DATE)) * 2
                       + GROUPING(event_type) AS BIGINT) AS grp
-          FROM gsd_events
+          FROM {view}
           GROUP BY GROUPING SETS ((CAST(date_trunc('day', ts) AS DATE)),
                                   (event_type),
                                   (CAST(date_trunc('day', ts) AS DATE),

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
+from ..catalog import dataset_tag, load_table
 from ..functions.money import (
     SQL_REVENUE,
     dec,
@@ -415,15 +415,15 @@ def groupingsets_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (complements the cube/rollup queries):
     per-status, per-priority, and per-(status, priority) totals in one
     pass — Spark expands to a single Expand + one aggregate, no re-scan."""
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("gs_orders")
+    view = f"gs_orders_{dataset_tag(sf_dir)}"
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView(view)
     return spark.sql(
-        """
+        f"""
         SELECT o_orderstatus, o_orderpriority,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                  AS revenue,
                COUNT(*) AS n_orders
-        FROM gs_orders
+        FROM {view}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority),
                                 (o_orderstatus, o_orderpriority))
         ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST

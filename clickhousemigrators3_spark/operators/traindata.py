@@ -819,10 +819,11 @@ def pack_sequence_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CCNET_ALPHA = 1.0  # Laplace smoothing
 
-# last dataset whose ccnet intermediates are persisted (tag, frames) — see
-# ccnet_bigram_perplexity: the previous dataset's cache is evicted when a
-# new dataset is driven, bounding residency to one dataset per session
-_CCNET_CACHE: dict = {}
+# per session: the last dataset whose ccnet intermediates are persisted,
+# as (session, tag, frames) — see ccnet_bigram_perplexity: the previous
+# dataset's cache is evicted when a new dataset is driven, bounding
+# residency to one dataset per session
+_CCNET_CACHE: dict[int, tuple] = {}
 
 CCNET_PPL_ORACLE = """
 WITH d AS (
@@ -874,7 +875,7 @@ def ccnet_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Py4J round-trips PER CALL (40% of this query's bench-min) — the same
     finding that shaped the Lloyd trainer. Expressions are character-
     identical to the previous Column form, so values are bit-equal."""
-    from ..catalog import dataset_tag
+    from ..catalog import dataset_tag, session_stopped
 
     tag = dataset_tag(sf_dir)
     load_table(spark, sf_dir, "documents").createOrReplaceTempView(
@@ -913,11 +914,17 @@ FROM _ccnet_d_{tag} WHERE size(w) >= 2""")
     # dataset per session (advice r14: per-sf_dir plans otherwise
     # accumulate cache entries without bound). Same-dataset repeat calls
     # re-persist plan-identical frames, which the CacheManager dedups.
-    prev = _CCNET_CACHE.pop(None, None)
-    if prev is not None and prev[0] != tag:
-        for f in prev[1]:
+    # Slots of stopped sessions are dropped, never unpersisted (that would
+    # raise); keying by session keeps two live sessions from evicting each
+    # other's cache.
+    for key in [k for k, v in list(_CCNET_CACHE.items()) if session_stopped(v[0])]:
+        del _CCNET_CACHE[key]
+    key = id(spark._jsparkSession)
+    prev = _CCNET_CACHE.get(key)
+    if prev is not None and prev[1] != tag:
+        for f in prev[2]:
             f.unpersist()
-    _CCNET_CACHE[None] = (tag, (d_df, db_df))
+    _CCNET_CACHE[key] = (spark, tag, (d_df, db_df))
     return spark.sql(f"""
 WITH d AS (SELECT doc_id, w FROM _ccnet_d_{tag}),
 db AS (SELECT doc_id, bg FROM _ccnet_db_{tag}),

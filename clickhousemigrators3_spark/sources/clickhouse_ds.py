@@ -1,19 +1,17 @@
-"""`clickhouse_http` as a first-class Spark data source (PySpark 4 Python
-Data Source API): ``spark.read.format("clickhouse_http")`` and
-``spark.readStream.format("clickhouse_http")``.
-
-This elevates the mapInPandas transport (``clickhouse_http.py``) into the
-engine-integrated form:
+"""`clickhouse_http` as a Spark data source (PySpark 4 Python Data Source
+API): ``spark.read``, ``spark.readStream`` and ``df.write`` with
+``format("clickhouse_http")``. This is the repository's one ClickHouse
+HTTP transport; ``clickhouse_http.py`` holds the wire helpers it uses.
 
 * **Catalyst-driven predicate pushdown** — ``pushFilters`` receives the
   query's filters from the optimizer and compiles the supported ones
   (=, <, <=, >, >=, IN, IS NOT NULL on top-level columns) into the WHERE
   clause of the SQL shipped to the server, returning the rest for Spark to
-  evaluate. Where the raw transport pushed only what the caller passed
-  explicitly, this pushes whatever the user's ``df.filter(...)`` implies.
+  evaluate.
 * **Executor-side partitioned reads** — ``partitions()`` splits the
   numeric range into ``num_partitions`` half-open slices; each executor
-  task fetches its own bounded SELECT (JSONEachRow) and yields tuples.
+  task POSTs its own bounded SELECT and yields Arrow record batches
+  decoded from the negotiated wire. No row passes through the driver.
 * **Streaming CDC tail** — the stream reader turns the cursor-based
   incremental pull (see ``incremental_sync``) into a real micro-batch
   source: offsets are ``{"cursor": n}`` watermarks, ``latestOffset`` asks
@@ -22,28 +20,36 @@ engine-integrated form:
   never appear in two batches, replay after restart re-reads the same
   closed range (source-side idempotence; end-to-end exactly-once comes
   from the sink's checkpointed batch ids, e.g. foreachBatch upsert).
+* **Arrow writes** — each task POSTs ``INSERT … FORMAT JSONEachRow`` or
+  ``FORMAT Parquet`` bodies built from its record batches, flushed every
+  ``rows_per_request`` rows, and checks the server's written-rows
+  acknowledgment for every body.
 
 Options: url (required), table (required), partition_column, lower, upper,
-num_partitions, strict_bounds (default false: lower/upper size the strides
-with unbounded edge slices, JDBC-partitioner parity; true compiles both
-edges as hard filters), predicate (extra server-side WHERE), user,
-password, schema (DDL string, used when ``.schema()`` is not given),
-wire_format (default ``auto``: the driver probes the endpoint once and
-upgrades to the cheapest wire it speaks — ArrowStream over Parquet over
-JSONEachRow; explicit JSONEachRow / Parquet / Arrow / ArrowStream force
-that encoding),
-arrow (default true: yield RecordBatches; false reverts to row tuples),
-cursor_column (streaming; defaults to partition_column).
+num_partitions (>= 1), strict_bounds (default false: lower/upper size the
+strides with unbounded edge slices, JDBC-partitioner parity; true compiles
+both edges as hard filters), predicate (extra server-side WHERE), user,
+password, timeout, schema (DDL string, used when ``.schema()`` is not
+given), wire_format (read default ``auto``: the driver probes the endpoint
+once and upgrades to the cheapest wire it speaks — ArrowStream over
+Parquet over JSONEachRow; explicit JSONEachRow / Parquet / Arrow /
+ArrowStream force that encoding; write default JSONEachRow, ``Parquet``
+sends parquet bodies), cursor_column (streaming; defaults to
+partition_column), rows_per_request (write; >= 1, default 100000),
+compress (write; gzip each INSERT body), expect_insert_dedup (write;
+accept a 0-row acknowledgment as a Replicated insert-dedup replay).
 """
 
 from __future__ import annotations
 
 import json
+import logging
 from dataclasses import dataclass
-from typing import Any, Iterable, Iterator, Sequence, Tuple
+from typing import Any, Iterable, Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
     DataSourceStreamReader,
     DataSourceWriter,
@@ -58,9 +64,19 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import MapType, StructType
 
-from .clickhouse_http import _auth_headers, _coerce, _post, build_select
+from .clickhouse_http import (
+    _auth_headers,
+    _coerce,
+    _json_read_url,
+    _max_cursor,
+    _post,
+    build_select,
+    negotiate_wire_format,
+)
+
+_log = logging.getLogger("spark_migrator.http")
 
 
 @dataclass
@@ -112,28 +128,6 @@ def _compile_filter(f: Filter) -> str | None:
     return None
 
 
-def _fetch_rows(
-    url: str,
-    sql: str,
-    field_names: list[str],
-    casts: list,
-    auth: dict,
-    timeout: float,
-    retries: int = 2,
-) -> Iterator[Tuple]:
-    from .clickhouse_http import _json_read_url
-
-    raw = _post(_json_read_url(url), sql.encode(), timeout, auth, retries=retries)
-    for line in raw.splitlines():
-        if not line.strip():
-            continue
-        rec = json.loads(line)
-        yield tuple(
-            cast(rec.get(name)) if rec.get(name) is not None else None
-            for name, cast in zip(field_names, casts)
-        )
-
-
 def _fetch_record_batches(
     url: str,
     sql: str,
@@ -143,17 +137,15 @@ def _fetch_record_batches(
     wire_format: str = "JSONEachRow",
     retries: int = 2,
 ):
-    """Arrow path: one HTTP response → one (or few) ``pyarrow.RecordBatch``.
+    """One HTTP response → one (or few) ``pyarrow.RecordBatch``.
 
     PySpark 4's Python Data Source accepts RecordBatch yields from
-    ``read()``, skipping the per-row Python tuple build + per-value casts +
-    pickle serialization of the tuple path. The JSONEachRow body is parsed
-    by pyarrow's C++ NDJSON reader straight into Arrow buffers against the
-    Spark schema (missing keys → null, unexpected keys ignored) — ~20× the
-    tuple path in the in-tests microbench; a pandas parse is kept as the
-    fallback for any type the native reader can't ingest. The tuple path
-    survives only as an opt-out (``arrow=false``) and as the microbench
-    baseline.
+    ``read()``, so responses are decoded column-wise. The columnar wires
+    are cast to the Spark schema; the JSONEachRow body is parsed by
+    pyarrow's C++ NDJSON reader straight into Arrow buffers against the
+    Spark schema (missing keys → null, unexpected keys ignored), with a
+    pandas parse as the fallback for any type the native reader can't
+    ingest.
     """
     import io
 
@@ -161,15 +153,12 @@ def _fetch_record_batches(
     from pyarrow import json as pa_json
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from .clickhouse_http import _json_read_url
-
-    wf0 = wire_format.lower()
-    req_url = url if wf0 in ("parquet", "arrow", "arrowstream") else _json_read_url(url)
+    wf = wire_format.lower()
+    req_url = url if wf in ("parquet", "arrow", "arrowstream") else _json_read_url(url)
     raw = _post(req_url, sql.encode(), timeout, auth, retries=retries)
     if not raw.strip():
         return
     arrow_schema = to_arrow_schema(schema)
-    wf = wire_format.lower()
     if wf == "parquet":
         import pyarrow.parquet as pq
 
@@ -209,19 +198,25 @@ def _fetch_record_batches(
     yield from tbl.to_batches()
 
 
-def _casts_for(schema: StructType) -> list:
-    out = []
-    for f in schema.fields:
-        t = f.dataType.simpleString()
-        if t in ("bigint", "int", "smallint", "tinyint"):
-            out.append(int)
-        elif t in ("double", "float"):
-            out.append(float)
-        elif t == "boolean":
-            out.append(bool)
-        else:
-            out.append(lambda v: v)
-    return out
+def _flag(options: dict, name: str) -> bool:
+    return str(options.get(name, "false")).lower() in ("true", "1")
+
+
+def _count_option(options: dict, name: str, default: int) -> int:
+    """A count option, refused on the driver when below 1: 0 slices would
+    divide by zero, a negative count would give every key value its own
+    slice, and 0 rows per request would flush after every row."""
+    n = int(options.get(name, default))
+    if n < 1:
+        raise ValueError(f"clickhouse_http option {name} must be >= 1, got {n}")
+    return n
+
+
+def _split_range(lower: int, upper: int, n: int) -> list[RangePartition]:
+    """``[lower, upper)`` (non-empty) as at most ``n`` contiguous half-open
+    slices of equal stride; the last slice ends exactly at ``upper``."""
+    step = -(-(upper - lower) // n)  # ceil: at most n slices
+    return [RangePartition(b, min(b + step, upper)) for b in range(lower, upper, step)]
 
 
 def _resolve_wire(options: dict) -> str:
@@ -230,8 +225,6 @@ def _resolve_wire(options: dict) -> str:
     result ships with the reader): default ``auto`` negotiates
     ArrowStream → Parquet → JSONEachRow against the endpoint; explicit
     values pass through."""
-    from .clickhouse_http import negotiate_wire_format
-
     wf = str(options.get("wire_format", "auto"))
     if wf.lower() != "auto":
         return wf
@@ -247,6 +240,7 @@ class _CHReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict) -> None:
         self.schema = schema
         self.options = dict(options)
+        self.num_partitions = _count_option(self.options, "num_partitions", 8)
         self.options["wire_format"] = _resolve_wire(self.options)
         self.pushed: list[str] = []
 
@@ -261,16 +255,11 @@ class _CHReader(DataSourceReader):
         return rest
 
     def partitions(self) -> Sequence[InputPartition]:
-        col = self.options.get("partition_column")
-        if not col:
+        if not self.options.get("partition_column"):
             return [RangePartition(None, None)]
         lower = int(self.options.get("lower", 0))
         upper = int(self.options.get("upper", 1 << 31))
-        n = int(self.options.get("num_partitions", 8))
-        strict = str(self.options.get("strict_bounds", "false")).lower() in (
-            "true",
-            "1",
-        )
+        strict = _flag(self.options, "strict_bounds")
         if lower >= upper:
             # degenerate range: strict mode = the empty half-open interval;
             # default (JDBC parity) = bounds never filter, so one full scan
@@ -279,12 +268,7 @@ class _CHReader(DataSourceReader):
                 if strict
                 else [RangePartition(None, None)]
             )
-        step = max(1, -(-(upper - lower) // n))  # ceil: exactly n slices
-        bounds = list(range(lower, upper, step))
-        parts = [
-            RangePartition(b, upper if i == len(bounds) - 1 else b + step)
-            for i, b in enumerate(bounds)
-        ]
+        parts = _split_range(lower, upper, self.num_partitions)
         if not strict:
             # JDBC-partitioner parity: lower/upper size the strides but the
             # edge slices stay unbounded, so rows outside [lower, upper)
@@ -298,7 +282,6 @@ class _CHReader(DataSourceReader):
         clauses = list(self.pushed)
         if o.get("predicate"):
             clauses.append(f"({o['predicate']})")
-        wire_format = o.get("wire_format", "JSONEachRow")
         sql = build_select(
             o["table"],
             columns=[f.name for f in self.schema.fields],
@@ -306,26 +289,15 @@ class _CHReader(DataSourceReader):
             partition_column=o.get("partition_column"),
             lower=partition.lo,
             upper=partition.hi,
-            fmt=wire_format,
+            fmt=o["wire_format"],
         )
-        auth = _auth_headers(o.get("user"), o.get("password"))
-        timeout = float(o.get("timeout", 300))
-        # columnar wire bytes (parquet / arrow) — only the batch path
-        # decodes them
-        if wire_format.lower() in ("parquet", "arrow", "arrowstream") or str(
-            o.get("arrow", "true")
-        ).lower() not in ("false", "0"):
-            yield from _fetch_record_batches(
-                o["url"], sql, self.schema, auth, timeout, wire_format
-            )
-            return
-        yield from _fetch_rows(
+        yield from _fetch_record_batches(
             o["url"],
             sql,
-            [f.name for f in self.schema.fields],
-            _casts_for(self.schema),
-            auth,
-            timeout,
+            self.schema,
+            _auth_headers(o.get("user"), o.get("password")),
+            float(o.get("timeout", 300)),
+            o["wire_format"],
         )
 
 
@@ -337,7 +309,6 @@ class _CHStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict) -> None:
         self.schema = schema
         self.options = dict(options)
-        self.options["wire_format"] = _resolve_wire(self.options)
         options = self.options
         self.cursor_col = options.get("cursor_column") or options.get(
             "partition_column"
@@ -347,6 +318,8 @@ class _CHStreamReader(DataSourceStreamReader):
                 "clickhouse_http streaming needs cursor_column (or "
                 "partition_column) — a monotonic numeric column"
             )
+        self.num_partitions = _count_option(options, "num_partitions", 4)
+        options["wire_format"] = _resolve_wire(options)
         self.auth = _auth_headers(options.get("user"), options.get("password"))
         self.timeout = float(options.get("timeout", 60))
 
@@ -354,13 +327,15 @@ class _CHStreamReader(DataSourceStreamReader):
         return {"cursor": int(self.options.get("lower", 0)) - 1}
 
     def latestOffset(self) -> dict:
-        sql = (
-            f"SELECT max({self.cursor_col}) AS hi FROM "
-            f"{self.options['table']} FORMAT JSONEachRow"
+        o = self.options
+        hi = _max_cursor(
+            o["url"],
+            o["table"],
+            self.cursor_col,
+            self.timeout,
+            o.get("user"),
+            o.get("password"),
         )
-        raw = _post(self.options["url"], sql.encode(), self.timeout, self.auth)
-        line = raw.strip().splitlines()
-        hi = json.loads(line[0]).get("hi") if line else None
         if hi is None:
             return self.initialOffset()
         return {"cursor": int(hi)}
@@ -369,18 +344,10 @@ class _CHStreamReader(DataSourceStreamReader):
         lo, hi = int(start["cursor"]), int(end["cursor"])
         if hi <= lo:
             return []
-        n = int(self.options.get("num_partitions", 4))
-        span = hi - lo
-        step = max(1, -(-span // n))  # ceil: exactly n slices
-        bounds = list(range(lo + 1, hi + 1, step))
-        return [
-            RangePartition(b, hi + 1 if i == len(bounds) - 1 else b + step)
-            for i, b in enumerate(bounds)
-        ]
+        return _split_range(lo + 1, hi + 1, self.num_partitions)
 
     def read(self, partition: RangePartition) -> Iterator:
         o = self.options
-        wire_format = o.get("wire_format", "JSONEachRow")
         sql = build_select(
             o["table"],
             columns=[f.name for f in self.schema.fields],
@@ -388,25 +355,10 @@ class _CHStreamReader(DataSourceStreamReader):
             partition_column=self.cursor_col,
             lower=partition.lo,
             upper=partition.hi,
-            fmt=wire_format,
+            fmt=o["wire_format"],
         )
-        # the stream partition runner feeds the same Arrow-batch-capable
-        # worker as batch reads, so micro-batch deltas take the vectorized
-        # decode path too (arrow=false reverts to row tuples)
-        if wire_format.lower() in ("parquet", "arrow", "arrowstream") or str(
-            o.get("arrow", "true")
-        ).lower() not in ("false", "0"):
-            yield from _fetch_record_batches(
-                o["url"], sql, self.schema, self.auth, self.timeout, wire_format
-            )
-            return
-        yield from _fetch_rows(
-            o["url"],
-            sql,
-            [f.name for f in self.schema.fields],
-            _casts_for(self.schema),
-            self.auth,
-            self.timeout,
+        yield from _fetch_record_batches(
+            o["url"], sql, self.schema, self.auth, self.timeout, o["wire_format"]
         )
 
     def commit(self, end: dict) -> None:
@@ -416,17 +368,86 @@ class _CHStreamReader(DataSourceStreamReader):
         pass
 
 
+def _json_text(v: Any) -> str:
+    """``json.dumps`` fallback: the documented JSONEachRow text of the
+    values JSON has no type for — DateTime64 ``YYYY-MM-DD hh:mm:ss[.ffffff]``,
+    Date ``YYYY-MM-DD``, Decimal as its exact digits. A zoned timestamp is
+    rendered in the local wall clock, as Spark's row conversion does."""
+    if getattr(v, "tzinfo", None) is not None:
+        v = v.astimezone().replace(tzinfo=None)
+    return str(v)
+
+
+def _json_each_row(batches: list, schema: StructType) -> str:
+    # Arrow hands a map over as (key, value) pairs; JSONEachRow wants an object
+    maps = [f.name for f in schema.fields if isinstance(f.dataType, MapType)]
+    lines = []
+    for b in batches:
+        for row in b.to_pylist():
+            for m in maps:
+                if row[m] is not None:
+                    row[m] = dict(row[m])
+            lines.append(json.dumps(row, default=_json_text))
+    return "\n".join(lines)
+
+
+def _check_insert_ack(
+    summary: dict | None, rows: int, table: str, expect_insert_dedup: bool
+) -> None:
+    """Wire-level write witness: when the server acknowledges an INSERT
+    with X-ClickHouse-Summary, its written_rows must not be LESS than the
+    body's row count — a truncating endpoint fails the task LOUDLY instead
+    of silently under-writing. Not exact equality: real servers
+    legitimately report MORE (materialized views attached to the target
+    count their own writes into written_rows). A 0-ack is ambiguous —
+    either a Replicated insert-dedup REPLAY (successful, server-side
+    duplicate suppression) or a total-loss endpoint that dropped the whole
+    batch; only the caller knows which is plausible for the target table,
+    so 0-acks raise unless ``expect_insert_dedup`` opted in (and even then
+    each one is warned to the executor log — a stream of them against a
+    non-Replicated table is the loss case)."""
+    wr = (summary or {}).get("written_rows")
+    if wr is None or int(wr) >= rows:
+        return
+    if int(wr) == 0 and expect_insert_dedup:
+        _log.warning(
+            "INSERT into %s acked written_rows=0 for a %d-row body — treated "
+            "as a Replicated insert-dedup replay (expect_insert_dedup=true); "
+            "if %s is not a Replicated table with deduplication, this write "
+            "was LOST",
+            table,
+            rows,
+            table,
+        )
+        return
+    raise OSError(
+        f"server acknowledged {wr} written rows for a {rows}-row INSERT body "
+        "— write witness under-write (X-ClickHouse-Summary)"
+        + (
+            ""
+            if int(wr)
+            else "; set expect_insert_dedup=true only if this target is a "
+            "Replicated table where a 0-ack means a deduplicated replay"
+        )
+    )
+
+
 @dataclass
 class _WroteRows(WriterCommitMessage):
     rows: int
 
 
-class _CHWriter(DataSourceWriter):
-    """INSERT sink: each task POSTs its partition's rows as
-    ``INSERT … FORMAT JSONEachRow`` requests, flushed every
-    ``rows_per_request`` rows so request bodies stay bounded. ``overwrite``
-    issues a server-side TRUNCATE at commit-planning time (driver), before
-    any task runs — matching the INSERT-after-TRUNCATE the reference's
+class _CHWriter(DataSourceArrowWriter):
+    """INSERT sink: each task POSTs its partition's record batches as
+    ``INSERT … FORMAT JSONEachRow`` (default) or ``FORMAT Parquet``
+    (``wire_format=Parquet``: columnar bodies, Decimal/DateTime64 exact)
+    requests of exactly ``rows_per_request`` rows (the last one shorter),
+    so request bodies stay bounded whatever the partition size.
+    ``compress`` gzips each body with ``Content-Encoding: gzip``. INSERTs
+    are never retried — a re-POSTed body could double-apply, so write
+    idempotence stays the caller's contract. ``overwrite`` issues a
+    server-side TRUNCATE when the writer is built (driver), before any
+    task runs — matching the INSERT-after-TRUNCATE the reference's
     recreate-and-copy flow performs."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
@@ -434,7 +455,11 @@ class _CHWriter(DataSourceWriter):
         self.options = options
         self.auth = _auth_headers(options.get("user"), options.get("password"))
         self.timeout = float(options.get("timeout", 300))
-        self.chunk = int(options.get("rows_per_request", 100_000))
+        self.chunk = _count_option(options, "rows_per_request", 100_000)
+        wire = str(options.get("wire_format", "JSONEachRow"))
+        self.parquet = wire.lower() == "parquet"
+        self.compress = _flag(options, "compress")
+        self.expect_insert_dedup = _flag(options, "expect_insert_dedup")
         if overwrite:
             _post(
                 options["url"],
@@ -443,57 +468,56 @@ class _CHWriter(DataSourceWriter):
                 self.auth,
             )
 
+    def _insert(self, batches: list, rows: int) -> None:
+        table = self.options["table"]
+        if self.parquet:
+            import io
+
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            out = io.BytesIO()
+            pq.write_table(pa.Table.from_batches(batches), out)
+            body = f"INSERT INTO {table} FORMAT Parquet\n".encode() + out.getvalue()
+        else:
+            body = (
+                f"INSERT INTO {table} FORMAT JSONEachRow\n"
+                + _json_each_row(batches, self.schema)
+            ).encode()
+        headers = self.auth
+        if self.compress:
+            import gzip
+
+            body = gzip.compress(body)
+            headers = {**self.auth, "Content-Encoding": "gzip"}
+        sink: dict = {}
+        _post(self.options["url"], body, self.timeout, headers, summary_sink=sink)
+        _check_insert_ack(sink.get("summary"), rows, table, self.expect_insert_dedup)
+
     def write(self, iterator) -> _WroteRows:
-        o = self.options
-        names = [f.name for f in self.schema.fields]
         total = 0
         buf: list = []
-        parquet = str(o.get("wire_format", "JSONEachRow")).lower() == "parquet"
-
-        def flush() -> None:
-            nonlocal buf
-            if not buf:
-                return
-            if parquet:
-                import io
-
-                import pandas as pd
-                import pyarrow as pa
-                import pyarrow.parquet as pq
-
-                out = io.BytesIO()
-                pq.write_table(
-                    pa.Table.from_pandas(
-                        pd.DataFrame(buf, columns=names), preserve_index=False
-                    ),
-                    out,
-                )
-                body = (
-                    f"INSERT INTO {o['table']} FORMAT Parquet\n".encode()
-                    + out.getvalue()
-                )
-            else:
-                body = (
-                    f"INSERT INTO {o['table']} FORMAT JSONEachRow\n"
-                    + "\n".join(buf)
-                ).encode()
-            _post(o["url"], body, self.timeout, self.auth)
-            buf = []
-
-        for row in iterator:
-            buf.append(
-                tuple(row)
-                if parquet
-                else json.dumps(dict(zip(names, row)), default=str)
-            )
-            total += 1
-            if len(buf) >= self.chunk:
-                flush()
-        flush()
+        buffered = 0
+        for batch in iterator:
+            total += batch.num_rows
+            start = 0
+            while start < batch.num_rows:
+                take = min(self.chunk - buffered, batch.num_rows - start)
+                buf.append(batch.slice(start, take))
+                buffered += take
+                start += take
+                if buffered == self.chunk:
+                    self._insert(buf, buffered)
+                    buf, buffered = [], 0
+        if buffered:
+            self._insert(buf, buffered)
         return _WroteRows(rows=total)
 
     def commit(self, messages) -> None:
-        pass  # inserts are visible as they land (the server's semantics)
+        # inserts are visible as they land (the server's semantics); the
+        # commit only totals what the tasks wrote
+        rows = sum(m.rows for m in messages if m is not None)
+        _log.info("INSERT into %s: %d rows", self.options["table"], rows)
 
     def abort(self, messages) -> None:
         pass  # no staged state to clean: idempotence comes from the caller
@@ -523,4 +547,3 @@ class ClickHouseHTTPDataSource(DataSource):
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
         return _CHWriter(schema, dict(self.options), overwrite)
-

@@ -1,53 +1,45 @@
-"""ClickHouse HTTP-interface source/sink — the protocol the reference
+"""ClickHouse HTTP-interface wire helpers — the protocol the reference
 actually speaks (reference ``ch_client.py:10-25`` opens clickhouse-connect
 against HTTP port 8123; every ``client.query``/``client.command`` in
 ``migration.py`` ultimately travels this interface).
 
+Rows move through one transport, the ``clickhouse_http`` Spark data
+source (``clickhouse_ds.py``); this module holds what it and the
+driver-side callers share:
+
+* ``_post`` — one POST with gzip inflate, bounded retries for idempotent
+  reads, and capture of the ``X-ClickHouse-Summary``/``-Progress`` headers;
+* ``negotiate_wire_format`` — the once-per-endpoint ArrowStream → Parquet
+  → JSONEachRow read-wire probe;
+* ``build_select`` — one partition's bounded SELECT, caller predicate and
+  range edges compiled into the SQL so filtering is server-side whatever
+  the optimizer decides (the guarantee the reference got by shipping whole
+  SQL strings, ``migration.py:473-477``);
+* ``_coerce`` — the schema-driven parse of JSONEachRow text renderings;
+* ``command_http`` / ``query_scalar_http`` — driver-side DDL and scalar
+  probes (the reference's count validation);
+* ``incremental_sync`` — cursor-based change capture that reads each batch
+  through the data source.
+
 Unlike the JDBC module (``sources/clickhouse.py``, which needs a driver jar
-the sandbox lacks), this path moves real rows with nothing but the Python
-standard library + pandas, so it is round-trip tested in-process
-(tests/test_clickhouse_http.py spins up a stdlib HTTP server that speaks the
-documented ClickHouse HTTP protocol: POST body = SQL, ``FORMAT
-JSONEachRow`` responses, ``INSERT INTO … FORMAT JSONEachRow`` with inline
-data rows).
-
-Scale design — the same properties the JDBC reader encodes, restated for
-the HTTP transport:
-
-* **Executor-side fetch.** The driver materialises only a tiny
-  range-spec DataFrame (one row per partition); ``mapInPandas`` workers
-  each POST their own range-bounded ``SELECT`` and stream the response
-  into Arrow batches. No row ever passes through the driver — the
-  reference's core property (its single-node loop was the bottleneck we
-  remove).
-* **Range partitioning.** ``num_partitions`` splits ``[lower, upper)`` on a
-  numeric column into contiguous ranges, one HTTP request per partition —
-  1000 executors issue 1000 bounded scans, which MergeTree serves as
-  primary-key range reads when the partition column prefixes the sort key.
-* **Predicate pushdown by construction.** The caller predicate and the
-  range bounds are compiled into the SQL string itself, so filtering is
-  server-side regardless of what any optimizer decides — the guarantee the
-  reference got by shipping whole SQL strings (``migration.py:473-477``).
-* **Streaming writes.** The sink POSTs one ``INSERT … FORMAT JSONEachRow``
-  per input partition from inside ``mapInPandas`` (count-only output), so
-  inserts parallelise across executors and each request stays
-  bounded by the partition size.
+the sandbox lacks), this path needs only the Python standard library,
+pandas and pyarrow, so it is round-trip tested in-process
+(tests/test_clickhouse_http.py spins up a stdlib HTTP server that speaks
+the documented ClickHouse HTTP protocol).
 """
 
 from __future__ import annotations
 
-import io
 import json
 import re
 import urllib.error
 import urllib.parse
 import urllib.request
-from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -260,17 +252,6 @@ def _post(
         time.sleep(retry_backoff * attempt)
 
 
-def _empty_pdf(schema: T.StructType) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            f.name: pd.Series(
-                dtype=_PANDAS_DTYPES.get(f.dataType, "object")
-            )
-            for f in schema.fields
-        }
-    )
-
-
 def _coerce(pdf: pd.DataFrame, schema: T.StructType) -> pd.DataFrame:
     """Column-order + dtype normalisation so Arrow conversion is exact even
     when a JSON batch is missing optional keys or infers int for a double.
@@ -312,279 +293,6 @@ def _coerce(pdf: pd.DataFrame, schema: T.StructType) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def read_table_http(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    schema: T.StructType,
-    partition_column: str | None = None,
-    lower: int = 0,
-    upper: int = 1 << 31,
-    num_partitions: int = 32,
-    columns: list[str] | None = None,
-    predicate: str | None = None,
-    timeout: float = 300.0,
-    user: str | None = None,
-    password: str | None = None,
-    strict_bounds: bool = False,
-    wire_format: str = "auto",
-    retries: int = 2,
-) -> DataFrame:
-    """S1 over HTTP: partitioned parallel read of one ClickHouse table.
-
-    The driver builds ``num_partitions`` half-open ranges; each
-    ``mapInPandas`` task POSTs its own bounded SELECT and parses the
-    JSONEachRow response executor-side. Without ``partition_column`` the
-    read degrades to one request (still executor-side, never the driver).
-
-    ``wire_format`` picks the response encoding. The default ``'auto'``
-    probes the endpoint ONCE on the driver (cached per URL) and upgrades
-    to the cheapest wire the server speaks — ``ArrowStream`` (native Arrow
-    IPC, zero-copy into pyarrow) over ``Parquet`` (columnar; ~10× less
-    decode CPU than JSON at scale) over the universal ``JSONEachRow``
-    fallback — so a user on defaults gets the bulk-pull wire against a
-    capable server and still works against one that only speaks JSON.
-    Explicit values (``JSONEachRow`` / ``Parquet`` / ``Arrow`` /
-    ``ArrowStream``) skip the probe and force that encoding.
-
-    Range semantics match Spark's JDBC partitioner: by default
-    ``lower``/``upper`` only size the interior strides — the first slice is
-    lower-unbounded and the last upper-unbounded, so rows outside
-    ``[lower, upper)`` (snowflake-style ids past 2**31, negative keys) are
-    still read, never silently dropped. ``strict_bounds=True`` opts into
-    compiling both edges as hard filters — what CDC batch closing needs,
-    where the half-open range IS the batch membership contract.
-    """
-    if wire_format.lower() == "auto":
-        wire_format = negotiate_wire_format(
-            url, timeout=min(timeout, 30.0), user=user, password=password
-        )
-    if partition_column is None:
-        ranges = [(None, None)]
-    else:
-        if lower >= upper:
-            raise ValueError(f"lower ({lower}) must be < upper ({upper})")
-        span = upper - lower
-        step = max(1, -(-span // num_partitions))  # ceil: exactly n slices
-        bounds = list(range(lower, upper, step))
-        # fold any remainder slice into the last range
-        ranges = [
-            (b, upper if i == len(bounds) - 1 else b + step)
-            for i, b in enumerate(bounds)
-        ]
-        if not strict_bounds:
-            ranges[0] = (None, ranges[0][1])
-            ranges[-1] = (ranges[-1][0], None)
-    spec = spark.createDataFrame(
-        [(i, lo, hi) for i, (lo, hi) in enumerate(ranges)],
-        "part int, lo long, hi long",
-    ).repartition(len(ranges), "part")
-
-    col_list = columns or [f.name for f in schema.fields]
-    auth = _auth_headers(user, password)
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            for row in b.itertuples(index=False):
-                lo = None if pd.isna(row.lo) else int(row.lo)
-                hi = None if pd.isna(row.hi) else int(row.hi)
-                sql = build_select(
-                    table,
-                    columns=col_list,
-                    predicate=predicate,
-                    partition_column=partition_column,
-                    lower=lo,
-                    upper=hi,
-                    fmt=wire_format,
-                )
-                req_url = (
-                    _json_read_url(url)
-                    if wire_format.lower() == "jsoneachrow"
-                    else url
-                )
-                raw = _post(
-                    req_url, sql.encode(), timeout, auth, retries=retries
-                )
-                if not raw.strip():
-                    yield _empty_pdf(schema)
-                    continue
-                wf = wire_format.lower()
-                if wf == "parquet":
-                    import pyarrow.parquet as pq
-
-                    pdf = pq.read_table(io.BytesIO(raw)).to_pandas()
-                    yield _coerce(pdf, schema)
-                    continue
-                if wf in ("arrow", "arrowstream"):
-                    import pyarrow as pa
-
-                    rd = pa.BufferReader(raw)
-                    tbl = (
-                        pa.ipc.open_stream(rd)
-                        if wf == "arrowstream"
-                        else pa.ipc.open_file(rd)
-                    ).read_all()
-                    yield _coerce(tbl.to_pandas(), schema)
-                    continue
-                # convert_dates=False: pandas would otherwise auto-parse
-                # date-NAMED columns (ts, *_at, ...) into datetimes, mangling
-                # string timestamp columns before the schema coercion.
-                # dtype=False: pandas would otherwise coerce numeric-LOOKING
-                # strings to float64 — a quoted Decimal128 loses ~20 digits
-                # before _coerce ever sees it; the schema-driven coercion
-                # owns ALL typing.
-                pdf = pd.read_json(
-                    io.BytesIO(raw), lines=True, convert_dates=False,
-                    dtype=False,
-                )
-                yield _coerce(pdf, schema)
-
-    return spec.mapInPandas(fetch, schema)
-
-
-def write_table_http(
-    df: DataFrame,
-    url: str,
-    table: str,
-    timeout: float = 300.0,
-    user: str | None = None,
-    password: str | None = None,
-    rows_per_request: int = 100_000,
-    wire_format: str = "JSONEachRow",
-    compress: bool = False,
-    expect_insert_dedup: bool = False,
-) -> int:
-    """Sink: ``INSERT INTO … FORMAT <wire_format>`` POSTs issued
-    executor-side, flushed every ``rows_per_request`` rows so request
-    bodies stay bounded regardless of partition size. Returns the number
-    of rows written (the count action is what drives execution).
-
-    ``wire_format='Parquet'`` sends binary parquet bodies (ClickHouse
-    ingests ``INSERT … FORMAT Parquet`` natively) — the bulk-load path:
-    columnar encode beats row-wise JSON text by roughly an order of
-    magnitude of CPU, and preserves Decimal/DateTime64 exactly.
-    ``compress=True`` gzips each request body with ``Content-Encoding:
-    gzip`` (the server inflates it) — worth it for JSON text uploads over
-    a real network; parquet bodies are already compact.
-
-    ``expect_insert_dedup=True`` opts into accepting a ``written_rows=0``
-    acknowledgment for a non-empty INSERT body — legitimate ONLY on
-    Replicated tables with insert deduplication, where a replayed block is
-    acked with 0 (the flag's 0-acks are still warned about in the executor
-    log). The STRICT default treats 0-ack as a failed write: an endpoint
-    that silently drops the entire batch and acks 0 is exactly the
-    total-loss case the write witness exists to catch."""
-    cols = df.columns
-    auth = _auth_headers(user, password)
-    count_schema = T.StructType([T.StructField("rows", T.LongType())])
-    parquet = wire_format.lower() == "parquet"
-
-    def send(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        total = 0
-        buf: list[pd.DataFrame] = []
-        buffered = 0
-
-        def flush() -> None:
-            nonlocal buf, buffered
-            if not buffered:
-                return
-            if parquet:
-                import pyarrow as pa
-                import pyarrow.parquet as pq
-
-                out = io.BytesIO()
-                pq.write_table(
-                    pa.Table.from_pandas(
-                        pd.concat(buf)[cols], preserve_index=False
-                    ),
-                    out,
-                )
-                body = (
-                    f"INSERT INTO {table} FORMAT Parquet\n".encode()
-                    + out.getvalue()
-                )
-            else:
-                body = (
-                    f"INSERT INTO {table} FORMAT JSONEachRow\n"
-                    + "\n".join(
-                        c[cols].to_json(orient="records", lines=True)
-                        for c in buf
-                    )
-                ).encode()
-            sink: dict = {}
-            if compress:
-                import gzip
-
-                _post(
-                    url,
-                    gzip.compress(body),
-                    timeout,
-                    {**auth, "Content-Encoding": "gzip"},
-                    summary_sink=sink,
-                )
-            else:
-                _post(url, body, timeout, auth, summary_sink=sink)
-            # wire-level write witness: when the server acknowledges the
-            # INSERT with X-ClickHouse-Summary, its written_rows must not be
-            # LESS than the body's row count — a truncating endpoint fails
-            # the task LOUDLY instead of silently under-writing (the C10
-            # fail-fast contract extended to the wire). Not exact equality:
-            # real servers legitimately report MORE (materialized views
-            # attached to the target count their own writes into
-            # written_rows). A 0-ack is ambiguous — either a Replicated
-            # insert-dedup REPLAY (successful, server-side duplicate
-            # suppression) or a total-loss endpoint that dropped the whole
-            # batch; only the caller knows which is plausible for the
-            # target table, so 0-acks raise unless expect_insert_dedup
-            # opted in (and even then each one is warned to the executor
-            # log — a stream of them against a non-Replicated table is the
-            # loss case).
-            wr = (sink.get("summary") or {}).get("written_rows")
-            iwr = None if wr is None else int(wr)
-            if iwr is not None and iwr < buffered:
-                if iwr == 0 and expect_insert_dedup:
-                    import logging
-
-                    logging.getLogger("spark_migrator.http").warning(
-                        "INSERT into %s acked written_rows=0 for a %d-row "
-                        "body — treated as a Replicated insert-dedup replay "
-                        "(expect_insert_dedup=True); if %s is not a "
-                        "Replicated table with deduplication, this write "
-                        "was LOST",
-                        table,
-                        buffered,
-                        table,
-                    )
-                else:
-                    raise OSError(
-                        f"server acknowledged {wr} written rows for a "
-                        f"{buffered}-row INSERT body — write witness "
-                        "under-write (X-ClickHouse-Summary)"
-                        + (
-                            ""
-                            if iwr
-                            else "; pass expect_insert_dedup=True only if "
-                            "this target is a Replicated table where a "
-                            "0-ack means a deduplicated replay"
-                        )
-                    )
-            buf, buffered = [], 0
-
-        for b in batches:
-            for start in range(0, len(b), rows_per_request):
-                chunk = b.iloc[start : start + rows_per_request]
-                buf.append(chunk)
-                buffered += len(chunk)
-                total += len(chunk)
-                if buffered >= rows_per_request:
-                    flush()
-        flush()
-        yield pd.DataFrame({"rows": [total]})
-
-    written = df.mapInPandas(send, count_schema).agg(F.sum("rows")).collect()[0][0]
-    return int(written or 0)
-
-
 def command_http(
     url: str,
     sql: str,
@@ -620,6 +328,26 @@ def query_scalar_http(
         return None
     first = data[0]
     return next(iter(first.values())) if isinstance(first, dict) else first[0]
+
+
+def _max_cursor(
+    url: str,
+    table: str,
+    cursor_col: str,
+    timeout: float,
+    user: str | None = None,
+    password: str | None = None,
+) -> Any:
+    """The CDC watermark probe: ``max(cursor)`` as one scalar request —
+    shared by ``incremental_sync`` and the stream reader's
+    ``latestOffset``."""
+    return query_scalar_http(
+        url,
+        f"SELECT max({cursor_col}) AS hi FROM {table}",
+        timeout=timeout,
+        user=user,
+        password=password,
+    )
 
 
 def incremental_sync(
@@ -682,13 +410,7 @@ def incremental_sync(
     if intent is not None and (watermark is None or int(intent) > int(watermark)):
         hi = int(intent)  # crash replay: re-land the batch already promised
     else:
-        probed = query_scalar_http(
-            url,
-            f"SELECT max({cursor_col}) AS hi FROM {table}",
-            timeout=timeout,
-            user=user,
-            password=password,
-        )
+        probed = _max_cursor(url, table, cursor_col, timeout, user, password)
         if probed is None or (
             watermark is not None and int(probed) <= int(watermark)
         ):
@@ -696,21 +418,28 @@ def incremental_sync(
         hi = int(probed)
         _persist({"cursor": watermark, "intent_hi": hi, "table": table})
 
+    from .clickhouse_ds import ClickHouseHTTPDataSource
+
     lo = int(watermark) + 1 if watermark is not None else None
-    batch_df = read_table_http(
-        spark,
-        url,
-        table,
-        schema,
-        partition_column=cursor_col,
-        lower=lo if lo is not None else 0,
-        upper=hi + 1,  # half-open: bounds the batch AT the promised watermark
-        num_partitions=num_partitions,
-        timeout=timeout,
-        user=user,
-        password=password,
-        strict_bounds=lo is not None,  # batch edges are membership, not hints
-        predicate=None if lo is not None else f"{cursor_col} <= {hi}",
+    options = {
+        "url": url,
+        "table": table,
+        "partition_column": cursor_col,
+        "lower": lo if lo is not None else 0,
+        "upper": hi + 1,  # half-open: bounds the batch AT the promised watermark
+        "num_partitions": num_partitions,
+        "timeout": timeout,
+        "strict_bounds": lo is not None,  # batch edges are membership, not hints
+        "predicate": None if lo is not None else f"{cursor_col} <= {hi}",
+        "user": user,
+        "password": password,
+    }
+    spark.dataSource.register(ClickHouseHTTPDataSource)
+    batch_df = (
+        spark.read.format("clickhouse_http")
+        .schema(schema)
+        .options(**{k: v for k, v in options.items() if v is not None})
+        .load()
     )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (

@@ -27,6 +27,10 @@ def main() -> int:
     from clickhousemigrators3_spark.session import get_spark
 
     reg = load_all()
+    names = [n for n in sorted(reg) if not only or n in only]
+    if not names:
+        print("no queries matched", file=sys.stderr)
+        return 1
     spark = get_spark(
         app_name="sweep_cold",
         extra_conf={
@@ -38,9 +42,7 @@ def main() -> int:
         load_table(spark, sf_dir, t)
 
     rows: list[tuple[float, str, str]] = []
-    for name in sorted(reg):
-        if only and name not in only:
-            continue
+    for name in names:
         q = reg[name]
         spark.sparkContext.setJobDescription(f"sweep: {name}")
         t0 = time.perf_counter()

@@ -2701,7 +2701,7 @@ def test_insert_refusals(spark):
     assert split_ch_insert("SELECT 1") is None
     with pytest.raises(UnsupportedCHSQL) as exc:
         split_ch_insert("INSERT INTO t FORMAT JSONEachRow")
-    assert "write_table_http" in str(exc.value)
+    assert 'df.write.format("clickhouse_http")' in str(exc.value)
     with pytest.raises(UnsupportedCHSQL):
         split_ch_insert("INSERT INTO t")
 

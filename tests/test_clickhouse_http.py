@@ -1,8 +1,9 @@
-"""Round-trip tests for the ClickHouse HTTP-interface source/sink.
+"""Round-trip tests for the ClickHouse HTTP transport: the
+``clickhouse_http`` data source and the wire helpers it shares.
 
 A stdlib ``ThreadingHTTPServer`` stands in for ClickHouse: it accepts the
-documented HTTP protocol (POST body = SQL; ``SELECT … FORMAT JSONEachRow``
-responses; ``INSERT INTO … FORMAT JSONEachRow`` with inline JSON rows) and
+documented HTTP protocol (POST body = SQL; ``SELECT … FORMAT <fmt>``
+responses; ``INSERT INTO … FORMAT JSONEachRow|Parquet`` with inline data) and
 executes queries against an embedded DuckDB loaded with the sf0.001 parquet
 fixtures. That exercises the identical request/parse/partition code path a
 live server would see — rows genuinely move over HTTP, executor-side, in
@@ -20,13 +21,14 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from clickhousemigrators3_spark.sources.clickhouse_ds import (
+    ClickHouseHTTPDataSource,
+)
 from clickhousemigrators3_spark.sources.clickhouse_http import (
     build_select,
     command_http,
     http_url,
     query_scalar_http,
-    read_table_http,
-    write_table_http,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -72,6 +74,7 @@ class _StubClickHouse:
         self.fail_next = 0  # make the next N requests 503 (retry testing)
         self.last_written = 0  # rows of the last INSERT (summary header)
         self.lie_written_rows = False  # make the summary lie (witness test)
+        self.gzip_bodies = 0  # request bodies that arrived gzip-encoded
         self.formats: set[str] | None = None  # None = every FORMAT supported
         for t in ("nation", "customer", "orders"):
             self.con.execute(
@@ -101,6 +104,7 @@ class _StubClickHouse:
                     import gzip
 
                     body = gzip.decompress(body)
+                    stub.gzip_bodies += 1
                 if stub.fail_next > 0:
                     stub.fail_next -= 1
                     self.send_response(503)
@@ -252,6 +256,37 @@ def stub():
     s.close()
 
 
+def read_ch(spark, url, table, schema, **options):
+    """``spark.read.format("clickhouse_http")`` over one table."""
+    spark.dataSource.register(ClickHouseHTTPDataSource)
+    return (
+        spark.read.format("clickhouse_http")
+        .schema(schema)
+        .options(url=url, table=table, **options)
+        .load()
+    )
+
+
+def write_ch(df, url, table, mode="append", **options):
+    """``df.write.format("clickhouse_http")`` into one table."""
+    df.sparkSession.dataSource.register(ClickHouseHTTPDataSource)
+    (
+        df.write.format("clickhouse_http")
+        .options(url=url, table=table, **options)
+        .mode(mode)
+        .save()
+    )
+
+
+def data_selects(stub, table):
+    """The data SELECTs the stub saw for ``table`` (wire probes excluded)."""
+    return [
+        s
+        for s in stub.received
+        if s.startswith("SELECT") and f"FROM {table}" in s
+    ]
+
+
 def test_build_select_golden():
     assert (
         build_select("default.orders")
@@ -277,16 +312,16 @@ def test_partitioned_read_round_trip(spark, duck, stub):
     hi = duck.execute(
         f"SELECT max(o_orderkey) + 1 FROM '{SF_DIR}/orders.parquet'"
     ).fetchone()[0]
-    df = read_table_http(
+    stub.received.clear()
+    df = read_ch(
         spark,
         stub.url,
         "orders",
-        spark.createDataFrame([], schema).schema,
+        schema,
         partition_column="o_orderkey",
         lower=0,
         upper=int(hi),
         num_partitions=8,
-        columns=["o_orderkey", "o_custkey", "o_totalprice"],
     )
     got = df.orderBy("o_orderkey").collect()
     want = duck.execute(
@@ -294,23 +329,23 @@ def test_partitioned_read_round_trip(spark, duck, stub):
         f"FROM '{SF_DIR}/orders.parquet' ORDER BY o_orderkey"
     ).fetchall()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    selects = [s for s in stub.received if "FROM orders" in s]
-    assert len(selects) >= 8  # one bounded request per partition
+    # one bounded request per partition (the orderBy's sampling job reads
+    # the source again)
+    assert len(data_selects(stub, "orders")) >= 8
 
 
 def test_predicate_is_pushed_to_server(spark, stub):
     stub.received.clear()
     schema = "o_orderkey long, o_totalprice double"
-    df = read_table_http(
+    df = read_ch(
         spark,
         stub.url,
         "orders",
-        spark.createDataFrame([], schema).schema,
+        schema,
         partition_column="o_orderkey",
         lower=0,
         upper=10000,
         num_partitions=4,
-        columns=["o_orderkey", "o_totalprice"],
         predicate="o_totalprice > 150000",
     )
     rows = df.collect()
@@ -332,15 +367,9 @@ def test_predicate_is_pushed_to_server(spark, stub):
 def test_unpartitioned_read_single_request(spark, stub):
     stub.received.clear()
     schema = "n_nationkey long, n_name string"
-    df = read_table_http(
-        spark,
-        stub.url,
-        "nation",
-        spark.createDataFrame([], schema).schema,
-        columns=["n_nationkey", "n_name"],
-    )
+    df = read_ch(spark, stub.url, "nation", schema)
     assert df.count() == 25
-    assert len([s for s in stub.received if "FROM nation" in s]) == 1
+    assert len(data_selects(stub, "nation")) == 1
 
 
 def test_write_then_scalar_validation(spark, stub):
@@ -349,8 +378,8 @@ def test_write_then_scalar_validation(spark, stub):
         [(i, float(i) * 1.5) for i in range(100)],
         "o_orderkey long, o_totalprice double",
     ).repartition(4)
-    written = write_table_http(src, stub.url, "sink")
-    assert written == 100
+    stub.received.clear()
+    write_ch(src, stub.url, "sink")
     assert query_scalar_http(stub.url, "SELECT count(*) FROM sink") == 100
     total = query_scalar_http(stub.url, "SELECT sum(o_totalprice) FROM sink")
     assert abs(float(total) - sum(i * 1.5 for i in range(100))) < 1e-6
@@ -365,9 +394,6 @@ def test_full_migration_over_http(spark, duck, stub, tmp_path):
     from clickhousemigrators3_spark.config import MigrationConfig
     from clickhousemigrators3_spark.operators.migrate import migrate_single_table
 
-    schema = spark.createDataFrame(
-        [], "o_orderkey long, o_custkey long, o_totalprice double"
-    ).schema
     hi = int(
         duck.execute(
             f"SELECT max(o_orderkey) + 1 FROM '{SF_DIR}/orders.parquet'"
@@ -375,16 +401,15 @@ def test_full_migration_over_http(spark, duck, stub, tmp_path):
     )
 
     def loader(s, table):
-        return read_table_http(
+        return read_ch(
             s,
             stub.url,
             table,
-            schema,
+            "o_orderkey long, o_custkey long, o_totalprice double",
             partition_column="o_orderkey",
             lower=0,
             upper=hi,
             num_partitions=4,
-            columns=["o_orderkey", "o_custkey", "o_totalprice"],
         )
 
     cfg = MigrationConfig(
@@ -422,32 +447,24 @@ def test_command_ddl_round_trip(stub):
 def test_http_error_surfaces_clearly(spark, stub):
     """A server-side error (HTTP 500) must fail the read loudly, not yield
     silent empty partitions — the migration gate depends on that."""
-    schema = "x long"
-    df = read_table_http(
-        spark,
-        stub.url,
-        "no_such_table",
-        spark.createDataFrame([], schema).schema,
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception) as ei:
+    df = read_ch(spark, stub.url, "no_such_table", "x long")
+    with pytest.raises(Exception) as ei:
         df.count()
     assert "500" in str(ei.value) or "HTTP" in str(ei.value)
 
 
 def test_http_empty_result_yields_empty_frame(spark, stub):
-    schema = "o_orderkey long, o_totalprice double"
-    df = read_table_http(
-        spark,
-        stub.url,
-        "orders",
-        spark.createDataFrame([], schema).schema,
-        columns=["o_orderkey", "o_totalprice"],
-        predicate="o_totalprice < 0",  # matches nothing
-    )
-    assert df.count() == 0
-    assert df.columns == ["o_orderkey", "o_totalprice"]
+    for fmt in ("ArrowStream", "Parquet", "JSONEachRow"):
+        df = read_ch(
+            spark,
+            stub.url,
+            "orders",
+            "o_orderkey long, o_totalprice double",
+            predicate="o_totalprice < 0",  # matches nothing
+            wire_format=fmt,
+        )
+        assert df.count() == 0, fmt
+        assert df.columns == ["o_orderkey", "o_totalprice"]
 
 
 def test_incremental_sync_cursor_and_replay(spark, stub, tmp_path):
@@ -580,106 +597,34 @@ def test_incremental_sync_crash_with_concurrent_inserts(spark, stub, tmp_path):
     assert final.select("id").distinct().count() == 90
 
 
-def test_datasource_arrow_path_matches_tuple_path(spark, duck, stub):
-    """The Arrow RecordBatch read path must produce exactly the rows the
-    tuple path does (same schema, same values) — it's a serialization
-    change, not a semantic one."""
-    from clickhousemigrators3_spark.sources.clickhouse_ds import (
-        ClickHouseHTTPDataSource,
-    )
-
-    spark.dataSource.register(ClickHouseHTTPDataSource)
-
-    def load(arrow: str):
-        return (
-            spark.read.format("clickhouse_http")
-            .schema("o_orderkey long, o_custkey long, o_totalprice double")
-            .option("url", stub.url)
-            .option("table", "orders")
-            .option("partition_column", "o_orderkey")
-            .option("lower", 0)
-            .option("upper", 100000)
-            .option("num_partitions", 4)
-            .option("arrow", arrow)
-            .load()
-            .orderBy("o_orderkey")
-            .collect()
+def test_datasource_read_matches_duckdb(spark, duck, stub):
+    """A partitioned read through the data source returns exactly the rows
+    DuckDB reads from the same parquet — same schema, same values."""
+    got = (
+        read_ch(
+            spark,
+            stub.url,
+            "orders",
+            "o_orderkey long, o_custkey long, o_totalprice double",
+            partition_column="o_orderkey",
+            lower=0,
+            upper=100000,
+            num_partitions=4,
         )
-
-    via_arrow, via_tuples = load("true"), load("false")
-    assert len(via_arrow) > 0
-    assert [tuple(r) for r in via_arrow] == [tuple(r) for r in via_tuples]
+        .orderBy("o_orderkey")
+        .collect()
+    )
     want = duck.execute(
         "SELECT o_orderkey, o_custkey, o_totalprice "
         f"FROM '{SF_DIR}/orders.parquet' ORDER BY o_orderkey"
     ).fetchall()
-    assert [tuple(r) for r in via_arrow] == [tuple(r) for r in want]
-
-
-def test_arrow_batch_decode_beats_tuple_decode(monkeypatch):
-    """Microbench of the two response decoders on one 100k-row JSONEachRow
-    payload: the vectorized Arrow path must be ≥5× the per-row tuple path
-    (pd.read_json C parse + one Arrow conversion vs 100k json.loads +
-    tuple builds). In-process and deterministic — no Spark, no HTTP."""
-    import time
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from clickhousemigrators3_spark.sources import clickhouse_ds as ds
-
-    n = 100_000
-    payload = "\n".join(
-        json.dumps({"id": i, "v": i * 0.5, "name": f"row-{i}"})
-        for i in range(n)
-    ).encode()
-    monkeypatch.setattr(ds, "_post", lambda *a, **k: payload)
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("v", DoubleType()),
-            StructField("name", StringType()),
-        ]
-    )
-
-    def time_of(fn, reps=3):
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    casts = ds._casts_for(schema)
-    names = [f.name for f in schema.fields]
-    t_tuple = time_of(
-        lambda: sum(1 for _ in ds._fetch_rows("u", "s", names, casts, {}, 1))
-    )
-    batches = []
-    t_arrow = time_of(
-        lambda: batches.__setitem__(
-            slice(None), list(ds._fetch_record_batches("u", "s", schema, {}, 1))
-        )
-    )
-    rows = sum(b.num_rows for b in batches)
-    assert rows == n
-    assert batches[0].schema.names == names
-    assert t_arrow * 5 <= t_tuple, (t_arrow, t_tuple)
+    assert len(got) > 0
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
 def test_parquet_wire_format_round_trip(spark, duck, stub):
-    """wire_format='Parquet' negotiates FORMAT Parquet on every partition's
-    SELECT and decodes columnar bytes — same rows as the JSON wire, through
-    both the raw transport and the data source."""
-    from clickhousemigrators3_spark.sources.clickhouse_ds import (
-        ClickHouseHTTPDataSource,
-    )
-
+    """wire_format='Parquet' asks for FORMAT Parquet on every partition's
+    SELECT and decodes columnar bytes — the same rows DuckDB reads."""
     want = [
         tuple(r)
         for r in duck.execute(
@@ -688,43 +633,17 @@ def test_parquet_wire_format_round_trip(spark, duck, stub):
         ).fetchall()
     ]
 
-    schema = spark.createDataFrame(
-        [], "o_orderkey long, o_custkey long, o_totalprice double"
-    ).schema
     stub.received.clear()
-    df = read_table_http(
+    ds = read_ch(
         spark,
         stub.url,
         "orders",
-        schema,
+        "o_orderkey long, o_custkey long, o_totalprice double",
         partition_column="o_orderkey",
         lower=0,
         upper=100000,
         num_partitions=4,
-        columns=["o_orderkey", "o_custkey", "o_totalprice"],
         wire_format="Parquet",
-    )
-    assert [tuple(r) for r in df.orderBy("o_orderkey").collect()] == want
-    selects = [
-        s
-        for s in stub.received
-        if s.startswith("SELECT") and "_wire_probe" not in s
-    ]
-    assert selects and all(s.endswith("FORMAT Parquet") for s in selects)
-
-    spark.dataSource.register(ClickHouseHTTPDataSource)
-    stub.received.clear()
-    ds = (
-        spark.read.format("clickhouse_http")
-        .schema("o_orderkey long, o_custkey long, o_totalprice double")
-        .option("url", stub.url)
-        .option("table", "orders")
-        .option("partition_column", "o_orderkey")
-        .option("lower", 0)
-        .option("upper", 100000)
-        .option("num_partitions", 4)
-        .option("wire_format", "Parquet")
-        .load()
     )
     assert [
         tuple(r) for r in ds.orderBy("o_orderkey").collect()
@@ -739,16 +658,13 @@ def test_parquet_wire_format_round_trip(spark, duck, stub):
 
 def test_parquet_wire_write_round_trip(spark, stub):
     """wire_format='Parquet' on the WRITE side: binary parquet INSERT
-    bodies per flush (the bulk-load path), same rows landed as JSON — via
-    both the raw sink and the data source writer."""
+    bodies per flush (the bulk-load path), one per input partition; an
+    overwrite truncates and lands the same rows again."""
     stub.execute("CREATE TABLE pq_sink (id BIGINT, v DOUBLE)")
     src = spark.range(100).selectExpr("id", "cast(id as double) * 0.5 as v")
 
     stub.received.clear()
-    written = write_table_http(
-        src.repartition(4), stub.url, "pq_sink", wire_format="Parquet"
-    )
-    assert written == 100
+    write_ch(src.repartition(4), stub.url, "pq_sink", wire_format="Parquet")
     assert query_scalar_http(stub.url, "SELECT count(*) FROM pq_sink") == 100
     total = query_scalar_http(stub.url, "SELECT sum(v) FROM pq_sink")
     assert abs(float(total) - sum(i * 0.5 for i in range(100))) < 1e-9
@@ -756,20 +672,87 @@ def test_parquet_wire_write_round_trip(spark, stub):
     assert len(inserts) == 4
     assert all("FORMAT Parquet" in s for s in inserts)
 
-    from clickhousemigrators3_spark.sources.clickhouse_ds import (
-        ClickHouseHTTPDataSource,
+    write_ch(src, stub.url, "pq_sink", mode="overwrite", wire_format="Parquet")
+    assert query_scalar_http(stub.url, "SELECT count(*) FROM pq_sink") == 100
+
+
+def test_write_renders_type_edges_exactly(spark, stub):
+    """A µs timestamp_ntz, a date, a 20-integer-digit decimal(38,2) and
+    NULLs must land exactly on both INSERT wires. JSONEachRow carries them
+    as the documented text renderings (never epoch numbers or floats);
+    Parquet carries them natively."""
+    from datetime import date, datetime
+    from decimal import Decimal
+
+    stub.execute(
+        "CREATE TABLE typed_sink (id BIGINT, ts TIMESTAMP, d DATE,"
+        " amt DECIMAL(38, 2))"
+    )
+    want = [
+        (
+            1,
+            datetime(2024, 3, 1, 10, 30, 0, 123456),
+            date(2024, 3, 1),
+            Decimal("12345678901234567890.12"),
+        ),
+        (2, None, None, None),
+    ]
+    src = spark.createDataFrame(
+        want, "id long, ts timestamp_ntz, d date, amt decimal(38,2)"
+    ).coalesce(1)
+    for fmt in ("JSONEachRow", "Parquet"):
+        stub.received.clear()
+        write_ch(src, stub.url, "typed_sink", mode="overwrite", wire_format=fmt)
+        got = stub.con.execute(
+            "SELECT id, ts, d, amt FROM typed_sink ORDER BY id"
+        ).fetchall()
+        assert got == want, (fmt, got)
+        if fmt == "JSONEachRow":
+            (body,) = [s for s in stub.received if s.startswith("INSERT")]
+            assert '"ts": "2024-03-01 10:30:00.123456"' in body
+            assert '"d": "2024-03-01"' in body
+            assert '"amt": "12345678901234567890.12"' in body
+
+
+def test_json_insert_rows_render_maps_and_zoned_timestamps():
+    """The JSONEachRow body renders a map column as a JSON object (Arrow
+    hands maps over as key/value pairs) and a zoned timestamp in the local
+    wall clock, as Spark's row conversion does. Spark-free: the record
+    batch is built directly."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    from pyspark.sql.types import (
+        LongType,
+        MapType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
     )
 
-    spark.dataSource.register(ClickHouseHTTPDataSource)
-    (
-        src.write.format("clickhouse_http")
-        .option("url", stub.url)
-        .option("table", "pq_sink")
-        .option("wire_format", "Parquet")
-        .mode("overwrite")
-        .save()
+    from clickhousemigrators3_spark.sources.clickhouse_ds import _json_each_row
+
+    ts = datetime(2024, 3, 1, 10, 30, 0, 123456, tzinfo=timezone.utc)
+    batch = pa.record_batch(
+        {
+            "m": pa.array(
+                [[("a", 1), ("b", 2)], None], pa.map_(pa.string(), pa.int64())
+            ),
+            "ts": pa.array([ts, None], pa.timestamp("us", tz="UTC")),
+        }
     )
-    assert query_scalar_http(stub.url, "SELECT count(*) FROM pq_sink") == 100
+    schema = StructType(
+        [
+            StructField("m", MapType(StringType(), LongType())),
+            StructField("ts", TimestampType()),
+        ]
+    )
+    local = str(ts.astimezone().replace(tzinfo=None))
+    assert _json_each_row([batch], schema).splitlines() == [
+        json.dumps({"m": {"a": 1, "b": 2}, "ts": local}),
+        json.dumps({"m": None, "ts": None}),
+    ]
 
 
 def test_type_edges_datetime64_decimal_nullable(spark, stub):
@@ -791,57 +774,44 @@ def test_type_edges_datetime64_decimal_nullable(spark, stub):
         "(1, TIMESTAMP '2024-03-01 10:30:00.123456', 123.45, NULL, 'x'), "
         "(2, TIMESTAMP '1999-12-31 23:59:59', -0.01, 7, NULL)"
     )
-    schema = spark.createDataFrame(
-        [], "id long, ts timestamp_ntz, amount decimal(12,2), n long, s string"
-    ).schema
+    schema = "id long, ts timestamp_ntz, amount decimal(12,2), n long, s string"
     want = [
         (1, datetime(2024, 3, 1, 10, 30, 0, 123456), Decimal("123.45"), None, "x"),
         (2, datetime(1999, 12, 31, 23, 59, 59), Decimal("-0.01"), 7, None),
     ]
+    # JSONEachRow: the pandas fallback kicks in where the native NDJSON
+    # reader can't ingest decimal/timestamp text
     for fmt in ("Parquet", "Arrow", "ArrowStream", "JSONEachRow"):
-        df = read_table_http(spark, stub.url, "edges", schema, wire_format=fmt)
+        df = read_ch(spark, stub.url, "edges", schema, wire_format=fmt)
         got = [tuple(r) for r in df.orderBy("id").collect()]
         assert got == want, (fmt, got)
-
-    # and through the data source's RecordBatch path (pandas fallback kicks
-    # in where the native NDJSON reader can't ingest decimal/timestamp)
-    from clickhousemigrators3_spark.sources.clickhouse_ds import (
-        ClickHouseHTTPDataSource,
-    )
-
-    spark.dataSource.register(ClickHouseHTTPDataSource)
-    ds = (
-        spark.read.format("clickhouse_http")
-        .schema("id long, ts timestamp_ntz, amount decimal(12,2), n long, s string")
-        .option("url", stub.url)
-        .option("table", "edges")
-        .load()
-    )
-    assert [tuple(r) for r in ds.orderBy("id").collect()] == want
 
 
 def test_transient_failures_retried_on_reads_not_writes(spark, stub):
     """Reads survive bounded transient 5xx (idempotent re-issue with
     backoff); writes never auto-retry — a re-POSTed INSERT could
     double-apply, so write idempotence stays the caller's contract."""
-    schema = spark.createDataFrame([], "n_nationkey long, n_name string").schema
-
-    stub.fail_next = 2  # two 503s, then healthy: within the default budget
-    df = read_table_http(
+    # the wire is pinned so that no format probe absorbs the injected 503s
+    df = read_ch(
         spark,
         stub.url,
         "nation",
-        schema,
-        columns=["n_nationkey", "n_name"],
+        "n_nationkey long, n_name string",
+        wire_format="ArrowStream",
     )
+    stub.fail_next = 2  # two 503s, then healthy: within the default budget
     assert df.count() == 25
     assert stub.fail_next == 0
 
-    stub.fail_next = 1  # a single failure must fail a write immediately
     src = spark.createDataFrame([(1, 1.0)], "o_orderkey long, o_totalprice double")
-    with pytest.raises(Exception):
-        write_table_http(src.coalesce(1), stub.url, "sink")
-    stub.fail_next = 0
+    before = query_scalar_http(stub.url, "SELECT count(*) FROM sink")
+    stub.fail_next = 1  # a single failure must fail a write immediately
+    try:
+        with pytest.raises(Exception, match="503"):
+            write_ch(src.coalesce(1), stub.url, "sink")
+    finally:
+        stub.fail_next = 0
+    assert query_scalar_http(stub.url, "SELECT count(*) FROM sink") == before
 
 
 def test_compressed_insert_bodies(spark, stub):
@@ -849,10 +819,9 @@ def test_compressed_insert_bodies(spark, stub):
     gzip, server-side inflate) — same rows land."""
     stub.execute("CREATE TABLE gz_sink (id BIGINT, v DOUBLE)")
     src = spark.range(60).selectExpr("id", "cast(id as double) as v")
-    written = write_table_http(
-        src.repartition(3), stub.url, "gz_sink", compress=True
-    )
-    assert written == 60
+    gz_before = stub.gzip_bodies
+    write_ch(src.repartition(3), stub.url, "gz_sink", compress=True)
+    assert stub.gzip_bodies - gz_before == 3  # one gzip body per partition
     assert query_scalar_http(stub.url, "SELECT count(*) FROM gz_sink") == 60
     assert query_scalar_http(
         stub.url, "SELECT count(DISTINCT id) FROM gz_sink"
@@ -881,13 +850,11 @@ def test_query_scalar_format_detection(stub):
 
 def test_auth_headers_travel_with_every_request(spark, stub):
     stub.auth_seen.clear()
-    schema = "n_nationkey long, n_name string"
-    df = read_table_http(
+    df = read_ch(
         spark,
         stub.url,
         "nation",
-        spark.createDataFrame([], schema).schema,
-        columns=["n_nationkey", "n_name"],
+        "n_nationkey long, n_name string",
         partition_column="n_nationkey",
         lower=0,
         upper=25,
@@ -917,16 +884,15 @@ def test_full_database_parallel_over_http(spark, duck, stub, tmp_path):
     part_col = {"nation": "n_nationkey", "orders": "o_orderkey"}
 
     def loader(s, table):
-        return read_table_http(
+        return read_ch(
             s,
             stub.url,
             table,
-            s.createDataFrame([], schemas[table]).schema,
+            schemas[table],
             partition_column=part_col[table],
             lower=0,
             upper=100000,
             num_partitions=4,
-            columns=[f.split(" ")[0] for f in schemas[table].split(", ")],
         )
 
     cfg = MigrationConfig(
@@ -967,17 +933,17 @@ def test_date_named_string_columns_survive(spark, stub):
             for i in range(1, 6)
         )
     )
-    schema = "id long, created_at string, ts string"
-    df = read_table_http(
-        spark,
-        stub.url,
-        "evlog",
-        spark.createDataFrame([], schema).schema,
-        columns=["id", "created_at", "ts"],
-    )
-    rows = {r.id: r for r in df.collect()}
-    assert rows[3].created_at == "2024-01-03"
-    assert rows[3].ts == "2024-01-03 10:00:00"
+    for fmt in ("JSONEachRow", "ArrowStream"):
+        df = read_ch(
+            spark,
+            stub.url,
+            "evlog",
+            "id long, created_at string, ts string",
+            wire_format=fmt,
+        )
+        rows = {r.id: r for r in df.collect()}
+        assert rows[3].created_at == "2024-01-03", fmt
+        assert rows[3].ts == "2024-01-03 10:00:00", fmt
 
 
 def test_write_chunks_by_rows_per_request(spark, stub):
@@ -986,12 +952,10 @@ def test_write_chunks_by_rows_per_request(spark, stub):
         [(i, float(i)) for i in range(100)],
         "o_orderkey long, o_totalprice double",
     ).coalesce(1)
-    written = write_table_http(
-        src, stub.url, "sink", rows_per_request=30
-    )
-    assert written == 100
+    write_ch(src, stub.url, "sink", rows_per_request=30)
     inserts = [s for s in stub.received if s.startswith("INSERT INTO sink")]
-    assert len(inserts) == 4  # 30+30+30+10 from the single partition
+    # exactly rows_per_request rows per body, the last one shorter
+    assert [len(s.splitlines()) - 1 for s in inserts] == [30, 30, 30, 10]
 
 
 def test_python_datasource_batch_pushdown(spark, duck, stub):
@@ -1204,7 +1168,8 @@ def test_pushdown_backslash_literal_round_trip(spark, stub):
 def test_python_datasource_degenerate_range(spark, stub):
     """lower == upper must not be a planner error: under the default JDBC
     parity the bounds never filter (full scan, one partition); under
-    strict_bounds the empty half-open interval yields an empty frame."""
+    strict_bounds the empty half-open interval yields an empty frame.
+    Counts below 1 are refused loudly."""
     from clickhousemigrators3_spark.sources.clickhouse_ds import (
         ClickHouseHTTPDataSource,
     )
@@ -1229,37 +1194,40 @@ def test_python_datasource_degenerate_range(spark, stub):
     assert degenerate().count() == total
     assert degenerate(strict_bounds="true").count() == 0
 
+    # slicing and chunking counts below 1 are refused on the driver, naming
+    # the option: 0 would divide by zero, -1 would make one slice per key
+    # value, and 0 rows per request would flush after every row
+    for bad in (0, -1):
+        with pytest.raises(Exception, match="ValueError.*num_partitions"):
+            degenerate(upper=100, num_partitions=bad).count()
+    stub.received.clear()
+    src = spark.createDataFrame([(1, 1.0)], "o_orderkey long, o_totalprice double")
+    with pytest.raises(Exception, match="ValueError.*rows_per_request"):
+        write_ch(src, stub.url, "sink", rows_per_request=0)
+    assert not [s for s in stub.received if s.startswith("INSERT")]
+
 
 def test_rows_outside_range_are_not_dropped(spark, stub):
     """JDBC-partitioner parity: lower/upper size the strides, they never
     decide membership — ids past 2**31 (snowflake-style) and negative ids
-    must arrive through the default read path of BOTH the raw transport and
-    the data source; strict_bounds opts back into hard edges."""
-    from clickhousemigrators3_spark.sources.clickhouse_ds import (
-        ClickHouseHTTPDataSource,
-    )
-
+    must arrive through the default read path; strict_bounds opts back
+    into hard edges."""
     stub.execute("CREATE TABLE bigid (id BIGINT, v DOUBLE)")
     ids = [-7, 1, 2, 3, (1 << 31) + 5, (1 << 33)]
     stub.execute(
         "INSERT INTO bigid FORMAT JSONEachRow\n"
         + "\n".join(json.dumps({"id": i, "v": float(i)}) for i in ids)
     )
-    schema = spark.createDataFrame([], "id long, v double").schema
+    schema = "id long, v double"
 
-    # raw transport, defaults (lower=0, upper=2**31): all rows survive
-    df = read_table_http(
-        spark,
-        stub.url,
-        "bigid",
-        schema,
-        partition_column="id",
-        num_partitions=4,
+    # defaults (lower=0, upper=2**31): all rows survive
+    df = read_ch(
+        spark, stub.url, "bigid", schema, partition_column="id", num_partitions=4
     )
     assert sorted(r.id for r in df.collect()) == sorted(ids)
 
     # strict bounds: exactly the half-open range, for CDC batch closing
-    df_strict = read_table_http(
+    df_strict = read_ch(
         spark,
         stub.url,
         "bigid",
@@ -1271,19 +1239,6 @@ def test_rows_outside_range_are_not_dropped(spark, stub):
         strict_bounds=True,
     )
     assert sorted(r.id for r in df_strict.collect()) == [1, 2, 3]
-
-    # data source, defaults: all rows survive too
-    spark.dataSource.register(ClickHouseHTTPDataSource)
-    ds = (
-        spark.read.format("clickhouse_http")
-        .schema("id long, v double")
-        .option("url", stub.url)
-        .option("table", "bigid")
-        .option("partition_column", "id")
-        .option("num_partitions", 3)
-        .load()
-    )
-    assert sorted(r.id for r in ds.collect()) == sorted(ids)
 
 
 def test_wire_format_negotiation_ladder(stub):
@@ -1316,49 +1271,29 @@ def test_wire_format_negotiation_ladder(stub):
 
 
 def test_default_read_negotiates_columnar_wire(spark, stub):
-    """A user on DEFAULTS gets the columnar wire against a capable server
-    (verdict r5 #4): read_table_http and the Data Source both resolve
-    wire_format='auto' to ArrowStream here, and still work (JSONEachRow)
-    against a server that refuses every columnar FORMAT."""
+    """A user on DEFAULTS gets the columnar wire against a capable server:
+    the data source resolves wire_format='auto' to ArrowStream here, and
+    still works (JSONEachRow) against a server that refuses every columnar
+    FORMAT."""
     from clickhousemigrators3_spark.sources import clickhouse_http as ch
-    from clickhousemigrators3_spark.sources.clickhouse_ds import (
-        ClickHouseHTTPDataSource,
-    )
 
-    schema = spark.createDataFrame([], "n_nationkey long, n_name string").schema
+    schema = "n_nationkey long, n_name string"
     try:
         ch._WIRE_CACHE.clear()
         stub.received.clear()
-        df = read_table_http(
-            spark, stub.url, "nation", schema, columns=["n_nationkey", "n_name"]
-        )
-        assert df.count() == 25
-        reads = [s for s in stub.received if "FROM nation" in s]
+        assert read_ch(spark, stub.url, "nation", schema).count() == 25
+        reads = data_selects(stub, "nation")
         assert reads and all(s.endswith("FORMAT ArrowStream") for s in reads)
 
-        # Data Source on defaults: same negotiated wire
-        spark.dataSource.register(ClickHouseHTTPDataSource)
-        stub.received.clear()
-        ds = (
-            spark.read.format("clickhouse_http")
-            .schema("n_nationkey long, n_name string")
-            .option("url", stub.url)
-            .option("table", "nation")
-            .load()
-        )
-        assert ds.count() == 25
-        reads = [s for s in stub.received if "FROM nation" in s]
-        assert reads and all(s.endswith("FORMAT ArrowStream") for s in reads)
-
-        # columnar-refusing server: defaults fall back and still read
-        ch._WIRE_CACHE.clear()
+        # columnar-refusing server: defaults fall back and still read. The
+        # negotiation is cached per endpoint URL in every process that
+        # plans a read, so a fresh URL (an extra server setting) is what
+        # makes the planner probe again.
         stub.formats = {"JSONEachRow", "JSON", "TabSeparated"}
         stub.received.clear()
-        df = read_table_http(
-            spark, stub.url, "nation", schema, columns=["n_nationkey", "n_name"]
-        )
-        assert df.count() == 25
-        reads = [s for s in stub.received if "FROM nation" in s]
+        json_only = ch._with_params(stub.url, max_execution_time="60")
+        assert read_ch(spark, json_only, "nation", schema).count() == 25
+        reads = data_selects(stub, "nation")
         assert reads and all(s.endswith("FORMAT JSONEachRow") for s in reads)
     finally:
         stub.formats = None
@@ -1379,10 +1314,10 @@ def test_decimal128_survives_all_wires(spark, stub):
     stub.con.execute(
         f"INSERT INTO bigdec VALUES (1, {big}), (2, -0.0000000001)"
     )
-    schema = spark.createDataFrame([], "id long, v decimal(38,10)").schema
+    schema = "id long, v decimal(38,10)"
     want = [(1, Decimal(big)), (2, Decimal("-0.0000000001"))]
     for fmt in ("JSONEachRow", "Parquet", "ArrowStream"):
-        df = read_table_http(spark, stub.url, "bigdec", schema, wire_format=fmt)
+        df = read_ch(spark, stub.url, "bigdec", schema, wire_format=fmt)
         got = [tuple(r) for r in df.orderBy("id").collect()]
         assert got == want, (fmt, got)
 
@@ -1418,27 +1353,31 @@ def test_write_witness_from_summary_headers(spark, stub):
     stub.execute("CREATE TABLE wsink (k BIGINT, v DOUBLE)")
     df = spark.range(7).select(
         F.col("id").alias("k"), (F.col("id") * 1.5).alias("v")
-    )
+    ).coalesce(1)
+
+    def landed():
+        return stub.con.execute("SELECT count(*) FROM wsink").fetchone()[0]
+
     # honest server: the witness passes silently
-    assert write_table_http(df, stub.url, "wsink") == 7
-    assert stub.con.execute("SELECT count(*) FROM wsink").fetchone()[0] == 7
+    write_ch(df, stub.url, "wsink")
+    assert landed() == 7
 
     try:
         stub.lie_written_rows = "under"
         with pytest.raises(Exception, match="write witness under-write"):
-            write_table_http(df, stub.url, "wsink")
+            write_ch(df, stub.url, "wsink")
         # MV over-report is a legitimate ack unconditionally
         stub.lie_written_rows = "over"
-        assert write_table_http(df, stub.url, "wsink") == 7
+        write_ch(df, stub.url, "wsink")
         # 0-ack: STRICT default treats it as a lost batch...
         stub.lie_written_rows = "zero"
         with pytest.raises(Exception, match="expect_insert_dedup"):
-            write_table_http(df, stub.url, "wsink")
+            write_ch(df, stub.url, "wsink")
         # ...and passes only when the caller declares the target Replicated
         # with insert dedup (where a replayed block is legitimately 0-acked)
-        assert write_table_http(
-            df, stub.url, "wsink", expect_insert_dedup=True
-        ) == 7
+        write_ch(df, stub.url, "wsink", expect_insert_dedup=True)
+        # the stub applies every body it acks, lying or not
+        assert landed() == 7 * 5
     finally:
         stub.lie_written_rows = False
 
@@ -1467,9 +1406,8 @@ def test_datetime64_9_truncates_on_wire_read(spark, stub):
         "INSERT INTO ns_t VALUES (1, '2024-03-01 10:30:00.123456789'), "
         "(2, '2024-03-01 10:30:00.999999999')"
     )
-    schema = spark.createDataFrame([], "id long, ts9 timestamp_ntz").schema
-    df = read_table_http(
-        spark, stub.url, "ns_t", schema, wire_format="JSONEachRow"
+    df = read_ch(
+        spark, stub.url, "ns_t", "id long, ts9 timestamp_ntz", wire_format="JSONEachRow"
     )
     got = [tuple(r) for r in df.orderBy("id").collect()]
     assert got == [

@@ -2522,3 +2522,50 @@ def test_bench_emits_compact_trailing_summary_line():
     )
     assert len(summary) < 400
     assert json.loads(summary)["load1_start"] == 0.56
+
+
+def test_grouping_sets_views_are_dataset_scoped(spark):
+    """The grouping-sets queries register their temp views under a
+    per-dataset name, so a concurrent drive against another sf_dir in the
+    same session cannot rebind the view under them."""
+    from clickhousemigrators3_spark.catalog import dataset_tag
+    from clickhousemigrators3_spark.operators.ch_aggregates import (
+        groupingsets_distinct_users,
+    )
+    from clickhousemigrators3_spark.operators.tpch_rest import (
+        groupingsets_order_revenue,
+    )
+
+    groupingsets_distinct_users(spark, SF_DIR)
+    groupingsets_order_revenue(spark, SF_DIR)
+    tag = dataset_tag(SF_DIR)
+    for view in ("gsd_events", "gs_orders"):
+        assert spark.catalog.tableExists(f"{view}_{tag}")
+        assert not spark.catalog.tableExists(view)
+
+
+def test_ccnet_cache_skips_stopped_sessions(spark):
+    """The ccnet cache slot is per session: a slot left by a stopped
+    session is dropped without unpersisting (that would raise), and the
+    live session's slot holds the dataset it just drove."""
+    from clickhousemigrators3_spark.catalog import dataset_tag
+    from clickhousemigrators3_spark.operators import traindata
+
+    class Stopped:
+        _sc = None
+
+    class Frame:
+        def unpersist(self):
+            raise AssertionError("unpersist on a stopped session's frame")
+
+    traindata._CCNET_CACHE[-1] = (Stopped(), "other", (Frame(),))
+    try:
+        traindata.ccnet_bigram_perplexity(spark, SF_DIR)
+        assert -1 not in traindata._CCNET_CACHE
+        sess, tag, _ = traindata._CCNET_CACHE[id(spark._jsparkSession)]
+        assert sess is spark and tag == dataset_tag(SF_DIR)
+    finally:
+        traindata._CCNET_CACHE.pop(-1, None)
+        slot = traindata._CCNET_CACHE.pop(id(spark._jsparkSession), None)
+        for f in slot[2] if slot else ():
+            f.unpersist()
