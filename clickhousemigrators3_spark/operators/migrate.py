@@ -215,11 +215,20 @@ def read_published(
     return spark.read.parquet(data_path)
 
 
-def discover_partition_values(df: DataFrame, keys: list[str]) -> list[tuple]:
-    """M4: ordered distinct partition tuples — the only data-derived values
-    the driver ever collects (bounded by #partitions, not #rows)."""
-    rows = df.select(*keys).distinct().orderBy(*keys).collect()
-    return [tuple(r[k] for k in keys) for r in rows]
+def discover_partition_values(
+    df: DataFrame, keys: list[str]
+) -> list[tuple[tuple, int]]:
+    """M4 + A1 in one source read: ordered ``(partition tuple, rows)`` pairs
+    — the only data-derived values the driver ever collects (bounded by
+    #partitions, not #rows). Their row sum is the table total the copy is
+    validated against."""
+    rows = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_rows"))
+        .orderBy(*keys)
+        .collect()
+    )
+    return [(tuple(r[k] for k in keys), r["_rows"]) for r in rows]
 
 
 def _copy_partitions(
@@ -373,8 +382,10 @@ def migrate_single_table(
                 src = src.withColumn(name, F.expr(expr))
             keys = [k for k in cfg.partition_keys if k in src.columns]
 
-            # 5. partition discovery (M4); empty → fast path (C7)
-            parts = discover_partition_values(src, keys) if keys else []
+            # 5. partition discovery (M4) with per-partition row counts;
+            # empty → fast path (C7)
+            discovered = discover_partition_values(src, keys) if keys else []
+            parts = [p for p, _ in discovered]
             part_strs = [ledger.serialize_partition(p) for p in parts]
             result["total_partitions"] = len(parts)
 
@@ -384,8 +395,8 @@ def migrate_single_table(
             todo_tuples = [p for p, s in zip(parts, part_strs) if s in todo]
             ledger.init_table(progress, DB, table)
 
-            # 9. total rows (A1)
-            total_rows = src.count()
+            # 9. total rows (A1): discovery's counts, read before the copy
+            total_rows = sum(n for _, n in discovered) if keys else src.count()
 
             # 10. copy (C1/S10); rows_witnessed = counts observed inside the
             # write jobs themselves (zero extra scan) — complete only when

@@ -14,6 +14,14 @@ Cross-engine determinism rules (every query follows these):
   (Spark ``conv(substr(md5(x),1,15),16,10)``, DuckDB
   ``('0x' || substr(md5(x),1,15))::BIGINT``) — see functions/hashing.py.
 * DuckDB ``sum(BIGINT)`` returns HUGEINT — oracles cast back to BIGINT.
+
+Eager-build contract: a query callable builds a lazy DataFrame, except where
+it must collect a small model to the driver first. ``ann_lsh_topk`` collects
+its NBITS hyperplane rows, and ``ann_ivf_kmeans_topk`` and
+``kmeans_centroids_flat`` collect their trained Lloyd centroids. Calling one
+of these runs Spark jobs, so plan-only consumers (``explain``, plan dumps)
+pay a real scan, and bad input (e.g. missing hyperplane rows) raises when
+the DataFrame is built, not when it executes.
 """
 
 from __future__ import annotations

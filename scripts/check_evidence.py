@@ -1,5 +1,6 @@
-"""Evidence-freshness gate: fail when the registry has more queries than the
-latest DRIVER_SIM evidence transcript covers.
+"""Evidence-freshness gate: fail when an evidence doc cites a file that does
+not exist, or when the registry has more queries than the latest DRIVER_SIM
+evidence transcript covers.
 
 Round-7 post-mortem: operators/mltrain.py landed in the end-of-round
 snapshot while docs/DRIVER_SIM_r7.txt still said "ALL PASS (294 queries)"
@@ -10,6 +11,12 @@ snapshot time (after regenerating evidence with
 
 Exit 0 when the newest transcript's final "ALL PASS (N queries)" count
 equals ``load_all()``'s registry size; exit 1 with both numbers otherwise.
+
+Citations: every file path cited in ``OPTIMIZATION_*.md``, ``VERDICT.md``
+and ``README.md`` must exist relative to the repo root, ``docs/`` or the
+package (module names may be cited bare, e.g. ``dedup.py``). A file that was
+cited but never committed stays citable as ``<path>`` followed by
+``(never committed)``.
 """
 
 import glob
@@ -66,13 +73,53 @@ def bench_load1(bench: dict, raw_text: str | None = None):
     return max(stamps) if stamps else None
 
 
+EVIDENCE_DOCS = ("OPTIMIZATION_*.md", "VERDICT.md", "README.md")
+_CITED = re.compile(
+    r"(?<![\w/.\-])((?:[\w.\-]+/)*[A-Za-z0-9][\w.\-]*"
+    r"\.(?:py|md|json|jsonl|txt|toml|sh|csv|parquet))\b"
+    r"(`?\s*\(never committed\))?"
+)
+PACKAGE = "clickhousemigrators3_spark"
+
+
+def dangling_citations(root: str) -> list[tuple[str, str]]:
+    """(doc, path) for each cited path that resolves to no file."""
+    modules = {
+        os.path.basename(p)
+        for p in glob.glob(os.path.join(root, PACKAGE, "**", "*.py"), recursive=True)
+    }
+    out = []
+    for doc in sorted(
+        d for pattern in EVIDENCE_DOCS for d in glob.glob(os.path.join(root, pattern))
+    ):
+        with open(doc, encoding="utf-8") as f:
+            text = f.read()
+        for m in _CITED.finditer(text):
+            path = m.group(1)
+            if m.group(2) or path in modules or any(
+                os.path.exists(os.path.join(root, base, path))
+                for base in ("", "docs", PACKAGE)
+            ):
+                continue
+            out.append((os.path.basename(doc), path))
+    return out
+
+
 def main() -> int:
     from clickhousemigrators3_spark.registry import load_all
 
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dangling = dangling_citations(root)
+    if dangling:
+        for doc, path in dangling:
+            print(f"DANGLING EVIDENCE: {doc} cites {path}, which does not "
+                  "exist — commit it, drop the citation or mark it "
+                  "'(never committed)'")
+        return 1
+    print("evidence citations resolve")
+
     registered = len(load_all())
-    docs = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs"
-    )
+    docs = os.path.join(root, "docs")
     transcripts = sorted(
         glob.glob(os.path.join(docs, "DRIVER_SIM_r*.txt")),
         key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
@@ -108,7 +155,6 @@ def main() -> int:
     # numbers may still be intentional (e.g. a mid-round sanity run).
     import json
 
-    root = os.path.dirname(docs)
     benches = sorted(
         glob.glob(os.path.join(root, "BENCH_r*.json")),
         key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),

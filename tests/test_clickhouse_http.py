@@ -424,10 +424,18 @@ def test_full_migration_over_http(spark, duck, stub, tmp_path):
         checksum=True,
         source_loader=loader,
     )
+    sent = len(stub.received)
     res = migrate_single_table(spark, cfg, "orders")
     assert res["status"] == "completed", res["error"]
     assert res["total_partitions"] == 4
     assert all(c["passed"] for c in res["check_results"])
+    # discovery (which also counts the rows), copy and validation each read
+    # the 4 slices once; wire-format probes are not data reads
+    data_selects = [
+        q for q in stub.received[sent:]
+        if q.lstrip().upper().startswith("SELECT") and "_wire_probe" not in q
+    ]
+    assert len(data_selects) == 3 * 4, data_selects
 
     out = spark.read.parquet(str(tmp_path / "dest" / "orders"))
     n, total = duck.execute(
@@ -867,6 +875,50 @@ def test_auth_headers_travel_with_every_request(spark, stub):
     for h in stub.auth_seen:
         assert h.get("x-clickhouse-user") == "etl_user"
         assert h.get("x-clickhouse-key") == "s3cret"
+
+
+def test_rows_arriving_after_discovery_fail_the_table_invariant(
+    spark, stub, tmp_path, monkeypatch
+):
+    """Discovery's per-partition counts are the source total the copy is
+    checked against. A row that lands after discovery is copied and
+    validated per partition, but the table invariant still compares with
+    the earlier read, so the migration fails and publishes nothing."""
+    from clickhousemigrators3_spark.config import MigrationConfig
+    from clickhousemigrators3_spark.operators import migrate
+
+    stub.execute(
+        "CREATE TABLE grow_orders AS "
+        f"SELECT o_orderkey, o_totalprice FROM '{SF_DIR}/orders.parquet'"
+    )
+    discover = migrate.discover_partition_values
+
+    def discover_then_insert(df, keys):
+        parts = discover(df, keys)
+        stub.execute("INSERT INTO grow_orders VALUES (4, 1.5)")
+        return parts
+
+    monkeypatch.setattr(migrate, "discover_partition_values", discover_then_insert)
+    cfg = MigrationConfig(
+        dest_dir=str(tmp_path / "dest"),
+        table="grow_orders",
+        partition_keys=["bucket"],
+        derived_partitions={"bucket": "pmod(o_orderkey, 4)"},
+        insert_interval=0,
+        lock_dir=str(tmp_path / "locks"),
+        progress_path=str(tmp_path / "progress.json"),
+        report_dir=str(tmp_path / "reports"),
+        source_loader=lambda s, table: read_ch(
+            s, stub.url, table, "o_orderkey long, o_totalprice double",
+            partition_column="o_orderkey", lower=0, upper=1500, num_partitions=4,
+        ),
+    )
+    res = migrate.migrate_single_table(spark, cfg, "grow_orders")
+    assert res["status"] == "failed"
+    assert "table invariant failed" in res["error"], res["error"]
+    assert all(c["passed"] for c in res["check_results"])
+    assert not (tmp_path / "dest" / "grow_orders").exists()
+    assert migrate.resolve_manifest(cfg.dest_dir, "grow_orders") is None
 
 
 def test_full_database_parallel_over_http(spark, duck, stub, tmp_path):

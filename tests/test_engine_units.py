@@ -2569,3 +2569,156 @@ def test_ccnet_cache_skips_stopped_sessions(spark):
         slot = traindata._CCNET_CACHE.pop(id(spark._jsparkSession), None)
         for f in slot[2] if slot else ():
             f.unpersist()
+
+
+def test_python_tasks_run_without_spark_archives(spark):
+    """Python tasks start from ``worker_daemon``: no ``sys.path`` entry and
+    no ``zipimporter`` under ``realpath($SPARK_HOME)``, so the per-task
+    ``importlib.invalidate_caches()`` rescans no Spark archive."""
+    import json
+    import os
+
+    from clickhousemigrators3_spark.session import WORKER_DAEMON
+
+    assert spark.sparkContext.getConf().get("spark.python.daemon.module") == WORKER_DAEMON
+
+    def report(batches):
+        import os
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        zips = [
+            k
+            for k, v in sys.path_importer_cache.items()
+            if isinstance(v, zipimport.zipimporter)
+        ]
+        yield pd.DataFrame(
+            {"s": [json.dumps([os.environ["SPARK_HOME"], sys.path, zips])]}
+        )
+
+    home, path, zips = json.loads(
+        spark.range(4).repartition(2).mapInPandas(report, "s string").first().s
+    )
+    under = os.path.join(os.path.realpath(home), "")
+    assert [p for p in path if os.path.realpath(p).startswith(under)] == []
+    assert [k for k in zips if os.path.realpath(k).startswith(under)] == []
+
+
+def _fake_spark_layout(tmp_path, installed_version="4.1.2", py4j=True):
+    """A ``$SPARK_HOME`` with pyspark.zip and a core jar, a site dir holding
+    pyspark ``installed_version`` (``None``: no pyspark) and py4j, and a
+    user zip outside the home. Returns (home, path)."""
+    import zipfile
+
+    home = tmp_path / "spark-home"
+    (home / "python" / "lib").mkdir(parents=True)
+    (home / "jars").mkdir()
+    with zipfile.ZipFile(home / "python" / "lib" / "pyspark.zip", "w") as z:
+        z.writestr("pyspark/__init__.py", "")
+        z.writestr("pyspark/version.py", "__version__: str = '4.1.2'\n")
+    with zipfile.ZipFile(home / "jars" / "spark-core.jar", "w") as z:
+        z.writestr("org/apache/spark/SparkContext.class", b"")
+    site = tmp_path / "site"
+    site.mkdir()
+    if installed_version:
+        (site / "pyspark").mkdir()
+        (site / "pyspark" / "__init__.py").write_text("")
+        (site / "pyspark" / "version.py").write_text(
+            f"__version__: str = '{installed_version}'\n"
+        )
+    if py4j:
+        (site / "py4j").mkdir()
+        (site / "py4j" / "__init__.py").write_text("")
+    user_zip = tmp_path / "user.zip"
+    with zipfile.ZipFile(user_zip, "w") as z:
+        z.writestr("mylib.py", "")
+    # Spark's launcher names the home through a symlink (/opt/spark ->
+    # /opt/spark-<version>) for the zips but by its real path for the jar
+    link = tmp_path / "spark"
+    link.symlink_to(home)
+    path = [
+        str(tmp_path),
+        str(link / "python" / "lib" / "pyspark.zip"),
+        str(user_zip),
+        str(home / "jars" / "spark-core.jar"),
+        str(site),
+    ]
+    return str(link), path
+
+
+def test_worker_daemon_drops_only_spark_home_archives(tmp_path):
+    from clickhousemigrators3_spark.worker_daemon import kept_path
+
+    home, path = _fake_spark_layout(tmp_path)
+    assert kept_path(path, home) == [path[0], path[2], path[4]]
+    assert kept_path(path, None) == path
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [
+        {"installed_version": "4.0.0"},
+        {"installed_version": None},
+        {"py4j": False},
+    ],
+    ids=["version_mismatch", "no_installed_pyspark", "no_installed_py4j"],
+)
+def test_worker_daemon_keeps_path_it_cannot_replace(tmp_path, layout):
+    from clickhousemigrators3_spark.worker_daemon import kept_path
+
+    home, path = _fake_spark_layout(tmp_path, **layout)
+    assert kept_path(path, home) == path
+
+
+def test_worker_daemon_only_when_workers_can_import_it(tmp_path, monkeypatch):
+    """``get_spark`` keeps ``pyspark.daemon`` unless the package resolves
+    from the driver's cwd, its PYTHONPATH or site-packages."""
+    import os
+    import site
+
+    import clickhousemigrators3_spark
+    from clickhousemigrators3_spark.session import worker_can_import_daemon
+
+    monkeypatch.setattr(site, "getsitepackages", lambda: [])
+    root = os.path.dirname(os.path.dirname(clickhousemigrators3_spark.__file__))
+    assert not worker_can_import_daemon(str(tmp_path), "")
+    assert worker_can_import_daemon(root, "")
+    assert worker_can_import_daemon(str(tmp_path), os.pathsep.join(["", root]))
+    # a same-named package without the daemon module is not enough
+    (tmp_path / "clickhousemigrators3_spark").mkdir()
+    (tmp_path / "clickhousemigrators3_spark" / "__init__.py").write_text("")
+    assert not worker_can_import_daemon(str(tmp_path), root)
+
+
+def test_check_evidence_flags_dangling_citations(tmp_path):
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "check_evidence",
+        os.path.join(os.path.dirname(__file__), "..", "scripts",
+                     "check_evidence.py"),
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    (tmp_path / "docs").mkdir()
+    (tmp_path / "docs" / "BENCH_r1.json").write_text("{}")
+    pkg = tmp_path / mod.PACKAGE / "operators"
+    pkg.mkdir(parents=True)
+    (pkg / "dedup.py").write_text("")
+    (tmp_path / "README.md").write_text(
+        "`docs/BENCH_r1.json`, `BENCH_r1.json`, `operators/dedup.py:266`, "
+        "`dedup.py`, `plans/r14/…_after.txt`, `/tmp/sweep.py`\n"
+    )
+    (tmp_path / "OPTIMIZATION_r1.md").write_text(
+        "`docs/GONE.txt` (never committed) and `docs/ALSO_GONE.md`\n"
+    )
+    (tmp_path / "VERDICT.md").write_text("see LEAKCHECK.json\n")
+    assert mod.dangling_citations(str(tmp_path)) == [
+        ("OPTIMIZATION_r1.md", "docs/ALSO_GONE.md"),
+        ("VERDICT.md", "LEAKCHECK.json"),
+    ]
