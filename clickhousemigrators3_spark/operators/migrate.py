@@ -33,16 +33,19 @@ Spark-native re-design (SURVEY §1.4, §7.4):
 from __future__ import annotations
 
 import os
+import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import resume as ledger
 from ..catalog import drop_path, rename_path, table_exists, table_path
 from ..config import MigrationConfig
 from ..lock import is_locked, table_lock
 from ..plans.partitions import partition_predicate
+from ..sources.clickhouse_ds import group_counts, relation_options
 from .validate import count_validation, validation_failures
 
 DB = "default"
@@ -215,13 +218,59 @@ def read_published(
     return spark.read.parquet(data_path)
 
 
+# a derived key the ClickHouse server computes as Spark does: ``week`` is
+# left out (its week start may differ), and so is every other expression
+_SERVER_DERIVED_KEY = re.compile(
+    r"CAST\(\s*date_trunc\(\s*'(year|quarter|month|day)'\s*,\s*(\w+)\s*\)\s*AS\s+DATE\s*\)",
+    re.IGNORECASE,
+)
+# key types whose JSON text decodes to the value Spark collects; TIMESTAMP is
+# left out (Spark truncates in the session time zone, the server in its own)
+_SERVER_KEY_TYPES = (T.IntegralType, T.StringType, T.DateType, T.TimestampNTZType)
+
+
+def _server_discovery(
+    loaded: DataFrame, keys: list[str], derived: dict[str, str]
+) -> tuple[dict, list[tuple[str, str, T.DataType]]] | None:
+    """``(reader options, [(key, server expression, Spark type)])`` when
+    ``loaded`` is a bare ``clickhouse_http`` relation and every key is one of
+    its columns or a whitelisted derived key; else None (Spark discovers)."""
+    options = relation_options(loaded)
+    if options is None:
+        return None
+    types = {f.name: f.dataType for f in loaded.schema.fields}
+    server_keys = []
+    for k in keys:
+        if k not in derived:
+            if not isinstance(types.get(k), _SERVER_KEY_TYPES):
+                return None
+            server_keys.append((k, k, types[k]))
+            continue
+        m = _SERVER_DERIVED_KEY.fullmatch(derived[k].strip())
+        if (
+            m is None
+            or k in types  # on the server the alias would shadow the column
+            or m[2] in derived
+            or not isinstance(types.get(m[2]), (T.DateType, T.TimestampNTZType))
+        ):
+            return None
+        expr = f"CAST(date_trunc('{m[1].lower()}', {m[2]}) AS DATE)"
+        server_keys.append((k, expr, T.DateType()))
+    return options, server_keys
+
+
 def discover_partition_values(
-    df: DataFrame, keys: list[str]
+    df: DataFrame,
+    keys: list[str],
+    server: tuple[dict, list[tuple[str, str, T.DataType]]] | None = None,
 ) -> list[tuple[tuple, int]]:
     """M4 + A1 in one source read: ordered ``(partition tuple, rows)`` pairs
     — the only data-derived values the driver ever collects (bounded by
     #partitions, not #rows). Their row sum is the table total the copy is
-    validated against."""
+    validated against. With ``server`` (from ``_server_discovery``) they
+    come from one GROUP BY on the ClickHouse server, not a Spark job."""
+    if server is not None:
+        return group_counts(*server)
     rows = (
         df.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("_rows"))
@@ -375,16 +424,23 @@ def migrate_single_table(
                 from ..catalog import load_table
 
                 src = load_table(spark, cfg.source_dir, table)
+            loaded = src
             # derived partition columns (SURVEY §7.4 composite-partition
             # parity): e.g. a month column computed from a timestamp —
             # materialized before discovery so partitionBy sees a real column
             for name, expr in cfg.derived_partitions.items():
                 src = src.withColumn(name, F.expr(expr))
             keys = [k for k in cfg.partition_keys if k in src.columns]
+            server = _server_discovery(loaded, keys, cfg.derived_partitions)
 
             # 5. partition discovery (M4) with per-partition row counts;
             # empty → fast path (C7)
-            discovered = discover_partition_values(src, keys) if keys else []
+            if not keys:
+                discovered = []
+            elif server is None:
+                discovered = discover_partition_values(src, keys)
+            else:
+                discovered = discover_partition_values(src, keys, server)
             parts = [p for p, _ in discovered]
             part_strs = [ledger.serialize_partition(p) for p in parts]
             result["total_partitions"] = len(parts)
@@ -396,7 +452,12 @@ def migrate_single_table(
             ledger.init_table(progress, DB, table)
 
             # 9. total rows (A1): discovery's counts, read before the copy
-            total_rows = sum(n for _, n in discovered) if keys else src.count()
+            if keys:
+                total_rows = sum(n for _, n in discovered)
+            elif server is not None:
+                total_rows = group_counts(*server)[0][1]  # SELECT count(*)
+            else:
+                total_rows = src.count()
 
             # 10. copy (C1/S10); rows_witnessed = counts observed inside the
             # write jobs themselves (zero extra scan) — complete only when

@@ -70,9 +70,6 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # --- python boundary: Arrow batches, never per-row pickling ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python data sources (sources/clickhouse_ds.py) compile Catalyst
-        # filters into server-side SQL — requires this opt-in
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # --- writes: partition overwrite must be surgical (idempotent replay) ---
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")

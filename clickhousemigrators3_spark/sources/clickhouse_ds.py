@@ -3,11 +3,15 @@ API): ``spark.read``, ``spark.readStream`` and ``df.write`` with
 ``format("clickhouse_http")``. This is the repository's one ClickHouse
 HTTP transport; ``clickhouse_http.py`` holds the wire helpers it uses.
 
-* **Catalyst-driven predicate pushdown** — ``pushFilters`` receives the
-  query's filters from the optimizer and compiles the supported ones
-  (=, <, <=, >, >=, IN, IS NOT NULL on top-level columns) into the WHERE
-  clause of the SQL shipped to the server, returning the rest for Spark to
-  evaluate.
+* **Server-side filtering by option, not by Catalyst** — the ``predicate``
+  option is the WHERE shipped with every request. Catalyst filters are not
+  pushed: PySpark caches one pushed reader per ``load()`` and a later scan
+  with no convertible filter reuses it, so a pushed filter would leak into
+  the next action on the same DataFrame. Spark evaluates them itself.
+* **Server-side partition counts** — ``group_counts`` answers a
+  migration's partition discovery (and a keyless table's row count) with
+  one GROUP BY over exactly the rows a read returns; ``relation_options``
+  tells the migration when a DataFrame is a bare relation it can use.
 * **Executor-side partitioned reads** — ``partitions()`` splits the
   numeric range into ``num_partitions`` half-open slices; each executor
   task POSTs its own bounded SELECT and yields Arrow record batches
@@ -45,7 +49,7 @@ from __future__ import annotations
 import json
 import logging
 from dataclasses import dataclass
-from typing import Any, Iterable, Iterator, Sequence
+from typing import Any, Iterator, Sequence
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -53,18 +57,12 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     DataSourceWriter,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    IsNotNull,
-    LessThan,
-    LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.types import MapType, StructType
+from pyspark.sql.types import DataType, LongType, MapType, StructField, StructType
+
+from ..worker_daemon import drop_spark_archives
 
 from .clickhouse_http import (
     _auth_headers,
@@ -72,6 +70,7 @@ from .clickhouse_http import (
     _json_read_url,
     _max_cursor,
     _post,
+    _with_params,
     build_select,
     negotiate_wire_format,
 )
@@ -83,49 +82,6 @@ _log = logging.getLogger("spark_migrator.http")
 class RangePartition(InputPartition):
     lo: int | None
     hi: int | None
-
-
-def _sql_literal(v: Any) -> str | None:
-    if isinstance(v, bool):
-        return "1" if v else "0"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    if isinstance(v, str):
-        # ClickHouse string literals are C-style: backslash is an escape
-        # character, so it must be doubled BEFORE quote-doubling — otherwise
-        # a value ending in '\' compiles to '…\'' where \' escapes the
-        # closing quote and the literal swallows the rest of the SQL
-        # (syntax error at best, clause injection from data-derived filter
-        # values at worst).
-        return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
-    return None  # dates/decimals/etc: leave to Spark
-
-
-def _compile_filter(f: Filter) -> str | None:
-    """One Catalyst filter → ClickHouse SQL, or None if unsupported."""
-    attr = getattr(f, "attribute", None)
-    if not attr or len(attr) != 1:
-        return None
-    col = attr[0]
-    if isinstance(f, IsNotNull):
-        return f"{col} IS NOT NULL"
-    if isinstance(f, In):
-        lits = [_sql_literal(v) for v in f.value]
-        if any(x is None for x in lits):
-            return None
-        return f"{col} IN ({', '.join(lits)})"
-    ops = {
-        EqualTo: "=",
-        GreaterThan: ">",
-        GreaterThanOrEqual: ">=",
-        LessThan: "<",
-        LessThanOrEqual: "<=",
-    }
-    for cls, op in ops.items():
-        if isinstance(f, cls):
-            lit = _sql_literal(f.value)
-            return None if lit is None else f"{col} {op} {lit}"
-    return None
 
 
 def _fetch_record_batches(
@@ -219,6 +175,27 @@ def _split_range(lower: int, upper: int, n: int) -> list[RangePartition]:
     return [RangePartition(b, min(b + step, upper)) for b in range(lower, upper, step)]
 
 
+def _read_slices(options: dict, n: int) -> list[RangePartition]:
+    """The slices a batch read of ``options`` splits into, ``n`` at most."""
+    if not options.get("partition_column"):
+        return [RangePartition(None, None)]
+    lower = int(options.get("lower", 0))
+    upper = int(options.get("upper", 1 << 31))
+    strict = _flag(options, "strict_bounds")
+    if lower >= upper:
+        # degenerate range: strict mode = the empty half-open interval;
+        # default (JDBC parity) = bounds never filter, so one full scan
+        return [RangePartition(lower, lower)] if strict else [RangePartition(None, None)]
+    parts = _split_range(lower, upper, n)
+    if not strict:
+        # JDBC-partitioner parity: lower/upper size the strides but the
+        # edge slices stay unbounded, so rows outside [lower, upper)
+        # are read, never silently dropped.
+        parts[0] = RangePartition(None, parts[0].hi)
+        parts[-1] = RangePartition(parts[-1].lo, None)
+    return parts
+
+
 def _resolve_wire(options: dict) -> str:
     """Resolve the ``wire_format`` option ON THE DRIVER (readers are built
     driver-side and pickled to executors, so the probe runs once and its
@@ -242,50 +219,16 @@ class _CHReader(DataSourceReader):
         self.options = dict(options)
         self.num_partitions = _count_option(self.options, "num_partitions", 8)
         self.options["wire_format"] = _resolve_wire(self.options)
-        self.pushed: list[str] = []
-
-    def pushFilters(self, filters: list[Filter]) -> Iterable[Filter]:
-        rest = []
-        for f in filters:
-            sql = _compile_filter(f)
-            if sql is None:
-                rest.append(f)
-            else:
-                self.pushed.append(sql)
-        return rest
 
     def partitions(self) -> Sequence[InputPartition]:
-        if not self.options.get("partition_column"):
-            return [RangePartition(None, None)]
-        lower = int(self.options.get("lower", 0))
-        upper = int(self.options.get("upper", 1 << 31))
-        strict = _flag(self.options, "strict_bounds")
-        if lower >= upper:
-            # degenerate range: strict mode = the empty half-open interval;
-            # default (JDBC parity) = bounds never filter, so one full scan
-            return (
-                [RangePartition(lower, lower)]
-                if strict
-                else [RangePartition(None, None)]
-            )
-        parts = _split_range(lower, upper, self.num_partitions)
-        if not strict:
-            # JDBC-partitioner parity: lower/upper size the strides but the
-            # edge slices stay unbounded, so rows outside [lower, upper)
-            # are read, never silently dropped.
-            parts[0] = RangePartition(None, parts[0].hi)
-            parts[-1] = RangePartition(parts[-1].lo, None)
-        return parts
+        return _read_slices(self.options, self.num_partitions)
 
     def read(self, partition: RangePartition) -> Iterator:
         o = self.options
-        clauses = list(self.pushed)
-        if o.get("predicate"):
-            clauses.append(f"({o['predicate']})")
         sql = build_select(
             o["table"],
             columns=[f.name for f in self.schema.fields],
-            predicate=" AND ".join(clauses) if clauses else None,
+            predicate=o.get("predicate"),
             partition_column=o.get("partition_column"),
             lower=partition.lo,
             upper=partition.hi,
@@ -525,7 +468,16 @@ class _CHWriter(DataSourceArrowWriter):
 
 class ClickHouseHTTPDataSource(DataSource):
     """``spark.dataSource.register(ClickHouseHTTPDataSource)`` then
-    ``spark.read.format("clickhouse_http")…``."""
+    ``spark.read.format("clickhouse_http")…``.
+
+    Every entry point first drops Spark's archives from the planner
+    worker's import path (``worker_daemon.drop_spark_archives``, once per
+    process): the read planner unpickles the instance without calling
+    ``__init__``, so ``__init__`` alone would miss it."""
+
+    def __init__(self, options: dict) -> None:
+        drop_spark_archives()
+        super().__init__(options)
 
     @classmethod
     def name(cls) -> str:
@@ -540,10 +492,84 @@ class ClickHouseHTTPDataSource(DataSource):
         return ddl
 
     def reader(self, schema: StructType) -> DataSourceReader:
+        drop_spark_archives()
         return _CHReader(schema, dict(self.options))
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
+        drop_spark_archives()
         return _CHStreamReader(schema, dict(self.options))
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
+        drop_spark_archives()
         return _CHWriter(schema, dict(self.options), overwrite)
+
+
+def relation_options(df) -> dict | None:
+    """The options of ``df`` when its analyzed plan is one bare
+    ``clickhouse_http`` relation, with nothing (filter, projection, …) on
+    top; else None. Keys are lower-cased, as the data source sees them."""
+    jdf = getattr(df, "_jdf", None)  # Spark Connect has no JVM plan
+    if jdf is None:
+        return None
+    plan = jdf.queryExecution().analyzed()
+    if plan.nodeName() != "DataSourceV2Relation":
+        return None
+    table = plan.table()
+    if (
+        table.getClass().getSimpleName() != "PythonTable"
+        or table.name() != ClickHouseHTTPDataSource.name()
+    ):
+        return None
+    return {k.lower(): v for k, v in plan.options().asCaseSensitiveMap().items()}
+
+
+def group_counts(
+    options: dict, keys: list[tuple[str, str, DataType]]
+) -> list[tuple[tuple, int]]:
+    """One driver-side ``SELECT <key exprs>, count(*) … GROUP BY …`` over
+    exactly the rows a batch read with ``options`` returns: the
+    ``predicate`` option and the union of the read's slices. ``keys`` are
+    ``(name, server expression, Spark type)``; no keys counts the rows.
+
+    Returns ``(key tuple, rows)`` pairs in Spark's ``orderBy`` order
+    (ascending, NULLs first) with values of each key's Spark type. The
+    answer travels as JSONEachRow, so dates arrive as text parsed by the
+    Spark schema (ClickHouse's Arrow and Parquet outputs carry ``Date`` as
+    ``UInt16`` days), with 64-bit integers unquoted."""
+    slices = _read_slices(options, _count_option(options, "num_partitions", 8))
+    column = options.get("partition_column")
+    predicate = options.get("predicate")
+    lower = upper = None
+    if column and RangePartition(None, None) not in slices:
+        lower, upper = slices[0].lo, slices[-1].hi
+        if lower is None and upper is None:
+            # the unbounded edge slices still compare the column, so the read
+            # never returns a row whose partition column is NULL
+            null_free = f"{column} IS NOT NULL"
+            predicate = f"({predicate}) AND {null_free}" if predicate else null_free
+    exprs = [e if e == n else f"{e} AS {n}" for n, e, _ in keys]
+    sql = build_select(
+        options["table"],
+        columns=[*exprs, "count(*) AS _rows"],
+        predicate=predicate,
+        partition_column=column,
+        lower=lower,
+        upper=upper,
+        group_by=[e for _, e, _ in keys],
+    )
+    schema = StructType(
+        [StructField(n, t) for n, _, t in keys] + [StructField("_rows", LongType())]
+    )
+    batches = _fetch_record_batches(
+        _with_params(options["url"], output_format_json_quote_64bit_integers="0"),
+        sql,
+        schema,
+        _auth_headers(options.get("user"), options.get("password")),
+        float(options.get("timeout", 300)),
+    )
+    pairs = [
+        (tuple(r[n] for n, _, _ in keys), r["_rows"])
+        for b in batches
+        for r in b.to_pylist()
+    ]
+    return sorted(pairs, key=lambda p: [(v is not None, v) for v in p[0]])

@@ -69,13 +69,14 @@ def build_select(
     lower: int | None = None,
     upper: int | None = None,
     fmt: str = "JSONEachRow",
+    group_by: list[str] | None = None,
 ) -> str:
     """Compile one partition's bounded SELECT. Pure function — contract
     tested against golden strings. Half-open range ``[lower, upper)`` so
     adjacent partitions never overlap and their union is exactly the
     caller's span; a ``None`` edge is left out of the WHERE entirely, which
     is how callers express the JDBC partitioner's unbounded first/last
-    strides."""
+    strides. ``group_by`` turns it into an aggregate over the same rows."""
     cols = ", ".join(columns) if columns else "*"
     clauses = []
     if predicate:
@@ -86,7 +87,8 @@ def build_select(
         if upper is not None:
             clauses.append(f"{partition_column} < {upper}")
     where = f" WHERE {' AND '.join(clauses)}" if clauses else ""
-    return f"SELECT {cols} FROM {table}{where} FORMAT {fmt}"
+    group = f" GROUP BY {', '.join(group_by)}" if group_by else ""
+    return f"SELECT {cols} FROM {table}{where}{group} FORMAT {fmt}"
 
 
 def _with_params(url: str, **params: str) -> str:

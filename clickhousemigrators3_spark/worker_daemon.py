@@ -11,9 +11,12 @@ same pyspark installed (and py4j), this daemon drops those archives before
 handing off to ``pyspark.daemon``, so its forked workers never scan them.
 
 ``session.get_spark`` selects it with ``spark.python.daemon.module``. The
-data-source planner workers (schema and read planning) do not honour that
-conf: Spark's ``PythonPlannerRunner`` always launches ``pyspark.daemon``,
-so they keep paying the scan once per action.
+data-source planner workers (schema, read and write planning) do not honour
+that conf: Spark's ``PythonPlannerRunner`` always launches
+``pyspark.daemon``. The ``clickhouse_http`` data source covers them itself:
+it calls ``drop_spark_archives`` when a planner worker builds or unpickles
+it, and Spark reuses planner workers, so each pays the scan once instead
+of on every planner call (``load()`` 0.16 → 0.04 CPU s on a 4-vCPU VM).
 """
 
 from __future__ import annotations
@@ -70,15 +73,28 @@ def kept_path(path: list[str], spark_home: str | None) -> list[str]:
     return list(path)
 
 
-def main() -> None:
+_dropped = False
+
+
+def drop_spark_archives() -> None:
+    """Apply ``kept_path`` to this process's ``sys.path``, once per process,
+    and forget the zipimporters of the archives it dropped."""
+    global _dropped
+    if _dropped:
+        return
+    _dropped = True
     kept = kept_path(sys.path, os.environ.get("SPARK_HOME"))
     dropped = [p for p in sys.path if p not in kept]
     sys.path[:] = kept
-    # the -m lookup of this module already built zipimporters for them, and
+    # imports from the archives already built zipimporters for them, and
     # invalidate_caches walks the importer cache, not sys.path
     for key in list(sys.path_importer_cache):
         if any(key == p or key.startswith(os.path.join(p, "")) for p in dropped):
             del sys.path_importer_cache[key]
+
+
+def main() -> None:
+    drop_spark_archives()
     runpy.run_module("pyspark.daemon", run_name="__main__")
 
 

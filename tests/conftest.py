@@ -1,9 +1,26 @@
 from __future__ import annotations
 
+import random
+
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
 SF01_DIR = "/root/testdata/sf0.01"
+
+
+def pytest_addoption(parser):
+    parser.addoption(
+        "--shuffle-seed",
+        type=int,
+        default=None,
+        help="run the collected tests in an order permuted by this seed",
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    seed = config.getoption("--shuffle-seed")
+    if seed is not None:
+        random.Random(seed).shuffle(items)
 
 
 @pytest.fixture(scope="session")

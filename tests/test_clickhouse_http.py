@@ -378,10 +378,12 @@ def test_write_then_scalar_validation(spark, stub):
         [(i, float(i) * 1.5) for i in range(100)],
         "o_orderkey long, o_totalprice double",
     ).repartition(4)
+    # its own table: other tests append to the shared sink in any order
+    stub.execute("CREATE TABLE scalar_sink (o_orderkey BIGINT, o_totalprice DOUBLE)")
     stub.received.clear()
-    write_ch(src, stub.url, "sink")
-    assert query_scalar_http(stub.url, "SELECT count(*) FROM sink") == 100
-    total = query_scalar_http(stub.url, "SELECT sum(o_totalprice) FROM sink")
+    write_ch(src, stub.url, "scalar_sink")
+    assert query_scalar_http(stub.url, "SELECT count(*) FROM scalar_sink") == 100
+    total = query_scalar_http(stub.url, "SELECT sum(o_totalprice) FROM scalar_sink")
     assert abs(float(total) - sum(i * 1.5 for i in range(100))) < 1e-6
     inserts = [s for s in stub.received if s.startswith("INSERT")]
     assert len(inserts) == 4  # one INSERT per input partition, executor-side
@@ -921,6 +923,251 @@ def test_rows_arriving_after_discovery_fail_the_table_invariant(
     assert migrate.resolve_manifest(cfg.dest_dir, "grow_orders") is None
 
 
+MONTH_KEY = "CAST(date_trunc('month', o_orderdate) AS DATE)"
+ORDERS_DATED = "o_orderkey long, o_orderstatus string, o_orderdate timestamp_ntz"
+
+
+def _month_migration(tmp_path, loader, table="orders", strategy="per_partition"):
+    from clickhousemigrators3_spark.config import MigrationConfig
+
+    return MigrationConfig(
+        dest_dir=str(tmp_path / "dest"),
+        table=table,
+        partition_keys=["p_month"],
+        derived_partitions={"p_month": MONTH_KEY},
+        insert_interval=0,
+        lock_dir=str(tmp_path / "locks"),
+        progress_path=str(tmp_path / "progress.json"),
+        report_dir=str(tmp_path / "reports"),
+        checksum=True,
+        strategy=strategy,
+        source_loader=loader,
+    )
+
+
+def _nully_orders(stub):
+    """orders with NULL keys, dates and statuses sprinkled in (idempotent)."""
+    stub.execute(
+        "CREATE TABLE IF NOT EXISTS nully AS SELECT "
+        "CASE WHEN o_orderkey % 13 = 0 THEN NULL ELSE o_orderkey END AS o_orderkey, "
+        "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_orderstatus END AS o_orderstatus, "
+        "CASE WHEN o_orderkey % 11 = 0 THEN NULL ELSE o_orderdate END AS o_orderdate "
+        f"FROM '{SF_DIR}/orders.parquet'"
+    )
+
+
+def test_month_discovery_runs_on_the_server(spark, stub, tmp_path):
+    """A bare relation with a whitelisted month key: discovery is one
+    GROUP BY on the server, then the copy and the validation each read
+    the 4 slices once."""
+    from clickhousemigrators3_spark.operators.migrate import migrate_single_table
+
+    month = "o_orderdate >= '1996-03-01' AND o_orderdate < '1996-04-01'"
+    cfg = _month_migration(
+        tmp_path,
+        lambda s, t: read_ch(
+            s, stub.url, t, ORDERS_DATED, partition_column="o_orderkey",
+            lower=0, upper=1500, num_partitions=4, predicate=month,
+        ),
+    )
+    stub.received.clear()
+    res = migrate_single_table(spark, cfg, "orders")
+    assert res["status"] == "completed", res["error"]
+    assert res["total_partitions"] == 1
+    selects = data_selects(stub, "orders")
+    grouped = [q for q in selects if "GROUP BY" in q]
+    assert len(grouped) == 1 and len(selects) == 1 + 2 * 4, selects
+    assert "count(*)" in grouped[0] and f"({month})" in grouped[0]
+    assert "GROUP BY CAST(date_trunc('month', o_orderdate) AS DATE)" in grouped[0]
+    n = query_scalar_http(stub.url, f"SELECT count(*) FROM orders WHERE {month}")
+    assert res["migrated_rows"] == n > 0
+
+
+@pytest.mark.parametrize("wire", ["ArrowStream", "Parquet", "JSONEachRow"])
+def test_server_discovery_matches_spark_discovery(spark, stub, wire):
+    """Same values, Python types and order (NULLs first) from the server's
+    GROUP BY as from Spark's groupBy/orderBy over the same DataFrame."""
+    from clickhousemigrators3_spark.operators import migrate
+
+    _nully_orders(stub)
+    df = read_ch(spark, stub.url, "nully", ORDERS_DATED, wire_format=wire)
+    derived = {"p_month": MONTH_KEY, "p_year": MONTH_KEY.replace("month", "year")}
+    src = df
+    for name, expr in derived.items():
+        src = src.withColumn(name, F.expr(expr))
+    for keys in (["p_month"], ["o_orderstatus", "p_year"], ["o_orderkey"]):
+        server = migrate._server_discovery(df, keys, derived)
+        assert server is not None, keys
+        got = migrate.discover_partition_values(src, keys, server)
+        want = migrate.discover_partition_values(src, keys)
+        assert got == want, keys
+        assert [type(v) for p, _ in got for v in p] == [
+            type(v) for p, _ in want for v in p
+        ]
+        assert got[0][0][0] is None  # NULLs sort first
+
+
+@pytest.mark.parametrize(
+    "options",
+    [
+        {"predicate": "o_orderstatus = 'F'"},
+        {"partition_column": "o_orderkey", "lower": 100, "upper": 900,
+         "num_partitions": 3},
+        {"partition_column": "o_orderkey", "lower": 100, "upper": 900,
+         "num_partitions": 3, "strict_bounds": "true"},
+        {"partition_column": "o_orderkey", "lower": 100, "upper": 900,
+         "num_partitions": 1},
+        {"partition_column": "o_orderkey", "lower": 100, "upper": 100,
+         "strict_bounds": "true"},
+        {"partition_column": "o_orderkey", "lower": 900, "upper": 100},
+    ],
+    ids=["predicate", "sliced", "strict", "one_slice", "strict_empty", "degenerate"],
+)
+def test_server_counts_cover_the_rows_a_read_returns(spark, stub, options):
+    """The server's total equals ``df.count()`` for the predicate option and
+    every slicing mode, NULL partition-column values included."""
+    from clickhousemigrators3_spark.operators import migrate
+
+    _nully_orders(stub)
+    df = read_ch(spark, stub.url, "nully", ORDERS_DATED, **options)
+    server = migrate._server_discovery(df, ["p_month"], {"p_month": MONTH_KEY})
+    assert server is not None
+    assert sum(n for _, n in migrate.group_counts(*server)) == df.count()
+    assert migrate.group_counts(server[0], [])[0][1] == df.count()
+
+
+def test_rows_arriving_after_server_discovery_fail_the_table_invariant(
+    spark, stub, tmp_path, monkeypatch
+):
+    """The server-path twin: a row landing after the server's GROUP BY is
+    copied and validated per partition, but the table invariant fails."""
+    from clickhousemigrators3_spark.operators import migrate
+
+    stub.execute(
+        "CREATE TABLE grow_dated AS "
+        f"SELECT o_orderkey, o_orderstatus, o_orderdate FROM '{SF_DIR}/orders.parquet'"
+    )
+    discover = migrate.discover_partition_values
+
+    def discover_then_insert(*args):
+        parts = discover(*args)
+        assert len(args) == 3  # the server path
+        stub.execute("INSERT INTO grow_dated VALUES (4, 'F', '1996-03-03')")
+        return parts
+
+    monkeypatch.setattr(migrate, "discover_partition_values", discover_then_insert)
+    cfg = _month_migration(
+        tmp_path,
+        lambda s, t: read_ch(
+            s, stub.url, t, ORDERS_DATED, partition_column="o_orderkey",
+            lower=0, upper=1500, num_partitions=4,
+        ),
+        table="grow_dated",
+        strategy="batch",
+    )
+    res = migrate.migrate_single_table(spark, cfg, "grow_dated")
+    assert res["status"] == "failed"
+    assert "table invariant failed" in res["error"], res["error"]
+    assert all(c["passed"] for c in res["check_results"])
+    assert not (tmp_path / "dest" / "grow_dated").exists()
+
+
+def test_wrong_server_count_fails_the_migration(spark, stub, tmp_path, monkeypatch):
+    """A server answer off by one row in one partition: nothing publishes."""
+    from clickhousemigrators3_spark.operators import migrate
+
+    counts = migrate.group_counts
+
+    def off_by_one(options, keys):
+        pairs = counts(options, keys)
+        (part, n), *rest = pairs
+        return [(part, n + 1), *rest]
+
+    monkeypatch.setattr(migrate, "group_counts", off_by_one)
+    cfg = _month_migration(
+        tmp_path,
+        lambda s, t: read_ch(
+            s, stub.url, t, ORDERS_DATED, partition_column="o_orderkey",
+            lower=0, upper=1500, num_partitions=4,
+            predicate="o_orderdate < '1995-04-01'",
+        ),
+        strategy="batch",
+    )
+    res = migrate.migrate_single_table(spark, cfg, "orders")
+    assert res["status"] == "failed"
+    assert "table invariant failed" in res["error"], res["error"]
+    assert not (tmp_path / "dest" / "orders").exists()
+
+
+def test_spark_discovers_when_the_server_cannot(spark, stub, tmp_path):
+    """Filtered or projected loaders, expressions off the whitelist and
+    TIMESTAMP columns keep Spark's groupBy."""
+    from clickhousemigrators3_spark.operators import migrate
+
+    df = read_ch(spark, stub.url, "orders", ORDERS_DATED)
+    month = {"p_month": MONTH_KEY}
+    assert migrate._server_discovery(df, ["p_month"], month) is not None
+    assert migrate._server_discovery(df.filter("o_orderkey > 3"), ["p_month"], month) is None
+    assert migrate._server_discovery(df.select("o_orderdate"), ["p_month"], month) is None
+    for expr in (
+        "pmod(o_orderkey, 4)",
+        "floor(o_orderkey / 100)",
+        MONTH_KEY.replace("month", "week"),
+        MONTH_KEY.replace("o_orderdate", "o_orderstatus"),
+    ):
+        assert migrate._server_discovery(df, ["k"], {"k": expr}) is None, expr
+    # the alias would shadow a source column on the server
+    assert migrate._server_discovery(df, ["o_orderdate"], {"o_orderdate": MONTH_KEY}) is None
+    zoned = read_ch(spark, stub.url, "orders", "o_orderkey long, o_orderdate timestamp")
+    assert migrate._server_discovery(zoned, ["p_month"], month) is None
+
+    # a filtered loader migrates through Spark's discovery
+    cfg = _month_migration(
+        tmp_path,
+        lambda s, t: read_ch(
+            s, stub.url, t, ORDERS_DATED, partition_column="o_orderkey",
+            lower=0, upper=1500, num_partitions=4,
+        ).filter("o_orderdate < '1995-03-01'"),
+        strategy="batch",
+    )
+    stub.received.clear()
+    res = migrate.migrate_single_table(spark, cfg, "orders")
+    assert res["status"] == "completed", res["error"]
+    assert res["total_partitions"] == 2
+    assert not [q for q in data_selects(stub, "orders") if "GROUP BY" in q]
+
+
+def test_keyless_http_table_counts_on_the_server(spark, duck, stub, tmp_path):
+    """No partition key: the total is one server-side count(*) read before
+    the copy, not a Spark count over the 4 slices."""
+    from clickhousemigrators3_spark.config import MigrationConfig
+    from clickhousemigrators3_spark.operators.migrate import migrate_single_table
+
+    cfg = MigrationConfig(
+        dest_dir=str(tmp_path / "dest"),
+        table="orders",
+        partition_keys=[],
+        insert_interval=0,
+        lock_dir=str(tmp_path / "locks"),
+        progress_path=str(tmp_path / "progress.json"),
+        report_dir=str(tmp_path / "reports"),
+        source_loader=lambda s, t: read_ch(
+            s, stub.url, t, "o_orderkey long, o_totalprice double",
+            partition_column="o_orderkey", lower=0, upper=1500, num_partitions=4,
+        ),
+    )
+    stub.received.clear()
+    res = migrate_single_table(spark, cfg, "orders")
+    assert res["status"] == "completed", res["error"]
+    n = duck.execute(f"SELECT count(*) FROM '{SF_DIR}/orders.parquet'").fetchone()[0]
+    assert res["migrated_rows"] == n
+    selects = data_selects(stub, "orders")
+    counts = [q for q in selects if q.startswith("SELECT count(*) AS _rows FROM")]
+    assert len(counts) == 1 and selects[0] == counts[0], selects
+    # copy and validation read the 4 slices once each
+    assert len(selects) == 1 + 2 * 4, selects
+
+
 def test_full_database_parallel_over_http(spark, duck, stub, tmp_path):
     """C8 thread-per-table dispatch with the HTTP source: two tables pulled
     concurrently, validated, swapped — the whole-DB mode on the wire."""
@@ -1011,15 +1258,13 @@ def test_write_chunks_by_rows_per_request(spark, stub):
 
 
 def test_python_datasource_batch_pushdown(spark, duck, stub):
-    """format('clickhouse_http'): Catalyst filters reach the server SQL via
-    pushFilters; partitioned read returns exactly the filtered table."""
+    """format('clickhouse_http') + a Catalyst filter: the partitioned read
+    returns exactly the filtered table (Spark applies the filter)."""
     from clickhousemigrators3_spark.sources.clickhouse_ds import (
         ClickHouseHTTPDataSource,
     )
 
     spark.dataSource.register(ClickHouseHTTPDataSource)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    stub.received.clear()
     df = (
         spark.read.format("clickhouse_http")
         .schema("o_orderkey long, o_custkey long, o_totalprice double")
@@ -1041,15 +1286,41 @@ def test_python_datasource_batch_pushdown(spark, duck, stub):
         ).fetchall()
     ]
     assert got == want and len(got) > 0
-    selects = [
-        s
-        for s in stub.received
-        if s.startswith("SELECT") and "_wire_probe" not in s
+
+
+def test_filtered_action_does_not_leak_into_later_reads(spark, duck, stub):
+    """One ``load()``, a filtered action, then unfiltered actions on the
+    same DataFrame: the later actions see the whole table. (PySpark caches
+    one pushed reader per ``load()``; a scan with no pushable filter reused
+    the filtered one, so ``count()`` returned the filtered rows.)"""
+    df = read_ch(
+        spark,
+        stub.url,
+        "orders",
+        "o_orderkey long, o_orderstatus string",
+        partition_column="o_orderkey",
+        lower=0,
+        upper=1500,
+        num_partitions=4,
+    )
+    got = sorted(r.o_orderkey for r in df.filter(F.col("o_orderkey") < 100).collect())
+    want = [
+        r[0]
+        for r in duck.execute(
+            f"SELECT o_orderkey FROM '{SF_DIR}/orders.parquet' "
+            "WHERE o_orderkey < 100 ORDER BY 1"
+        ).fetchall()
     ]
+    assert got == want and 0 < len(got)
+    n = duck.execute(f"SELECT count(*) FROM '{SF_DIR}/orders.parquet'").fetchone()[0]
+    assert n > len(got)
+    stub.received.clear()
+    assert df.count() == n
+    by_status = df.groupBy("o_orderstatus").count().collect()
+    assert sum(r["count"] for r in by_status) == n
+    selects = data_selects(stub, "orders")
     assert selects
-    # the optimizer-derived predicates were compiled into EVERY request
-    assert all("o_totalprice > 200000" in s for s in selects)
-    assert all("o_custkey >= 10" in s for s in selects)
+    assert not [s for s in selects if "o_orderkey < 100" in s], selects
 
 
 def test_python_datasource_stream_cursor_tail(spark, stub, tmp_path):
@@ -1130,32 +1401,13 @@ def test_python_datasource_write(spark, stub):
 
 
 def test_pushdown_literal_escaping(spark, stub):
-    """String filter values with quotes must reach the server correctly
-    escaped — matching rows, not syntax errors or injected clauses."""
+    """A string filter value with quotes selects exactly the matching rows
+    — no syntax error, no injected clause."""
     from clickhousemigrators3_spark.sources.clickhouse_ds import (
         ClickHouseHTTPDataSource,
-        _compile_filter,
-    )
-    from pyspark.sql.datasource import EqualTo
-
-    assert (
-        _compile_filter(EqualTo(("name",), "O'Brien; DROP TABLE x"))
-        == "name = 'O''Brien; DROP TABLE x'"
-    )
-    # ClickHouse literals are C-style: a backslash must be doubled BEFORE
-    # quote-doubling, or a value ending in '\' escapes the closing quote.
-    assert _compile_filter(EqualTo(("name",), "tail\\")) == "name = 'tail\\\\'"
-    assert (
-        _compile_filter(EqualTo(("name",), "x\\' OR 1=1 --"))
-        == "name = 'x\\\\'' OR 1=1 --'"
-    )
-    assert (
-        _compile_filter(EqualTo(("path",), "C:\\dir\\file"))
-        == "path = 'C:\\\\dir\\\\file'"
     )
 
     spark.dataSource.register(ClickHouseHTTPDataSource)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     stub.execute("CREATE TABLE quoted (id BIGINT, name VARCHAR)")
     stub.execute(
         "INSERT INTO quoted FORMAT JSONEachRow\n"
@@ -1177,15 +1429,13 @@ def test_pushdown_literal_escaping(spark, stub):
 
 
 def test_pushdown_backslash_literal_round_trip(spark, stub):
-    """Backslash-bearing filter values must select exactly the matching
-    rows through the server's C-style literal parser — no syntax error, no
-    swallowed clause, no wrong-row match."""
+    """Backslash-bearing filter values select exactly the matching rows —
+    no syntax error, no swallowed clause, no wrong-row match."""
     from clickhousemigrators3_spark.sources.clickhouse_ds import (
         ClickHouseHTTPDataSource,
     )
 
     spark.dataSource.register(ClickHouseHTTPDataSource)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     stub.execute("CREATE TABLE slashed (id BIGINT, name VARCHAR)")
     stub.con.executemany(
         "INSERT INTO slashed VALUES (?, ?)",
@@ -1198,7 +1448,6 @@ def test_pushdown_backslash_literal_round_trip(spark, stub):
     )
 
     def probe(value):
-        stub.received.clear()
         df = (
             spark.read.format("clickhouse_http")
             .schema("id long, name string")
@@ -1207,10 +1456,7 @@ def test_pushdown_backslash_literal_round_trip(spark, stub):
             .load()
             .filter(F.col("name") == value)
         )
-        ids = sorted(r.id for r in df.collect())
-        # the filter really was pushed (server saw it), not Spark-side
-        assert any("name = " in s for s in stub.received)
-        return ids
+        return sorted(r.id for r in df.collect())
 
     assert probe("tail\\") == [1]
     assert probe("C:\\dir\\file") == [3]

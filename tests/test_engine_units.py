@@ -2608,6 +2608,42 @@ def test_python_tasks_run_without_spark_archives(spark):
     assert [k for k in zips if os.path.realpath(k).startswith(under)] == []
 
 
+def test_data_source_planner_workers_drop_spark_archives(spark):
+    """The data-source planner workers start from ``pyspark.daemon``, not
+    ``worker_daemon``; ``clickhouse_http`` drops the archives itself. A
+    subclass's ``schema()``, run in the planner worker after ``__init__``,
+    names its column after the ``sys.path`` entries and zipimporter keys
+    left under ``realpath($SPARK_HOME)``."""
+    from clickhousemigrators3_spark.sources.clickhouse_ds import (
+        ClickHouseHTTPDataSource,
+    )
+
+    class ArchiveProbe(ClickHouseHTTPDataSource):
+        @classmethod
+        def name(cls) -> str:
+            return "archive_probe"
+
+        def schema(self):
+            import os
+            import sys
+            import zipimport
+
+            under = os.path.join(os.path.realpath(os.environ["SPARK_HOME"]), "")
+            paths = [p for p in sys.path if os.path.realpath(p).startswith(under)]
+            zips = [
+                k
+                for k, v in sys.path_importer_cache.items()
+                if isinstance(v, zipimport.zipimporter)
+                and os.path.realpath(k).startswith(under)
+            ]
+            return f"paths_{len(paths)}_zips_{len(zips)} int"
+
+    spark.dataSource.register(ArchiveProbe)
+    for _ in range(2):  # a reused planner worker must stay clean too
+        df = spark.read.format("archive_probe").load()
+        assert df.columns == ["paths_0_zips_0"]
+
+
 def _fake_spark_layout(tmp_path, installed_version="4.1.2", py4j=True):
     """A ``$SPARK_HOME`` with pyspark.zip and a core jar, a site dir holding
     pyspark ``installed_version`` (``None``: no pyspark) and py4j, and a
