@@ -17,9 +17,10 @@ Spark-native re-design (SURVEY §1.4, §7.4):
 * Copies are idempotent dynamic-partition overwrites, so replay after a
   crash-between-copy-and-checkpoint is safe (fixes Q4 — the reference
   re-INSERTs and duplicates rows).
-* Validation of all partitions is ONE grouped-count + xxhash64-checksum
-  full-outer join (operators/validate.py), not 2 scalar queries per
-  partition.
+* Validation of all partitions is ONE aggregate over the union of source
+  and staged rows — grouped counts + xxhash64 checksums per side, no join
+  (operators/validate.py) — not 2 scalar queries per partition. Keyless
+  tables take the same path as one global group.
 * Atomic cutover = validate staging, then rename staging→final (S8); on
   object stores the rename becomes a manifest-pointer swap — the ordering
   guarantee (destructive step strictly after validation) is the invariant.
@@ -44,9 +45,9 @@ from .. import resume as ledger
 from ..catalog import drop_path, rename_path, table_exists, table_path
 from ..config import MigrationConfig
 from ..lock import is_locked, table_lock
-from ..plans.partitions import partition_predicate
+from ..plans.partitions import partition_order_key, partition_predicate, quote_name
 from ..sources.clickhouse_ds import group_counts, relation_options
-from .validate import count_validation, validation_failures
+from .validate import count_validation
 
 DB = "default"
 
@@ -268,16 +269,18 @@ def discover_partition_values(
     — the only data-derived values the driver ever collects (bounded by
     #partitions, not #rows). Their row sum is the table total the copy is
     validated against. With ``server`` (from ``_server_discovery``) they
-    come from one GROUP BY on the ClickHouse server, not a Spark job."""
+    come from one GROUP BY on the ClickHouse server, not a Spark job. The
+    order is Spark's ascending ``orderBy`` with NULLs first."""
     if server is not None:
         return group_counts(*server)
+    # at most #partitions rows: sorted here, not by a Spark range shuffle
     rows = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_rows"))
-        .orderBy(*keys)
+        df.groupBy(*[quote_name(k) for k in keys])
+        .agg(F.expr("count(1) AS _rows"))
         .collect()
     )
-    return [(tuple(r[k] for k in keys), r["_rows"]) for r in rows]
+    pairs = [(tuple(r[k] for k in keys), r["_rows"]) for r in rows]
+    return sorted(pairs, key=lambda p: partition_order_key(p[0]))
 
 
 def _copy_partitions(
@@ -294,24 +297,29 @@ def _copy_partitions(
     read-after-write visibility gaps on eventually-consistent stores.
 
     Partition selection scales with #partitions: single-key → pushed-down
-    ``isin``; composite → broadcast semi-join against the partition list
-    (an OR-chain of predicates would blow up the expression tree at 10^4+
-    partitions)."""
+    ``isin`` (plus ``IS NULL`` for a NULL partition); composite → broadcast
+    null-safe (``<=>``) semi-join against the partition list (an OR-chain of
+    predicates would blow up the expression tree at 10^4+ partitions)."""
     from pyspark.sql import Observation
 
     if parts is not None:
         if len(parts) == 1:
             src = src.filter(partition_predicate(dict(zip(keys, parts[0]))))
         elif len(keys) == 1:
-            src = src.filter(F.col(keys[0]).isin([p[0] for p in parts]))
+            values = [p[0] for p in parts if p[0] is not None]
+            pred = F.col(keys[0]).isin(values)
+            if len(values) < len(parts):
+                pred = pred | F.col(keys[0]).isNull()
+            src = src.filter(pred)
         else:
             spark = src.sparkSession
             sel = spark.createDataFrame(
                 [tuple(p) for p in parts], schema=src.select(*keys).schema
             )
-            src = src.join(F.broadcast(sel), on=keys, how="left_semi")
+            on = [src[k].eqNullSafe(sel[k]) for k in keys]
+            src = src.join(F.broadcast(sel), on=on, how="left_semi")
     obs = Observation()
-    src = src.observe(obs, F.count(F.lit(1)).alias("rows_written"))
+    src = src.observe(obs, F.expr("count(1) AS rows_written"))
     writer = src.write.mode("overwrite")
     if keys:
         writer = writer.partitionBy(*keys)
@@ -326,22 +334,23 @@ def _validate(
     keys: list[str],
     checksum: bool,
 ) -> tuple[list[dict], int]:
-    """A3 for all partitions in one job; returns (check_results, dst_total)."""
-    dst = spark.read.parquet(staging)
-    checksum_cols = None
-    if checksum:
-        # checksum over columns common to both sides, minus partition cols
-        # (partition values are already the join key); Spark-vs-Spark, so the
-        # fast private xxhash64 is fine here (no DuckDB in this loop)
-        common = [c for c in src.columns if c in dst.columns and c not in keys]
-        checksum_cols = sorted(common)
+    """A3 for all partitions in one aggregate (one global row when the table
+    has no keys, labelled ``<all>``); returns (check_results, dst_total).
+
+    The staged copy is read with the source's own schema (non-key fields,
+    then the directory-encoded keys), so no footer-inference job runs and the
+    partition values read back in the source's key types."""
+    fields = [f for f in src.schema.fields if f.name not in keys]
+    dst = spark.read.schema(
+        T.StructType(fields + [src.schema[k] for k in keys])
+    ).parquet(staging)
+    # checksum over every non-key column (partition values are already the
+    # grouping key); Spark-vs-Spark, so the fast private xxhash64 is fine
+    # here (no DuckDB in this loop)
+    checksum_cols = sorted(f.name for f in fields) if checksum else None
+    validation = count_validation(src, dst, keys, checksum_cols)
+    rows = validation.collect()
     if keys:
-        # align partition-column types: directory-encoded values read back as
-        # strings/ints — cast the source side to the read-back types
-        for k in keys:
-            src = src.withColumn(k, F.col(k).cast(dst.schema[k].dataType))
-        validation = count_validation(src, dst, keys, checksum_cols)
-        rows = validation.collect()
         check_results = [
             {
                 "partition": ledger.serialize_partition(tuple(r[k] for k in keys)),
@@ -351,18 +360,18 @@ def _validate(
             }
             for r in rows
         ]
-        dst_total = sum(r["dst_count"] or 0 for r in check_results)
     else:
-        src_cnt, dst_cnt = src.count(), dst.count()
+        # a global aggregate over two empty sides has NULL counts
+        (r,) = rows
         check_results = [
             {
                 "partition": "<all>",
-                "src_count": src_cnt,
-                "dst_count": dst_cnt,
-                "passed": src_cnt == dst_cnt,
+                "src_count": r["src_cnt"] or 0,
+                "dst_count": r["dst_cnt"] or 0,
+                "passed": bool(r["passed"]),
             }
         ]
-        dst_total = dst_cnt
+    dst_total = sum(c["dst_count"] or 0 for c in check_results)
     return check_results, dst_total
 
 

@@ -3,10 +3,12 @@
 Reference parity: ``validator.py`` compares per-partition row counts with 2
 scalar ``count(*)`` queries per partition plus 2 full-table counts
 (``validator.py:24-34``, ``migration.py:480-517``). That is O(#partitions)
-query round-trips. Here validation of *all* partitions is ONE distributed
-job: group both sides by the partition keys, full-outer join the grouped
-counts, and flag mismatches — at 100 TB the cost is two column-pruned scans
-plus a shuffle of #partitions rows.
+query round-trips. Here validation of *all* partitions is ONE aggregate:
+both sides are projected to ``(keys, side flag[, row hash])``, unioned, and
+grouped once by the partition keys with per-side conditional sums — at
+100 TB the cost is two column-pruned scans plus a shuffle of #partitions
+rows, one exchange and no join. The ``groupBy`` groups NULL key values
+together, so a NULL partition validates like any other.
 
 Upgrade (SURVEY §7.2 step 3): optional content checksum via an
 order-insensitive ``sum(xxhash64(*cols))`` per group — same cost class as the
@@ -17,38 +19,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def table_count(df: DataFrame) -> int:
-    """A1 — full-table count (reference ``validator.py:31``)."""
-    return df.count()
-
-
-def partition_count(df: DataFrame, pred: Column) -> int:
-    """A2 — count under a partition predicate (reference
-    ``validator.py:24-28``). Kept for single-partition parity; batched
-    validation should use :func:`grouped_counts` instead."""
-    return df.filter(pred).count()
-
-
-def grouped_counts(
-    df: DataFrame, keys: Sequence[str | Column], checksum_cols: Sequence[str] | None = None
-) -> DataFrame:
-    """A2 batched — one row per partition with count (and optional content
-    checksum). Map-side partial aggregation makes the shuffle ∝ #partitions."""
-    cols = [F.col(k) if isinstance(k, str) else k for k in keys]
-    aggs = [F.count(F.lit(1)).alias("row_cnt")]
-    if checksum_cols:
-        # order-insensitive: sum of per-row hashes is commutative; mask to
-        # 31 bits so the ANSI-mode long sum can't overflow (safe to 2^32
-        # rows per group)
-        row_hash = F.xxhash64(*[F.col(c) for c in checksum_cols]).bitwiseAND(
-            F.lit(0x7FFFFFFF)
-        )
-        aggs.append(F.sum(row_hash).alias("content_hash"))
-    return df.groupBy(*cols).agg(*aggs)
+from ..plans.partitions import quote_name
 
 
 def count_validation(
@@ -57,34 +31,37 @@ def count_validation(
     keys: Sequence[str],
     checksum_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """A3 — src-vs-dst per-partition validation as a single full-outer join.
+    """A3 — src-vs-dst per-partition validation as one union aggregate.
 
     Returns one row per partition key with ``src_cnt``, ``dst_cnt``,
-    ``passed`` (and checksum columns when requested). A partition present on
-    only one side shows NULL on the other and fails. Reference semantics:
-    ``migration.py:480-495`` / ``validator.py:38-56``, minus the per-partition
-    round-trips.
-    """
-    s = grouped_counts(src, keys, checksum_cols).withColumnRenamed("row_cnt", "src_cnt")
-    d = grouped_counts(dst, keys, checksum_cols).withColumnRenamed("row_cnt", "dst_cnt")
+    ``passed`` (and ``src_hash``/``dst_hash`` when ``checksum_cols`` is
+    given), in the order ``keys, src_cnt, [src_hash], dst_cnt, [dst_hash],
+    passed``. A partition present on only one side shows NULL on the other
+    and fails. No keys → one global row. Reference semantics:
+    ``migration.py:480-495`` / ``validator.py:38-56``, minus the
+    per-partition round-trips.
+
+    Each side is one ``selectExpr`` of quoted names (a Column-function call
+    costs several py4j round trips each on PySpark 4.x)."""
+    key_exprs = [quote_name(k) for k in keys]
+    row_hash = []
     if checksum_cols:
-        s = s.withColumnRenamed("content_hash", "src_hash")
-        d = d.withColumnRenamed("content_hash", "dst_hash")
-    joined = s.join(d, on=list(keys), how="full_outer")
-    passed = F.col("src_cnt").eqNullSafe(F.col("dst_cnt"))
+        # order-insensitive: sum of per-row hashes is commutative; mask to
+        # 31 bits so the ANSI-mode long sum can't overflow (safe to 2^32
+        # rows per group)
+        cols = ", ".join(quote_name(c) for c in checksum_cols)
+        row_hash = [f"xxhash64({cols}) & 2147483647 AS _row_hash"]
+    both = src.selectExpr(*key_exprs, "true AS _from_src", *row_hash).union(
+        dst.selectExpr(*key_exprs, "false AS _from_src", *row_hash)
+    )
+    # each side's sum is NULL when that side has no rows in the group
+    aggs = ["sum(if(_from_src, 1L, NULL)) AS src_cnt"]
     if checksum_cols:
-        passed = passed & F.col("src_hash").eqNullSafe(F.col("dst_hash"))
-    return joined.withColumn("passed", passed)
-
-
-def validation_failures(validation: DataFrame) -> DataFrame:
-    """Rows of :func:`count_validation` that must block the destructive step
-    (C10 fail-fast, reference ``migration.py:492-495``)."""
-    return validation.filter(~F.col("passed"))
-
-
-def table_invariant(src_remaining: int, dst_total: int, expected_total: int) -> bool:
-    """A4 — end-state invariant before the swap: source drained AND backup
-    holds every original row (reference ``migration.py:510-517``,
-    ``validator.py:58-74``)."""
-    return src_remaining == 0 and dst_total == expected_total
+        aggs.append("sum(if(_from_src, _row_hash, NULL)) AS src_hash")
+    aggs.append("sum(if(_from_src, NULL, 1L)) AS dst_cnt")
+    passed = "src_cnt <=> dst_cnt"
+    if checksum_cols:
+        aggs.append("sum(if(_from_src, NULL, _row_hash)) AS dst_hash")
+        passed += " AND src_hash <=> dst_hash"
+    grouped = both.groupBy(*key_exprs).agg(*[F.expr(a) for a in aggs])
+    return grouped.selectExpr("*", f"{passed} AS passed")

@@ -1,4 +1,4 @@
-"""Registered validation queries — A3/A4 as distributed joins, plus the
+"""Registered validation queries — A3 as one distributed aggregate, plus the
 checksum upgrade (SURVEY §7.2 step 3).
 
 Scenario fixture: "dst" is lineitem with one composite partition missing
@@ -44,9 +44,9 @@ KEYS = ["l_returnflag", "l_linestatus"]
 )
 def a3_count_validation_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 (``migration.py:480-495``, ``validator.py:38-56``): per-partition
-    src-vs-dst count equality for ALL partitions in one full-outer join —
+    src-vs-dst count equality for ALL partitions in one union aggregate —
     versus the reference's 2 scalar queries per partition. At 100 TB: two
-    column-pruned scans, shuffle of #partitions rows."""
+    column-pruned scans, one shuffle of #partitions rows, no join."""
     src = load_table(spark, sf_dir, "lineitem")
     dst = src.filter(~((F.col("l_returnflag") == "R") & (F.col("l_linestatus") == "F")))
     return count_validation(src, dst, KEYS).orderBy(*KEYS)

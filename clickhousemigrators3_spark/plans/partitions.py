@@ -58,6 +58,20 @@ def partition_predicate(spec: Mapping[str, object]) -> Column:
     return reduce(lambda a, b: a & b, clauses)
 
 
+def quote_name(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier, for ``selectExpr``
+    and string column arguments (dots and spaces stay part of the name)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def partition_order_key(values: Sequence) -> list:
+    """Sort key that puts partition tuples in Spark's ascending ``orderBy``
+    order: NULLs first, NaN after every other number. Partition lists are
+    bounded by #partitions, so they are sorted on the driver rather than by
+    a Spark range shuffle."""
+    return [(0,) if v is None else (1, 1) if v != v else (1, 0, v) for v in values]
+
+
 def remaining_partitions(
     all_parts: DataFrame, done_parts: DataFrame, keys: Sequence[str]
 ) -> DataFrame:

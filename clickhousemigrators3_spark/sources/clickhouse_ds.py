@@ -62,6 +62,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import DataType, LongType, MapType, StructField, StructType
 
+from ..plans.partitions import partition_order_key
 from ..worker_daemon import drop_spark_archives
 
 from .clickhouse_http import (
@@ -572,4 +573,4 @@ def group_counts(
         for b in batches
         for r in b.to_pylist()
     ]
-    return sorted(pairs, key=lambda p: [(v is not None, v) for v in p[0]])
+    return sorted(pairs, key=lambda p: partition_order_key(p[0]))

@@ -578,3 +578,201 @@ def test_split_top_level_assignments():
     ]
     assert _split_top_level("s='a,b',t=\"c,d\"") == ["s='a,b'", 't="c,d"']
     assert _split_top_level("arr=array(1, 2)[1],z=3") == ["arr=array(1, 2)[1]", "z=3"]
+
+
+# --- NULL partition values, keyless checksums, the validation's plan -------
+
+_NULL_KEY_ROWS = [("a", "x", 1), ("a", "y", 2), (None, "x", 3), (None, None, 4), ("b", "x", 5)]
+
+
+def _null_key_source(spark, tmp_path) -> str:
+    """Source dir holding table ``t``: string keys ``k``/``k2`` with NULLs."""
+    src_dir = tmp_path / "src"
+    spark.createDataFrame(_NULL_KEY_ROWS, "k string, k2 string, v int").coalesce(1).write.parquet(
+        str(src_dir / "t.parquet")
+    )
+    return str(src_dir)
+
+
+def _published_null_rows(spark, tmp_path) -> int:
+    return spark.read.parquet(str(tmp_path / "dest" / "t")).filter("k IS NULL").count()
+
+
+@pytest.mark.parametrize("strategy", ["batch", "per_partition"])
+@pytest.mark.parametrize("keys", [["k"], ["k", "k2"]], ids=["single", "composite"])
+def test_null_partition_values_migrate(spark, tmp_path, keys, strategy):
+    """A NULL partition value validates like any other: the validation groups
+    NULL keys together instead of matching them with ``=``."""
+    src_dir = _null_key_source(spark, tmp_path)
+    cfg = make_cfg(
+        tmp_path, source_dir=src_dir, partition_keys=keys, strategy=strategy, checksum=True
+    )
+    res = migrate_single_table(spark, cfg, "t")
+    assert res["status"] == "completed", res.get("error")
+    assert res["migrated_rows"] == len(_NULL_KEY_ROWS)
+    groups = {tuple(r[: len(keys)]) for r in _NULL_KEY_ROWS}
+    assert len(res["check_results"]) == len(groups) == res["total_partitions"]
+    assert all(c["passed"] for c in res["check_results"])
+    assert _published_null_rows(spark, tmp_path) == 2
+
+
+@pytest.mark.parametrize("checksum", [False, True], ids=["counts", "checksum"])
+@pytest.mark.parametrize("keys", [["k"], ["k", "k2"]], ids=["single", "composite"])
+def test_corrupted_null_partition_fails_alone(spark, tmp_path, monkeypatch, keys, checksum):
+    """A row lost from a NULL partition fails exactly that partition."""
+    import clickhousemigrators3_spark.operators.migrate as mig
+
+    src_dir = _null_key_source(spark, tmp_path)
+    cfg = make_cfg(tmp_path, source_dir=src_dir, partition_keys=keys, checksum=checksum)
+    real_copy = mig._copy_partitions
+
+    def lossy_copy(src, staging, keys, parts):
+        return real_copy(src.filter("v <> 3"), staging, keys, parts)
+
+    monkeypatch.setattr(mig, "_copy_partitions", lossy_copy)
+    res = migrate_single_table(spark, cfg, "t")
+    assert res["status"] == "failed"
+    assert "validation failed for 1 partition(s)" in res["error"]
+    [bad] = [c for c in res["check_results"] if not c["passed"]]
+    assert bad["partition"] == ledger.serialize_partition((None, "x")[: len(keys)])
+    assert bad["src_count"] == (2 if keys == ["k"] else 1)
+    assert bad["dst_count"] == (1 if keys == ["k"] else None)
+    assert not os.path.exists(tmp_path / "dest" / "t")
+
+
+@pytest.mark.parametrize(
+    "keys, done",
+    [(["k"], ("a",)), (["k", "k2"], ("a", "x"))],
+    ids=["single", "composite"],
+)
+def test_batch_resume_copies_null_partitions(spark, tmp_path, keys, done):
+    """A resumed batch copy selects the NULL partitions still to do
+    (``isin`` OR ``IS NULL`` for one key, a ``<=>`` semi-join for several)."""
+    from clickhousemigrators3_spark.operators.migrate import _copy_partitions, _staging_path
+
+    src_dir = _null_key_source(spark, tmp_path)
+    cfg = make_cfg(tmp_path, source_dir=src_dir, partition_keys=keys, resume=True)
+    src = spark.read.parquet(os.path.join(src_dir, "t.parquet"))
+    _copy_partitions(src, _staging_path(cfg.dest_dir, "t"), keys, [done])
+    progress = ledger.init_table({}, "default", "t")
+    ledger.mark_partition(
+        progress, "default", "t", ledger.serialize_partition(done), cfg.progress_path
+    )
+
+    res = migrate_single_table(spark, cfg, "t")
+    assert res["status"] == "completed", res.get("error")
+    assert res["migrated_rows"] == len(_NULL_KEY_ROWS)
+    assert spark.read.parquet(str(tmp_path / "dest" / "t")).count() == len(_NULL_KEY_ROWS)
+    assert _published_null_rows(spark, tmp_path) == 2
+
+
+def test_keyless_checksum_catches_content_change(spark, tmp_path, monkeypatch):
+    """``checksum=True`` holds for a keyless table: every value of one column
+    changed at an equal row count fails the single ``<all>`` check."""
+    import clickhousemigrators3_spark.operators.migrate as mig
+    from pyspark.sql import functions as F
+
+    cfg = make_cfg(tmp_path, partition_keys=[], checksum=True)
+    real_copy = mig._copy_partitions
+
+    def mutate_copy(src, staging, keys, parts):
+        changed = src.withColumn("n_name", F.concat("n_name", F.lit("!")))
+        return real_copy(changed, staging, keys, parts)
+
+    monkeypatch.setattr(mig, "_copy_partitions", mutate_copy)
+    res = migrate_single_table(spark, cfg, "nation")
+    assert res["status"] == "failed"
+    assert "validation failed" in res["error"]
+    assert res["check_results"] == [
+        {"partition": "<all>", "src_count": 25, "dst_count": 25, "passed": False}
+    ]
+    assert not os.path.exists(tmp_path / "dest" / "nation")
+
+    monkeypatch.setattr(mig, "_copy_partitions", real_copy)
+    res = migrate_single_table(spark, cfg, "nation")
+    assert res["status"] == "completed", res.get("error")
+    assert res["check_results"] == [
+        {"partition": "<all>", "src_count": 25, "dst_count": 25, "passed": True}
+    ]
+
+
+def test_validation_is_one_aggregate_without_join(spark, tmp_path, monkeypatch):
+    """The validation of a keyed migration shuffles once and joins nothing;
+    its columns keep the order ``keys, src_cnt, src_hash, dst_cnt,
+    dst_hash, passed``."""
+    import clickhousemigrators3_spark.operators.migrate as mig
+
+    captured = []
+    real = mig.count_validation
+
+    def capture(*args, **kwargs):
+        df = real(*args, **kwargs)
+        captured.append((df.columns, df._jdf.queryExecution().executedPlan().toString()))
+        return df
+
+    monkeypatch.setattr(mig, "count_validation", capture)
+    res = migrate_single_table(spark, make_cfg(tmp_path, checksum=True), "lineitem")
+    assert res["status"] == "completed", res.get("error")
+    [(columns, plan)] = captured
+    assert columns == [
+        "l_returnflag", "l_linestatus", "src_cnt", "src_hash", "dst_cnt", "dst_hash", "passed"
+    ]
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Join" not in plan, plan
+
+
+def test_spark_discovery_sorts_on_the_driver(spark, monkeypatch):
+    """Spark-path discovery plans no Sort and no range shuffle, and returns
+    the ``(tuple, rows)`` pairs in ``orderBy`` order, NULLs first."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from clickhousemigrators3_spark.operators.migrate import discover_partition_values
+
+    rows = [
+        ("b", 2, 1.5), (None, 1, None), ("a", None, float("nan")), ("b", 1, -2.0),
+        ("a", 3, 0.0), (None, None, 1.0), ("a", 3, 0.0), ("b", 2, float("nan")),
+    ]
+    df = spark.createDataFrame(rows, "s string, i int, d double")
+    plans = []
+    DataFrame = type(df)  # the classic DataFrame class
+    real_collect = DataFrame.collect
+
+    def collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real_collect(self)
+
+    for keys in (["s"], ["s", "i"], ["d"], ["i", "d", "s"]):
+        expected = [
+            (tuple(r[k] for k in keys), r["n"])
+            for r in df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")).orderBy(*keys).collect()
+        ]
+        monkeypatch.setattr(DataFrame, "collect", collect)
+        got = discover_partition_values(df, keys)
+        monkeypatch.setattr(DataFrame, "collect", real_collect)
+        # NaN != NaN, so compare the key tuples through repr
+        assert repr(got) == repr(expected), keys
+        assert got[0][0][0] is None, keys
+    assert len(plans) == 4
+    for plan in plans:
+        assert not re.search(r"\bSort\b", plan), plan
+        assert "rangepartitioning" not in plan.lower(), plan
+
+
+def test_checksummed_batch_migration_runs_at_most_five_jobs(spark, tmp_path):
+    """Discovery (2 jobs), the copy (1) and the validation (2): the staged
+    read infers no schema and nothing sorts or joins."""
+    from clickhousemigrators3_spark.catalog import load_table
+
+    load_table(spark, SF_DIR, "lineitem")  # the source's own schema read
+    sc = spark.sparkContext
+    group = f"job-count-{os.getpid()}-{id(tmp_path)}"
+    sc.setJobGroup(group, "checksummed batch migration")
+    try:
+        res = migrate_single_table(spark, make_cfg(tmp_path, checksum=True), "lineitem")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["status"] == "completed", res.get("error")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 5, jobs
