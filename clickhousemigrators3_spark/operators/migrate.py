@@ -283,6 +283,19 @@ def discover_partition_values(
     return sorted(pairs, key=lambda p: partition_order_key(p[0]))
 
 
+def _refuse_empty_string_keys(keys: list[str], parts: list[tuple]) -> None:
+    """Refuse a table whose partition key holds ``''``: a Hive-style
+    partition directory writes it as ``__HIVE_DEFAULT_PARTITION__``, which
+    reads back as NULL, and the ledger writes NULL and ``''`` as the same
+    text. Checked before any copy or checkpoint."""
+    for i, k in enumerate(keys):
+        if any(p[i] == "" for p in parts):
+            raise ValueError(
+                f"partition key {k!r} holds the empty string '', which a "
+                "partitioned copy cannot tell apart from NULL"
+            )
+
+
 def _copy_partitions(
     src: DataFrame,
     staging: str,
@@ -451,6 +464,7 @@ def migrate_single_table(
             else:
                 discovered = discover_partition_values(src, keys, server)
             parts = [p for p, _ in discovered]
+            _refuse_empty_string_keys(keys, parts)
             part_strs = [ledger.serialize_partition(p) for p in parts]
             result["total_partitions"] = len(parts)
 
@@ -473,7 +487,11 @@ def migrate_single_table(
             # this run copied every partition
             rows_witnessed: int | None = None
             full_copy = len(todo_tuples) == len(parts)
-            if keys and cfg.strategy == "per_partition":
+            if not parts:
+                # keyless, or keyed with no rows: one write of the whole
+                # table, which leaves a staging directory even when empty (C7)
+                rows_witnessed = _copy_partitions(src, staging, keys, None)
+            elif cfg.strategy == "per_partition":
                 witnessed = 0
                 for values, part_str in [
                     (p, s) for p, s in zip(parts, part_strs) if s in todo
@@ -486,8 +504,6 @@ def migrate_single_table(
                     )  # C3
                 if full_copy:
                     rows_witnessed = witnessed
-            elif not keys:
-                rows_witnessed = _copy_partitions(src, staging, keys, None)  # C7
             elif todo_tuples:
                 sel = None if full_copy else todo_tuples
                 witnessed = _copy_partitions(src, staging, keys, sel)

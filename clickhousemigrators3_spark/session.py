@@ -5,17 +5,32 @@ to a 1000-executor cluster — AQE handles runtime re-planning (partition
 coalescing, skew-join splitting), and the broadcast threshold keeps the
 TPC-H-style dimension tables (region/nation/supplier/part at any SF) on the
 map side of joins.
+
+On ``local[...]`` masters the session's ``file://`` file system is
+``clickhousemigrators3_spark.jvm.NoForkLocalFileSystem`` (``jvm/``: its Java
+source and ``nofork-local-fs.jar``, rebuilt by ``scripts/build_nofork_fs.py``).
+It is Hadoop's checksummed local file system, but sets file modes in the JVM
+instead of forking ``chmod`` per file and directory, which Hadoop does when
+its native library is missing (Spark ships none). Executors of a local
+master live in the driver JVM, so the driver classpath is enough.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import site
 from importlib.machinery import PathFinder
 
 from pyspark.sql import SparkSession
 
 WORKER_DAEMON = "clickhousemigrators3_spark.worker_daemon"
+NO_FORK_FS = "clickhousemigrators3_spark.jvm.NoForkLocalFileSystem"
+NO_FORK_FS_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "nofork-local-fs.jar"
+)
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
 
 
 def worker_can_import_daemon(cwd: str, pythonpath: str) -> bool:
@@ -29,6 +44,21 @@ def worker_can_import_daemon(cwd: str, pythonpath: str) -> bool:
     return bool(spec and spec.submodule_search_locations) and os.path.isfile(
         os.path.join(spec.submodule_search_locations[0], "worker_daemon.py")
     )
+
+
+def local_fs_conf(master: str, caller_conf: dict[str, str]) -> dict[str, str]:
+    """The ``file://`` entries ``get_spark`` sets over ``caller_conf`` (the
+    caller's own entries): for a ``local[...]`` master the jar goes first on
+    the caller's ``spark.driver.extraClassPath``, and ``NO_FORK_FS`` becomes
+    ``fs.file.impl`` unless the caller names one. Any other master gets
+    nothing, since its executors would not have the jar."""
+    if not _LOCAL_MASTER.fullmatch(master):
+        return {}
+    class_path = [NO_FORK_FS_JAR, caller_conf.get("spark.driver.extraClassPath")]
+    conf = {"spark.driver.extraClassPath": os.pathsep.join(filter(None, class_path))}
+    if "spark.hadoop.fs.file.impl" not in caller_conf:
+        conf["spark.hadoop.fs.file.impl"] = NO_FORK_FS
+    return conf
 
 
 def get_spark(
@@ -80,14 +110,11 @@ def get_spark(
         # (worker_daemon.py): ~0.2 CPU s less per Python task
         builder = builder.config("spark.python.daemon.module", WORKER_DAEMON)
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
-    if env_conf:
-        import json
-
-        for k, v in json.loads(env_conf).items():
-            builder = builder.config(k, str(v))
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    caller_conf = {k: str(v) for k, v in json.loads(env_conf or "{}").items()}
+    caller_conf.update(extra_conf or {})
+    caller_conf.update(local_fs_conf(master, caller_conf))
+    for k, v in caller_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -776,3 +776,39 @@ def test_checksummed_batch_migration_runs_at_most_five_jobs(spark, tmp_path):
     assert res["status"] == "completed", res.get("error")
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 5, jobs
+
+
+# --- empty keyed tables, empty-string keys ----------------------------------
+
+
+@pytest.mark.parametrize("strategy", ["batch", "per_partition"])
+def test_empty_keyed_table_takes_the_empty_path(spark, tmp_path, strategy):
+    """A keyed table with no rows has no partition to discover; it is copied
+    in one (empty) write and completes with 0 partitions and 0 rows (C7)."""
+    src_dir = tmp_path / "src"
+    spark.createDataFrame([], "k string, v int").write.parquet(str(src_dir / "t.parquet"))
+    cfg = make_cfg(
+        tmp_path, source_dir=str(src_dir), partition_keys=["k"], strategy=strategy, checksum=True
+    )
+    res = migrate_single_table(spark, cfg, "t")
+    assert res["status"] == "completed", res.get("error")
+    assert (res["total_partitions"], res["completed_partitions"], res["migrated_rows"]) == (0, 0, 0)
+    assert res["check_results"] == []
+    assert spark.read.schema("v int, k string").parquet(str(tmp_path / "dest" / "t")).count() == 0
+    assert ledger.is_table_completed(ledger.load_progress(cfg.progress_path), "default", "t")
+
+
+@pytest.mark.parametrize("strategy", ["batch", "per_partition"])
+def test_empty_string_partition_value_is_refused_before_copy(spark, tmp_path, strategy):
+    """``''`` would read back as NULL from its partition directory and share
+    NULL's ledger text, so the table fails before anything is written."""
+    src_dir = tmp_path / "src"
+    spark.createDataFrame([("", 1), (None, 2), ("a", 3)], "k string, v int").write.parquet(
+        str(src_dir / "t.parquet")
+    )
+    cfg = make_cfg(tmp_path, source_dir=str(src_dir), partition_keys=["k"], strategy=strategy)
+    res = migrate_single_table(spark, cfg, "t")
+    assert res["status"] == "failed"
+    assert "'k'" in res["error"] and "''" in res["error"], res["error"]
+    assert not os.path.exists(tmp_path / "dest" / "_staging_t")
+    assert ledger.completed_partitions(ledger.load_progress(cfg.progress_path), "default", "t") == []
