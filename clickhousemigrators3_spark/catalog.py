@@ -109,6 +109,52 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# Owned cache residency: every persist() an operator keeps across queries is
+# registered under an owner name, keyed by (session, owner, dataset tag). An
+# owner keeps one dataset per session (persisting it for another dataset
+# unpersists the previous one), and release() gives plan checks a session
+# with no owned InMemoryRelation for CacheManager to substitute.
+_OWNED: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
+
+
+def _drop_owned(keys: list[tuple[int, str, str]]) -> None:
+    """Unpersist and forget ``keys`` of ``_OWNED`` (a stopped session's
+    entries are only forgotten). Caller must hold ``_TABLE_CACHE_LOCK``."""
+    for k in keys:
+        sess, df = _OWNED.pop(k)
+        if not session_stopped(sess):
+            df.unpersist()
+
+
+def persist_owned(spark: SparkSession, owner: str, sf_dir: str, df: DataFrame) -> DataFrame:
+    """``df.persist()`` as ``owner``'s residency for the dataset ``sf_dir``
+    in ``spark``; returns the DataFrame to use, which is the one already
+    persisted when ``owner`` holds this dataset. Entries of stopped
+    sessions and ``owner``'s entry for another dataset are dropped first."""
+    sid, tag = id(spark._jsparkSession), dataset_tag(sf_dir)
+    with _TABLE_CACHE_LOCK:
+        _drop_owned(
+            [
+                k
+                for k, (sess, _) in list(_OWNED.items())
+                if session_stopped(sess) or (k[:2] == (sid, owner) and k[2] != tag)
+            ]
+        )
+        held = _OWNED.get((sid, owner, tag))
+        if held is not None:
+            return held[1]
+        _OWNED[(sid, owner, tag)] = (spark, df.persist())
+    return df
+
+
+def release(spark: SparkSession, owner: str | None = None) -> None:
+    """Unpersist every owned residency of ``spark`` (only ``owner``'s when
+    given)."""
+    sid = id(spark._jsparkSession)
+    with _TABLE_CACHE_LOCK:
+        _drop_owned([k for k in list(_OWNED) if k[0] == sid and owner in (None, k[1])])
+
+
 def register_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:

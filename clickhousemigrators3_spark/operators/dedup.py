@@ -36,7 +36,7 @@ from pyspark.sql.window import Window
 # caches nothing.
 _CORPUS_CACHE = StorageLevel.MEMORY_AND_DISK
 
-from ..catalog import load_table
+from ..catalog import load_table, persist_owned
 from ..functions.hashing import oracle_hash_sql, stable_hash32, stable_hash60
 from ..functions.text import exploded_word_shingles, sql_word_shingles
 from ..functions.vectors import (
@@ -256,14 +256,14 @@ def _lsh_scored_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     two shuffles of the biggest table in the pipeline. Collapsing signature
     + set construction into one aggregation means the corpus-sized relation
     is shuffled exactly once; the per-doc relation (one row per document,
-    set bounded by document length — NOT corpus size) is what's persisted,
-    and candidate verification is two joins against it (AQE broadcasts them
-    when small; they stay shuffle joins at 10^9 docs) followed by a narrow
+    set bounded by document length — NOT corpus size) is what's persisted
+    (owner ``lsh_perdoc``, ``catalog.persist_owned``), and candidate
+    verification is two joins against it (AQE broadcasts them when small;
+    they stay shuffle joins at 10^9 docs) followed by a narrow
     ``array_intersect``. Overlap is still computed over hashed shingle sets
     (4-byte elements, not strings), identically in the oracle."""
     d = load_table(spark, sf_dir, "documents")
-    per_doc = lsh_perdoc(d)
-    per_doc.persist()
+    per_doc = persist_owned(spark, "lsh_perdoc", sf_dir, lsh_perdoc(d))
     bands = lsh_bands(per_doc)
     a = bands.select(
         F.col("doc_id").alias("a_id"), F.col("band").alias("band"), F.col("sig").alias("sig")

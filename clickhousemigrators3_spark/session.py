@@ -13,6 +13,19 @@ It is Hadoop's checksummed local file system, but sets file modes in the JVM
 instead of forking ``chmod`` per file and directory, which Hadoop does when
 its native library is missing (Spark ships none). Executors of a local
 master live in the driver JVM, so the driver classpath is enough.
+
+The same local-master step also puts ``LOCAL_JIT_FLAGS`` first on the driver's
+``spark.driver.extraJavaOptions``: the C2 (tier-4) compile thresholds at 10×
+HotSpot's defaults (5000, 600, 15000, 40000). A local session is short-lived,
+and with the defaults its C1/C2 compiler threads spend about a third of a
+one-shot ``migrate``'s CPU compiling start-up-only code with C2. With the
+flags, C1 still compiles everything early and C2 compiles only code that stays
+hot, such as Spark's generated loops in a long copy. The cost falls on long
+sessions that repeat short queries: code below the raised thresholds keeps
+running as C1's slower profiled code, and ``bench.py``'s warm sf0.1 headline
+total rose by a quarter. C1 alone (``-XX:TieredStopAtLevel=1``) starts faster
+still but runs hot loops up to ~1.5× slower (``docs/SCALE.md``, "JIT on local
+masters"). Cluster masters get no flags: their long-lived JVMs want C2 early.
 """
 
 from __future__ import annotations
@@ -31,6 +44,10 @@ NO_FORK_FS_JAR = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "jvm", "nofork-local-fs.jar"
 )
 _LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+LOCAL_JIT_FLAGS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def worker_can_import_daemon(cwd: str, pythonpath: str) -> bool:
@@ -46,16 +63,23 @@ def worker_can_import_daemon(cwd: str, pythonpath: str) -> bool:
     )
 
 
-def local_fs_conf(master: str, caller_conf: dict[str, str]) -> dict[str, str]:
-    """The ``file://`` entries ``get_spark`` sets over ``caller_conf`` (the
-    caller's own entries): for a ``local[...]`` master the jar goes first on
-    the caller's ``spark.driver.extraClassPath``, and ``NO_FORK_FS`` becomes
-    ``fs.file.impl`` unless the caller names one. Any other master gets
-    nothing, since its executors would not have the jar."""
+def local_driver_conf(master: str, caller_conf: dict[str, str]) -> dict[str, str]:
+    """The driver entries ``get_spark`` sets over ``caller_conf`` (the
+    caller's own entries) for a ``local[...]`` master: the jar goes first on
+    the caller's ``spark.driver.extraClassPath``, ``NO_FORK_FS`` becomes
+    ``fs.file.impl`` unless the caller names one, and ``LOCAL_JIT_FLAGS`` go
+    first on the caller's ``spark.driver.extraJavaOptions`` (HotSpot keeps a
+    flag's last value, so the caller's own flags win). Any other master gets
+    nothing, since its executors would not have the jar and its long-lived
+    JVMs want C2 early."""
     if not _LOCAL_MASTER.fullmatch(master):
         return {}
     class_path = [NO_FORK_FS_JAR, caller_conf.get("spark.driver.extraClassPath")]
-    conf = {"spark.driver.extraClassPath": os.pathsep.join(filter(None, class_path))}
+    java_options = [LOCAL_JIT_FLAGS, caller_conf.get("spark.driver.extraJavaOptions")]
+    conf = {
+        "spark.driver.extraClassPath": os.pathsep.join(filter(None, class_path)),
+        "spark.driver.extraJavaOptions": " ".join(filter(None, java_options)),
+    }
     if "spark.hadoop.fs.file.impl" not in caller_conf:
         conf["spark.hadoop.fs.file.impl"] = NO_FORK_FS
     return conf
@@ -112,7 +136,7 @@ def get_spark(
     env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF")
     caller_conf = {k: str(v) for k, v in json.loads(env_conf or "{}").items()}
     caller_conf.update(extra_conf or {})
-    caller_conf.update(local_fs_conf(master, caller_conf))
+    caller_conf.update(local_driver_conf(master, caller_conf))
     for k, v in caller_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

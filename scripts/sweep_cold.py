@@ -29,8 +29,7 @@ def main() -> int:
     reg = load_all()
     names = [n for n in sorted(reg) if not only or n in only]
     if not names:
-        print("no queries matched", file=sys.stderr)
-        return 1
+        return summarize(sf_dir, [])
     spark = get_spark(
         app_name="sweep_cold",
         extra_conf={
@@ -55,7 +54,16 @@ def main() -> int:
         rows.append((dt, name, note))
         print(f"# {name}: {dt:.2f}s ({note})", file=sys.stderr)
 
-    rows.sort(reverse=True)
+    return summarize(sf_dir, rows)
+
+
+def summarize(sf_dir: str, rows: list[tuple[float, str, str]]) -> int:
+    """Print ``(seconds, name, note)`` rows slowest first and the one-line
+    summary; the exit code is 1 when a query failed or none matched."""
+    if not rows:
+        print("no queries matched", file=sys.stderr)
+        return 1
+    rows = sorted(rows, reverse=True)
     for dt, name, note in rows:
         print(f"{dt:8.2f}s  {name}  ({note})")
     total = sum(r[0] for r in rows)

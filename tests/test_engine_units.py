@@ -237,6 +237,67 @@ def test_probe_sink(spark, tmp_path):
     assert probe_sink(spark, str(tmp_path)) is True
 
 
+def test_persist_owned_keeps_one_dataset_per_owner(spark, tmp_path):
+    from clickhousemigrators3_spark.catalog import persist_owned, release
+
+    a = spark.range(0, 10).selectExpr("id * 7 AS x")
+    b = spark.range(0, 10).selectExpr("id * 11 AS x")
+    assert persist_owned(spark, "test_owner", str(tmp_path / "a"), a) is a
+    assert a.storageLevel.useMemory
+    # the owner already holds this dataset: its DataFrame comes back
+    assert persist_owned(spark, "test_owner", str(tmp_path / "a"), spark.range(3)) is a
+    persist_owned(spark, "test_owner", str(tmp_path / "b"), b)
+    assert not a.storageLevel.useMemory and b.storageLevel.useMemory
+    release(spark, owner="another_owner")
+    assert b.storageLevel.useMemory
+    release(spark)
+    assert not b.storageLevel.useMemory
+
+
+def test_persist_owned_forgets_stopped_sessions_without_unpersisting():
+    from types import SimpleNamespace
+
+    from clickhousemigrators3_spark import catalog
+
+    class Frame:
+        released = False
+
+        def persist(self):
+            return self
+
+        def unpersist(self):
+            self.released = True
+
+    def session(jsc):
+        return SimpleNamespace(_jsparkSession=object(), _sc=SimpleNamespace(_jsc=jsc))
+
+    stopped, live = session(None), session(object())
+    gone = Frame()
+    catalog.persist_owned(stopped, "o", "/d", gone)
+    catalog.release(stopped)
+    catalog.persist_owned(stopped, "o", "/d", gone)
+    kept = catalog.persist_owned(live, "o", "/d", Frame())
+    assert not gone.released
+    assert all(s is not stopped for s, _ in catalog._OWNED.values())
+    catalog.release(live)
+    assert kept.released
+
+
+def test_sweep_cold_summary_on_no_match(capsys):
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "sweep_cold",
+        os.path.join(os.path.dirname(__file__), "..", "scripts", "sweep_cold.py"),
+    )
+    sweep = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sweep)
+    assert sweep.summarize("/d", []) == 1
+    out = capsys.readouterr()
+    assert out.out == "" and "no queries matched" in out.err
+
+
 def test_salted_join_equivalence(spark):
     from clickhousemigrators3_spark.functions.skew import salted_agg_count, salted_join
     from clickhousemigrators3_spark.catalog import load_table

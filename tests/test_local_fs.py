@@ -1,7 +1,8 @@
 """The session's ``file://`` file system (``jvm/NoForkLocalFileSystem.java``):
 Hadoop's checksummed local file system with file modes set in the JVM, the
-rename rule Spark's default ``file://`` class keeps, the conf rules that
-install it, and the committed jar's provenance."""
+rename rule Spark's default ``file://`` class keeps, the local-master driver
+conf rules that install it together with the JIT flags, and the committed
+jar's provenance."""
 
 from __future__ import annotations
 
@@ -13,10 +14,16 @@ import zipfile
 
 import pytest
 
-from clickhousemigrators3_spark.session import NO_FORK_FS, NO_FORK_FS_JAR, local_fs_conf
+from clickhousemigrators3_spark.session import (
+    LOCAL_JIT_FLAGS,
+    NO_FORK_FS,
+    NO_FORK_FS_JAR,
+    local_driver_conf,
+)
 
 _FS_IMPL = "spark.hadoop.fs.file.impl"
 _CLASS_PATH = "spark.driver.extraClassPath"
+_JAVA_OPTIONS = "spark.driver.extraJavaOptions"
 
 
 @pytest.fixture
@@ -94,26 +101,48 @@ def test_rename_onto_an_existing_file_is_refused(spark, local_fs, tmp_path):
     assert (src.read_text(), dst.read_text()) == ("from a", "from b")
 
 
+def test_session_driver_has_the_jit_thresholds(spark):
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert bean.getVMOption("Tier4InvocationThreshold").getValue() == "50000"
+    assert bean.getVMOption("Tier4BackEdgeThreshold").getValue() == "400000"
+
+
 # --- conf rules (no JVM) ----------------------------------------------------
 
 
 @pytest.mark.parametrize("master", ["spark://host:7077", "yarn", "local-cluster[2,1,1024]"])
 def test_non_local_master_gets_no_file_system_conf(master):
-    assert local_fs_conf(master, {_CLASS_PATH: "/x.jar"}) == {}
+    assert local_driver_conf(master, {_CLASS_PATH: "/x.jar", _JAVA_OPTIONS: "-Dx=1"}) == {}
 
 
 @pytest.mark.parametrize("master", ["local", "local[4]", "local[*]"])
 def test_local_master_gets_the_class_and_jar(master):
-    assert local_fs_conf(master, {}) == {_FS_IMPL: NO_FORK_FS, _CLASS_PATH: NO_FORK_FS_JAR}
+    assert local_driver_conf(master, {}) == {
+        _FS_IMPL: NO_FORK_FS,
+        _CLASS_PATH: NO_FORK_FS_JAR,
+        _JAVA_OPTIONS: LOCAL_JIT_FLAGS,
+    }
+
+
+@pytest.mark.parametrize("master", ["local", "local[4]"])
+def test_local_master_gets_the_jit_flags_before_the_callers(master):
+    caller = "-Djava.io.tmpdir=/t -XX:Tier4InvocationThreshold=7000"
+    assert local_driver_conf(master, {_JAVA_OPTIONS: caller})[_JAVA_OPTIONS] == (
+        "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+        "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000 " + caller
+    )
 
 
 def test_caller_class_path_is_kept_after_the_jar():
-    conf = local_fs_conf("local[2]", {_CLASS_PATH: "/x.jar"})
+    conf = local_driver_conf("local[2]", {_CLASS_PATH: "/x.jar"})
     assert conf[_CLASS_PATH] == NO_FORK_FS_JAR + os.pathsep + "/x.jar"
 
 
 def test_caller_file_system_wins():
-    assert _FS_IMPL not in local_fs_conf("local[2]", {_FS_IMPL: "some.Other"})
+    assert _FS_IMPL not in local_driver_conf("local[2]", {_FS_IMPL: "some.Other"})
 
 
 # --- packaging and provenance -----------------------------------------------

@@ -4,7 +4,19 @@ avoiding global sorts, column pruning)."""
 
 from __future__ import annotations
 
+import pytest
+
+from clickhousemigrators3_spark.catalog import release
+
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(autouse=True)
+def _fresh_plans(spark):
+    """Each plan is built in a session with no owned cache residency, so
+    CacheManager cannot swap a subtree for an earlier query's
+    ``InMemoryTableScan``."""
+    release(spark)
 
 
 def _plan(df) -> str:
@@ -412,6 +424,17 @@ def test_minhash_perdoc_single_exchange(spark):
     plan = _plan(lsh_perdoc(load_table(spark, SF_DIR, "documents")))
     assert plan.count("Exchange hashpartitioning") == 1
     assert "collect_set" in plan
+
+
+def test_minhash_perdoc_single_exchange_after_lsh_pairs(spark):
+    """The LSH pipeline's persisted per-doc relation is owned, so releasing
+    it after a ``dedup_minhash_lsh_pairs`` run gives the per-doc plan back
+    its own single Exchange."""
+    from clickhousemigrators3_spark.operators.dedup import dedup_minhash_lsh_pairs
+
+    dedup_minhash_lsh_pairs(spark, SF_DIR).count()
+    release(spark)
+    test_minhash_perdoc_single_exchange(spark)
 
 
 def test_ann_lsh_hyperplanes_are_local_relation(spark):
