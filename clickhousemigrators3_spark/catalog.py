@@ -109,7 +109,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Owned cache residency: every persist() an operator keeps across queries is
+# Owned cache residency: a persist() an operator keeps across queries is
 # registered under an owner name, keyed by (session, owner, dataset tag). An
 # owner keeps one dataset per session (persisting it for another dataset
 # unpersists the previous one), and release() gives plan checks a session
@@ -128,9 +128,9 @@ def _drop_owned(keys: list[tuple[int, str, str]]) -> None:
 
 def persist_owned(spark: SparkSession, owner: str, sf_dir: str, df: DataFrame) -> DataFrame:
     """``df.persist()`` as ``owner``'s residency for the dataset ``sf_dir``
-    in ``spark``; returns the DataFrame to use, which is the one already
-    persisted when ``owner`` holds this dataset. Entries of stopped
-    sessions and ``owner``'s entry for another dataset are dropped first."""
+    in ``spark``. Entries of stopped sessions and ``owner``'s entry for
+    another dataset are dropped first; an equal plan persisted again reuses
+    CacheManager's data."""
     sid, tag = id(spark._jsparkSession), dataset_tag(sf_dir)
     with _TABLE_CACHE_LOCK:
         _drop_owned(
@@ -140,9 +140,6 @@ def persist_owned(spark: SparkSession, owner: str, sf_dir: str, df: DataFrame) -
                 if session_stopped(sess) or (k[:2] == (sid, owner) and k[2] != tag)
             ]
         )
-        held = _OWNED.get((sid, owner, tag))
-        if held is not None:
-            return held[1]
         _OWNED[(sid, owner, tag)] = (spark, df.persist())
     return df
 

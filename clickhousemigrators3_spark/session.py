@@ -14,18 +14,19 @@ instead of forking ``chmod`` per file and directory, which Hadoop does when
 its native library is missing (Spark ships none). Executors of a local
 master live in the driver JVM, so the driver classpath is enough.
 
-The same local-master step also puts ``LOCAL_JIT_FLAGS`` first on the driver's
-``spark.driver.extraJavaOptions``: the C2 (tier-4) compile thresholds at 10×
-HotSpot's defaults (5000, 600, 15000, 40000). A local session is short-lived,
-and with the defaults its C1/C2 compiler threads spend about a third of a
-one-shot ``migrate``'s CPU compiling start-up-only code with C2. With the
-flags, C1 still compiles everything early and C2 compiles only code that stays
-hot, such as Spark's generated loops in a long copy. The cost falls on long
-sessions that repeat short queries: code below the raised thresholds keeps
-running as C1's slower profiled code, and ``bench.py``'s warm sf0.1 headline
-total rose by a quarter. C1 alone (``-XX:TieredStopAtLevel=1``) starts faster
-still but runs hot loops up to ~1.5× slower (``docs/SCALE.md``, "JIT on local
-masters"). Cluster masters get no flags: their long-lived JVMs want C2 early.
+The same local-master step also sets ``spark.driver.defaultJavaOptions`` to
+``LOCAL_JIT_FLAGS`` unless the caller sets it: the C2 (tier-4) compile
+thresholds at 3× HotSpot's defaults (5000, 600, 15000, 40000). With the
+defaults, a local driver's C1/C2 compiler threads spend about a third of a
+one-shot ``migrate``'s set-up compiling start-up-only code with C2. With the
+flags, C1 still compiles everything early and C2 waits for code that stays
+hot. Spark puts the default options before ``spark.driver.extraJavaOptions``
+and HotSpot keeps a flag's last value, so a caller's own ``-XX:`` flag wins.
+10× thresholds cut set-up further but left the warm short queries of a long
+session (``bench.py``) a quarter slower in C1's profiled code, and C1 alone
+(``-XX:TieredStopAtLevel=1``) runs hot loops up to ~1.5× slower
+(``docs/SCALE.md``, "JIT on local masters"). Cluster masters get no flags:
+their long-lived JVMs want C2 early.
 """
 
 from __future__ import annotations
@@ -45,8 +46,8 @@ NO_FORK_FS_JAR = os.path.join(
 )
 _LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
 LOCAL_JIT_FLAGS = (
-    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
-    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+    "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
+    "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000"
 )
 
 
@@ -66,20 +67,17 @@ def worker_can_import_daemon(cwd: str, pythonpath: str) -> bool:
 def local_driver_conf(master: str, caller_conf: dict[str, str]) -> dict[str, str]:
     """The driver entries ``get_spark`` sets over ``caller_conf`` (the
     caller's own entries) for a ``local[...]`` master: the jar goes first on
-    the caller's ``spark.driver.extraClassPath``, ``NO_FORK_FS`` becomes
-    ``fs.file.impl`` unless the caller names one, and ``LOCAL_JIT_FLAGS`` go
-    first on the caller's ``spark.driver.extraJavaOptions`` (HotSpot keeps a
-    flag's last value, so the caller's own flags win). Any other master gets
-    nothing, since its executors would not have the jar and its long-lived
-    JVMs want C2 early."""
+    the caller's ``spark.driver.extraClassPath``, and ``NO_FORK_FS`` becomes
+    ``fs.file.impl`` and ``LOCAL_JIT_FLAGS`` the driver's
+    ``defaultJavaOptions`` unless the caller names its own. Any other master
+    gets nothing, since its executors would not have the jar and its
+    long-lived JVMs want C2 early."""
     if not _LOCAL_MASTER.fullmatch(master):
         return {}
     class_path = [NO_FORK_FS_JAR, caller_conf.get("spark.driver.extraClassPath")]
-    java_options = [LOCAL_JIT_FLAGS, caller_conf.get("spark.driver.extraJavaOptions")]
-    conf = {
-        "spark.driver.extraClassPath": os.pathsep.join(filter(None, class_path)),
-        "spark.driver.extraJavaOptions": " ".join(filter(None, java_options)),
-    }
+    conf = {"spark.driver.extraClassPath": os.pathsep.join(filter(None, class_path))}
+    if "spark.driver.defaultJavaOptions" not in caller_conf:
+        conf["spark.driver.defaultJavaOptions"] = LOCAL_JIT_FLAGS
     if "spark.hadoop.fs.file.impl" not in caller_conf:
         conf["spark.hadoop.fs.file.impl"] = NO_FORK_FS
     return conf

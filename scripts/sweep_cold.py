@@ -29,7 +29,8 @@ def main() -> int:
     reg = load_all()
     names = [n for n in sorted(reg) if not only or n in only]
     if not names:
-        return summarize(sf_dir, [])
+        print("no queries matched", file=sys.stderr)
+        return 1
     spark = get_spark(
         app_name="sweep_cold",
         extra_conf={
@@ -54,16 +55,7 @@ def main() -> int:
         rows.append((dt, name, note))
         print(f"# {name}: {dt:.2f}s ({note})", file=sys.stderr)
 
-    return summarize(sf_dir, rows)
-
-
-def summarize(sf_dir: str, rows: list[tuple[float, str, str]]) -> int:
-    """Print ``(seconds, name, note)`` rows slowest first and the one-line
-    summary; the exit code is 1 when a query failed or none matched."""
-    if not rows:
-        print("no queries matched", file=sys.stderr)
-        return 1
-    rows = sorted(rows, reverse=True)
+    rows.sort(reverse=True)
     for dt, name, note in rows:
         print(f"{dt:8.2f}s  {name}  ({note})")
     total = sum(r[0] for r in rows)

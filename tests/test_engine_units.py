@@ -244,8 +244,6 @@ def test_persist_owned_keeps_one_dataset_per_owner(spark, tmp_path):
     b = spark.range(0, 10).selectExpr("id * 11 AS x")
     assert persist_owned(spark, "test_owner", str(tmp_path / "a"), a) is a
     assert a.storageLevel.useMemory
-    # the owner already holds this dataset: its DataFrame comes back
-    assert persist_owned(spark, "test_owner", str(tmp_path / "a"), spark.range(3)) is a
     persist_owned(spark, "test_owner", str(tmp_path / "b"), b)
     assert not a.storageLevel.useMemory and b.storageLevel.useMemory
     release(spark, owner="another_owner")
@@ -281,21 +279,6 @@ def test_persist_owned_forgets_stopped_sessions_without_unpersisting():
     assert all(s is not stopped for s, _ in catalog._OWNED.values())
     catalog.release(live)
     assert kept.released
-
-
-def test_sweep_cold_summary_on_no_match(capsys):
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "sweep_cold",
-        os.path.join(os.path.dirname(__file__), "..", "scripts", "sweep_cold.py"),
-    )
-    sweep = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(sweep)
-    assert sweep.summarize("/d", []) == 1
-    out = capsys.readouterr()
-    assert out.out == "" and "no queries matched" in out.err
 
 
 def test_salted_join_equivalence(spark):

@@ -24,6 +24,7 @@ from clickhousemigrators3_spark.session import (
 _FS_IMPL = "spark.hadoop.fs.file.impl"
 _CLASS_PATH = "spark.driver.extraClassPath"
 _JAVA_OPTIONS = "spark.driver.extraJavaOptions"
+_DEFAULT_JAVA_OPTIONS = "spark.driver.defaultJavaOptions"
 
 
 @pytest.fixture
@@ -106,8 +107,8 @@ def test_session_driver_has_the_jit_thresholds(spark):
     bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
-    assert bean.getVMOption("Tier4InvocationThreshold").getValue() == "50000"
-    assert bean.getVMOption("Tier4BackEdgeThreshold").getValue() == "400000"
+    assert bean.getVMOption("Tier4InvocationThreshold").getValue() == "15000"
+    assert bean.getVMOption("Tier4BackEdgeThreshold").getValue() == "120000"
 
 
 # --- conf rules (no JVM) ----------------------------------------------------
@@ -123,17 +124,26 @@ def test_local_master_gets_the_class_and_jar(master):
     assert local_driver_conf(master, {}) == {
         _FS_IMPL: NO_FORK_FS,
         _CLASS_PATH: NO_FORK_FS_JAR,
-        _JAVA_OPTIONS: LOCAL_JIT_FLAGS,
+        _DEFAULT_JAVA_OPTIONS: LOCAL_JIT_FLAGS,
     }
 
 
 @pytest.mark.parametrize("master", ["local", "local[4]"])
-def test_local_master_gets_the_jit_flags_before_the_callers(master):
-    caller = "-Djava.io.tmpdir=/t -XX:Tier4InvocationThreshold=7000"
-    assert local_driver_conf(master, {_JAVA_OPTIONS: caller})[_JAVA_OPTIONS] == (
-        "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
-        "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000 " + caller
+def test_local_master_gets_the_jit_flags_as_default_java_options(master):
+    """Spark puts ``defaultJavaOptions`` before the caller's untouched
+    ``extraJavaOptions``, so a caller's own ``-XX:`` flag comes last and wins."""
+    caller = {_JAVA_OPTIONS: "-Djava.io.tmpdir=/t -XX:Tier4InvocationThreshold=7000"}
+    conf = local_driver_conf(master, caller)
+    assert _JAVA_OPTIONS not in conf
+    assert conf[_DEFAULT_JAVA_OPTIONS] == (
+        "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=1800 "
+        "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000"
     )
+
+
+def test_caller_default_java_options_win():
+    conf = local_driver_conf("local[2]", {_DEFAULT_JAVA_OPTIONS: "-Dx=1"})
+    assert _DEFAULT_JAVA_OPTIONS not in conf
 
 
 def test_caller_class_path_is_kept_after_the_jar():
