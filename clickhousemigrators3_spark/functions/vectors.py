@@ -48,10 +48,6 @@ def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
 # --- DuckDB twins: expression over DOUBLE[] lists --------------------------
 
 
-def sql_to_double(expr: str) -> str:
-    return f"CAST({expr} AS DOUBLE[])"
-
-
 def sql_dot(a: str, b: str) -> str:
     return f"list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2]))"
 

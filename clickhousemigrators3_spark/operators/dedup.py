@@ -1153,19 +1153,17 @@ def _semdedup_prune_assigned(
     matmul per cluster inside Arrow-batched ``applyInPandas``) — drop any
     vector whose cosine to a lower-id cluster-mate reaches the threshold.
 
-    Scale: ONE corpus shuffle on the 8-byte cluster key (identical data
-    movement to the JVM self-join twin below), then O(|cluster|^2)
-    vectorized compute per group — sum(|cluster|^2) total, never
-    |corpus|^2. The paper keeps cluster sizes near-constant by scaling K
-    with the corpus (50k clusters at 10^9 docs), which also bounds each
-    group's in-memory V. Measured at sf0.1: 0.48 s vs 1.75 s for the
-    interpreted-HOF self-join (`_semdedup_prune_assigned_jvm`, kept as
-    the pure-JVM twin and equality-tested) — the per-pair dot is where
-    the time goes, and a gram matrix is the vectorized form of exactly
-    that work. Float note: BLAS accumulation order differs from the
-    sequential HOF fold; at the 6-decimal rounding of the output the
-    results are bit-identical, and a threshold flip would need a pair
-    within ~1e-13 of the threshold."""
+    Scale: ONE corpus shuffle on the 8-byte cluster key, then
+    O(|cluster|^2) vectorized compute per group — sum(|cluster|^2) total,
+    never |corpus|^2. The paper keeps cluster sizes near-constant by
+    scaling K with the corpus (50k clusters at 10^9 docs), which also
+    bounds each group's in-memory V. Measured at sf0.1: 0.48 s vs 1.75 s
+    for a pure-JVM self-join on the cluster key with a higher-order-function
+    dot product, which Spark evaluates interpreted — the per-pair dot is
+    where the time goes, and a gram matrix is the vectorized form of
+    exactly that work. Float note: BLAS accumulation order differs from a
+    sequential fold; at the 6-decimal rounding of the output a threshold
+    flip would need a pair within ~1e-13 of the threshold."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (
@@ -1212,43 +1210,6 @@ def _semdedup_prune_assigned(
         assign.select("cluster", "vec_id", "v")
         .groupby("cluster")
         .applyInPandas(_gram, out_schema)
-        .orderBy("cluster", "pruned_id")
-    )
-
-
-def _semdedup_prune_assigned_jvm(
-    assign: DataFrame, threshold: float = SEMDEDUP_COS
-) -> DataFrame:
-    """Pure-JVM twin of the prune: self-join on the cluster key with
-    pre-projected norms (``cosine_pre`` — bit-identical to inline cosine),
-    so the per-pair work is a single HOF dot product. Same shuffle
-    topology as the gram form; ~3.5x slower at sf0.1 because Spark's
-    higher-order functions evaluate interpreted, not codegen'd.
-    (A fully-unrolled flat dot was tried and REJECTED: the 64-term
-    expression tree blows up codegen and measures ~2x slower than the HOF
-    fold at sf0.1.)"""
-    pre = assign.withColumn("_n", norm(F.col("v")))
-    a = pre.select(
-        "cluster",
-        F.col("vec_id").alias("a_id"),
-        F.col("v").alias("va"),
-        F.col("_n").alias("na"),
-    )
-    b = pre.select(
-        "cluster",
-        F.col("vec_id").alias("b_id"),
-        F.col("v").alias("vb"),
-        F.col("_n").alias("nb"),
-    )
-    return (
-        a.join(b, "cluster")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn(
-            "_c", cosine_pre(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
-        )
-        .filter(F.col("_c") >= threshold)
-        .groupBy("cluster", F.col("b_id").alias("pruned_id"))
-        .agg(F.round(F.max("_c"), 6).alias("max_cos_in_cluster"))
         .orderBy("cluster", "pruned_id")
     )
 

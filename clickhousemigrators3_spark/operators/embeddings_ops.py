@@ -238,18 +238,6 @@ def _spark_dot_sql(a: str, b: str) -> str:
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
 
 
-def _spark_cosine_sql(a: str, b: str) -> str:
-    """Spark-SQL string twin of functions.vectors.cosine — same guard, same
-    operation order, so values are bit-identical to the Column form."""
-    d = _spark_dot_sql(a, b)
-    na = f"sqrt({_spark_dot_sql(a, a)})"
-    nb = f"sqrt({_spark_dot_sql(b, b)})"
-    return (
-        f"(CASE WHEN {na} = 0D OR {nb} = 0D THEN 0.0D "
-        f"ELSE {d} / ({na} * {nb}) END)"
-    )
-
-
 def _training_parts(view: str) -> list[str]:
     """Shared CTE list for the fixed-depth Lloyd chain (see _training_sql
     / _assign_training_sql).

@@ -1,15 +1,10 @@
-"""Grouped Pandas operators — ``applyInPandas`` for semantics the built-in
-operators genuinely can't express per-group (SURVEY §7.3 "custom
-operators", option b).
-
-Kept deliberately rare: everything else in this engine is JVM expressions.
-These two show the full plumbing — grouped Arrow batches in, typed schema
-out — with deterministic math so one of them still oracles against DuckDB.
+"""Per-group statistics that read like ``applyInPandas`` jobs (SURVEY §7.3
+"custom operators", option b) but run as JVM windows and aggregates: no
+Python boundary, so each query stays inside whole-stage codegen and
+oracles against DuckDB.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,11 +28,7 @@ def grouped_zscore_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     and stddev over a ``PARTITION BY lang`` window, no Python boundary, so
     the whole query stays inside whole-stage codegen (this is literally the
     oracle SQL's own shape). Output rounded to 6dp because the two engines
-    compute variance by different algorithms (ulp-level drift).
-
-    The ``applyInPandas`` version survives as the unregistered
-    ``grouped_zscore_pandas_twin`` below — the grouped-Arrow plumbing demo,
-    asserted equal in tests — mirroring the trend query's discipline."""
+    compute variance by different algorithms (ulp-level drift)."""
     from pyspark.sql.window import Window
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
@@ -48,30 +39,6 @@ def grouped_zscore_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         6,
     )
     return d.select("doc_id", z.alias("z")).orderBy("doc_id")
-
-
-def grouped_zscore_pandas_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ``applyInPandas`` twin of grouped_zscore_per_lang — each language
-    group arrives as one pandas DataFrame. Kept unregistered as the
-    grouped-Arrow plumbing demo; tests assert it matches the JVM window
-    form.
-
-    Scale note: group = shuffle partition, so the biggest group must fit an
-    executor's Arrow buffer — per-lang groups are fine; for heavier keys the
-    registered two-pass window form (pure JVM) is the scale path."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-
-    def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
-        mean = pdf["n_chars"].mean()
-        std = pdf["n_chars"].std(ddof=1)
-        z = ((pdf["n_chars"] - mean) / std).round(6)
-        return pd.DataFrame({"doc_id": pdf["doc_id"], "z": z})
-
-    return (
-        d.groupBy("lang")
-        .applyInPandas(zscore, schema="doc_id long, z double")
-        .orderBy("doc_id")
-    )
 
 
 @register(
@@ -89,9 +56,7 @@ def grouped_linear_trend_per_user(spark: SparkSession, sf_dir: str) -> DataFrame
     ``regr_slope`` aggregate — one shuffle, pure JVM HashAggregate, no
     Python boundary (the DuckDB oracle uses its own ``regr_slope``). Slope
     reported per *day* and rounded to 6dp to absorb fp summation-order
-    drift between engines. The pandas normal-equations form survives as an
-    unverified-twin unit test (``grouped_linear_trend_pandas_twin``), the
-    same discipline functions/udfs.py uses for its JVM twins."""
+    drift between engines."""
     e = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     # micros/1e6 matches DuckDB's epoch(ts) bit-for-bit (UTC session TZ)
     epoch = F.unix_micros(F.col("ts").cast("timestamp")) / 1e6
@@ -106,35 +71,5 @@ def grouped_linear_trend_per_user(spark: SparkSession, sf_dir: str) -> DataFrame
             ).alias("slope_per_day"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy("user_id")
-    )
-
-
-def grouped_linear_trend_pandas_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The applyInPandas twin of grouped_linear_trend_per_user (centered
-    normal equations per group) — kept unregistered as the grouped-Arrow
-    plumbing demo; tests assert it matches the native aggregate."""
-    e = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
-
-    def trend(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            slope = 0.0
-        else:
-            x = pdf["ts"].astype("int64") / 1e9
-            x = x - x.mean()
-            y = pdf["value"]
-            denom = (x * x).sum()
-            slope = float((x * y).sum() / denom) if denom else 0.0
-        return pd.DataFrame(
-            {
-                "user_id": pdf["user_id"].iloc[:1],
-                "slope_per_day": [round(slope * 86400.0, 6)],
-                "n": [len(pdf)],
-            }
-        )
-
-    return (
-        e.groupBy("user_id")
-        .applyInPandas(trend, schema="user_id long, slope_per_day double, n long")
         .orderBy("user_id")
     )

@@ -84,45 +84,37 @@ def _load_manifest(dest_dir: str, table: str) -> dict | None:
         return json.load(f)
 
 
+def _write_manifest(dest_dir: str, table: str, manifest: dict) -> str:
+    """Replace the manifest in one step: write a temp file beside it, then
+    ``os.replace`` (the local analogue of the single-object PUT)."""
+    import json
+    import tempfile
+
+    path = _manifest_path(dest_dir, table)
+    d = os.path.dirname(os.path.abspath(path))
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d, prefix=".manifest_")
+    with os.fdopen(fd, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, path)
+    return path
+
+
 def publish_manifest(dest_dir: str, table: str, data_path: str) -> str:
     """Publish a new table version: the manifest carries a monotonically
     increasing ``version`` and the full version ``history`` (Iceberg-style
     snapshot log, one tiny JSON), so cutover stays a single small-object
     PUT while every previous data path remains resolvable for time travel
     until ``vacuum_versions`` prunes it."""
-    import json
-    import tempfile
-
-    prev = _load_manifest(dest_dir, table)
-    # .get defaults: a manifest written by the pre-versioning format
-    # ({table, data_path, published_at} only) is treated as version 1 so
-    # re-publishing over an upgraded dest_dir starts a history instead of
-    # raising KeyError.
-    prev_version = prev.get("version", 1) if prev else 0
-    version = prev_version + 1
-    history = list(prev.get("history", [])) if prev else []
-    if prev:
-        history.append(
-            {
-                "version": prev_version,
-                "data_path": prev.get("data_path"),
-                "published_at": prev.get("published_at"),
-            }
-        )
+    history = list_versions(dest_dir, table)
     manifest = {
         "table": table,
-        "version": version,
+        "version": history[-1]["version"] + 1 if history else 1,
         "data_path": data_path,
         "published_at": time.time(),
         "history": history,
     }
-    d = os.path.dirname(os.path.abspath(_manifest_path(dest_dir, table)))
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".manifest_")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, _manifest_path(dest_dir, table))  # local analogue of the PUT
-    return _manifest_path(dest_dir, table)
+    return _write_manifest(dest_dir, table, manifest)
 
 
 def resolve_manifest(
@@ -143,7 +135,9 @@ def resolve_manifest(
 
 
 def list_versions(dest_dir: str, table: str) -> list[dict]:
-    """All published versions, oldest first, current last."""
+    """All published versions, oldest first, current last. A manifest in
+    the pre-versioning format ({table, data_path, published_at} only) reads
+    as version 1, so re-publishing over it starts a history."""
     m = _load_manifest(dest_dir, table)
     if m is None:
         return []
@@ -161,20 +155,11 @@ def vacuum_versions(dest_dir: str, table: str, keep_last: int = 2) -> list[str]:
     ``keep_last`` and rewrite the manifest history. A data path still
     referenced by a kept version is never deleted (validate-before-destroy
     ordering, same posture as the partition copy)."""
-    import json
     import shutil
-    import tempfile
 
-    m = _load_manifest(dest_dir, table)
-    if m is None:
+    versions = list_versions(dest_dir, table)
+    if not versions:
         return []
-    versions = m.get("history", []) + [
-        {
-            "version": m.get("version", 1),
-            "data_path": m.get("data_path"),
-            "published_at": m.get("published_at"),
-        }
-    ]
     keep = versions[-max(keep_last, 1):]
     drop = versions[: len(versions) - len(keep)]
 
@@ -193,12 +178,7 @@ def vacuum_versions(dest_dir: str, table: str, keep_last: int = 2) -> list[str]:
     # data directories: a crash between the two steps leaves orphaned data
     # (re-vacuumable) rather than a manifest whose history points at
     # deleted paths (broken time travel).
-    m["history"] = keep[:-1]
-    d = os.path.dirname(os.path.abspath(_manifest_path(dest_dir, table)))
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".manifest_")
-    with os.fdopen(fd, "w") as f:
-        json.dump(m, f)
-    os.replace(tmp, _manifest_path(dest_dir, table))
+    _write_manifest(dest_dir, table, {"table": table, **keep[-1], "history": keep[:-1]})
     removed = []
     for v in drop:
         for p in _paths(v):
@@ -457,12 +437,7 @@ def migrate_single_table(
 
             # 5. partition discovery (M4) with per-partition row counts;
             # empty → fast path (C7)
-            if not keys:
-                discovered = []
-            elif server is None:
-                discovered = discover_partition_values(src, keys)
-            else:
-                discovered = discover_partition_values(src, keys, server)
+            discovered = discover_partition_values(src, keys, server) if keys else []
             parts = [p for p, _ in discovered]
             _refuse_empty_string_keys(keys, parts)
             part_strs = [ledger.serialize_partition(p) for p in parts]
@@ -470,8 +445,8 @@ def migrate_single_table(
 
             # 7. resume filter (C4/A6)
             done = ledger.completed_partitions(progress, DB, table) if cfg.resume else []
-            todo = ledger.remaining(part_strs, done)
-            todo_tuples = [p for p, s in zip(parts, part_strs) if s in todo]
+            todo = set(ledger.remaining(part_strs, done))
+            todo_pairs = [(p, s) for p, s in zip(parts, part_strs) if s in todo]
             ledger.init_table(progress, DB, table)
 
             # 9. total rows (A1): discovery's counts, read before the copy
@@ -482,37 +457,35 @@ def migrate_single_table(
             else:
                 total_rows = src.count()
 
-            # 10. copy (C1/S10); rows_witnessed = counts observed inside the
-            # write jobs themselves (zero extra scan) — complete only when
-            # this run copied every partition
-            rows_witnessed: int | None = None
-            full_copy = len(todo_tuples) == len(parts)
+            # 10. copy (C1/S10): one write per unit — each remaining
+            # partition (per_partition); every remaining partition at once
+            # (batch; None when that is all of them); or the whole table
+            # when it has no partitions (keyless, or keyed with no rows: the
+            # write leaves a staging directory even when empty, C7). With
+            # nothing left to copy, staging holds the prior run's data and
+            # validation below decides the outcome.
+            full_copy = len(todo_pairs) == len(parts)
             if not parts:
-                # keyless, or keyed with no rows: one write of the whole
-                # table, which leaves a staging directory even when empty (C7)
-                rows_witnessed = _copy_partitions(src, staging, keys, None)
+                units = [(None, [])]
             elif cfg.strategy == "per_partition":
-                witnessed = 0
-                for values, part_str in [
-                    (p, s) for p, s in zip(parts, part_strs) if s in todo
-                ]:
-                    witnessed += _copy_partitions(src, staging, keys, [values])
-                    if cfg.insert_interval:
-                        time.sleep(cfg.insert_interval)  # C2 throttle parity
+                units = [([p], [s]) for p, s in todo_pairs]
+            elif todo_pairs:
+                sel = None if full_copy else [p for p, _ in todo_pairs]
+                units = [(sel, [s for _, s in todo_pairs])]
+            else:
+                units = []
+            witnessed = 0
+            for i, (sel, unit_strs) in enumerate(units):
+                witnessed += _copy_partitions(src, staging, keys, sel)
+                if unit_strs:  # C3: one ledger flush per write
                     ledger.mark_partition(
-                        progress, DB, table, part_str, cfg.progress_path
-                    )  # C3
-                if full_copy:
-                    rows_witnessed = witnessed
-            elif todo_tuples:
-                sel = None if full_copy else todo_tuples
-                witnessed = _copy_partitions(src, staging, keys, sel)
-                if full_copy:
-                    rows_witnessed = witnessed
-                for part_str in todo:
-                    ledger.mark_partition(progress, DB, table, part_str, cfg.progress_path)
-            # todo empty with keys: nothing to copy — staging holds the
-            # prior run's data and validation below decides the outcome
+                        progress, DB, table, unit_strs, cfg.progress_path
+                    )
+                if cfg.insert_interval and i < len(units) - 1:
+                    time.sleep(cfg.insert_interval)  # C2 throttle, between writes
+            # rows observed inside the write jobs themselves (zero extra
+            # scan) — a full count only when this run copied every partition
+            rows_witnessed = witnessed if full_copy else None
 
             # 11. validate ALL partitions + table invariant (A3/A4, C10)
             check_results, dst_total = _validate(

@@ -609,8 +609,8 @@ def text_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; per-row cost is N substring scans, which ClickHouse itself
     pays (its Volnitsky multi-search amortizes — here N is small and the
     per-term scan is whole-stage codegen'd). At corpus scale this is a
-    pure map over documents; a 10^5-term blocklist instead compiles to an
-    Aho-Corasick pandas-UDF pass, same plan shape."""
+    pure map over documents whose cost grows linearly with the number of
+    terms."""
     d = load_table(spark, sf_dir, "documents")
     terms = F.array(*[F.lit(t) for t in BLOCKLIST_TERMS])
     matched = F.filter(
@@ -697,131 +697,6 @@ def text_ngram_distance_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.filter(F.col("ngram_dist") <= NGRAM_DIST_MAX).orderBy(
         "ngram_dist", "p_partkey"
     )
-
-
-def blocklist_filter_ac(
-    spark: SparkSession, sf_dir: str, terms=None, engine: str = "auto"
-) -> "DataFrame":
-    """The large-blocklist scale path promised by ``text_blocklist_filter``:
-    an Aho-Corasick automaton over ``mapInPandas``. The JVM higher-order
-    form scans the text once PER TERM — perfect for tens of terms, linear
-    in |terms| beyond that. This variant builds the automaton once per
-    executor batch iterator and scans each document ONCE regardless of
-    blocklist size — the right topology for a 10^5-term blocklist.
-
-    ``engine``: ``"c"`` uses the ``pyahocorasick`` C automaton (import name
-    ``ahocorasick``) — the constant factor that matters at 100 TB, where a
-    pure-Python per-character loop caps at a few MB/s/core; ``"python"``
-    forces the stdlib-only build (goto/fail/output tables, standard
-    Aho-Corasick '75 BFS construction); ``"auto"`` (default) takes the C
-    path when the package is importable and falls back otherwise. Both
-    engines share the output contract exactly and the equality test runs
-    against each available path.
-
-    Unregistered twin (same output contract as ``text_blocklist_filter``);
-    ``tests`` assert it agrees exactly with the JVM form on the fixture
-    terms."""
-    import pandas as pd
-
-    terms = list(terms if terms is not None else BLOCKLIST_TERMS)
-    term_index = {t: i for i, t in enumerate(terms)}
-
-    if engine not in ("auto", "python", "c"):
-        raise ValueError(f"unknown engine {engine!r}")
-    use_c = False
-    if engine in ("auto", "c"):
-        try:
-            import ahocorasick  # noqa: F401
-
-            use_c = True
-        except ImportError:
-            if engine == "c":
-                raise
-    if use_c:
-
-        def run_c(batches):
-            import ahocorasick
-
-            auto = ahocorasick.Automaton()
-            for t in terms:
-                auto.add_word(t, t)
-            auto.make_automaton()
-
-            def scan_c(text: str) -> list[str]:
-                found = {t for _, t in auto.iter(text)}
-                return sorted(found, key=lambda t: term_index[t])
-
-            for b in batches:
-                matched = b["text"].str.lower().map(scan_c)
-                mask = matched.map(len) > 0
-                yield pd.DataFrame(
-                    {
-                        "doc_id": b.loc[mask, "doc_id"],
-                        "first_match": matched[mask].map(lambda m: m[0]),
-                        "n_matched": matched[mask].map(len).astype("int64"),
-                    }
-                )
-
-        d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        return d.mapInPandas(
-            run_c, "doc_id long, first_match string, n_matched long"
-        ).orderBy("doc_id")
-
-    # --- build automaton once on the driver; broadcast via closure ---
-    goto: list[dict] = [{}]
-    out: list[set] = [set()]
-    for t in terms:
-        s = 0
-        for ch in t:
-            if ch not in goto[s]:
-                goto.append({})
-                out.append(set())
-                goto[s][ch] = len(goto) - 1
-            s = goto[s][ch]
-        out[s].add(t)
-    fail = [0] * len(goto)
-    from collections import deque
-
-    dq = deque()
-    for ch, s in goto[0].items():
-        dq.append(s)
-    while dq:
-        r = dq.popleft()
-        for ch, s in goto[r].items():
-            dq.append(s)
-            f = fail[r]
-            while f and ch not in goto[f]:
-                f = fail[f]
-            fail[s] = goto[f].get(ch, 0) if goto[f].get(ch, 0) != s else 0
-            out[s] |= out[fail[s]]
-
-    def scan(text: str) -> list[str]:
-        s = 0
-        found: set = set()
-        for ch in text:
-            while s and ch not in goto[s]:
-                s = fail[s]
-            s = goto[s].get(ch, 0)
-            if out[s]:
-                found |= out[s]
-        return sorted(found, key=lambda t: term_index[t])
-
-    def run(batches):
-        for b in batches:
-            matched = b["text"].str.lower().map(scan)
-            mask = matched.map(len) > 0
-            yield pd.DataFrame(
-                {
-                    "doc_id": b.loc[mask, "doc_id"],
-                    "first_match": matched[mask].map(lambda m: m[0]),
-                    "n_matched": matched[mask].map(len).astype("int64"),
-                }
-            )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return d.mapInPandas(
-        run, "doc_id long, first_match string, n_matched long"
-    ).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------

@@ -64,12 +64,15 @@ def is_table_completed(progress: dict, db: str, table: str) -> bool:
     return progress.get(db, {}).get(table, {}).get("status") == "completed"
 
 
-def mark_partition(progress: dict, db: str, table: str, part: str, path: str) -> None:
-    """Checkpoint one completed unit and flush (C3: ``resume.py:52-57``)."""
+def mark_partition(
+    progress: dict, db: str, table: str, parts: list[str], path: str
+) -> None:
+    """Checkpoint one completed write unit's partitions with one flush
+    (C3: ``resume.py:52-57``)."""
     with _LEDGER_LOCK:
-        entry = init_table(progress, db, table)[db][table]
-        if part not in entry["completed_partitions"]:
-            entry["completed_partitions"].append(part)
+        done = init_table(progress, db, table)[db][table]["completed_partitions"]
+        seen = set(done)
+        done.extend(p for p in parts if p not in seen)
         save_progress(path, progress)
 
 

@@ -21,9 +21,8 @@ driver-side callers share:
 * ``incremental_sync`` — cursor-based change capture that reads each batch
   through the data source.
 
-Unlike the JDBC module (``sources/clickhouse.py``, which needs a driver jar
-the sandbox lacks), this path needs only the Python standard library,
-pandas and pyarrow, so it is round-trip tested in-process
+The path needs only the Python standard library, pandas and pyarrow (no
+driver jar), so it is round-trip tested in-process
 (tests/test_clickhouse_http.py spins up a stdlib HTTP server that speaks
 the documented ClickHouse HTTP protocol).
 """

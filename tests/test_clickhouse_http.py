@@ -895,8 +895,8 @@ def test_rows_arriving_after_discovery_fail_the_table_invariant(
     )
     discover = migrate.discover_partition_values
 
-    def discover_then_insert(df, keys):
-        parts = discover(df, keys)
+    def discover_then_insert(df, keys, server=None):
+        parts = discover(df, keys, server)
         stub.execute("INSERT INTO grow_orders VALUES (4, 1.5)")
         return parts
 
@@ -1049,9 +1049,9 @@ def test_rows_arriving_after_server_discovery_fail_the_table_invariant(
     )
     discover = migrate.discover_partition_values
 
-    def discover_then_insert(*args):
-        parts = discover(*args)
-        assert len(args) == 3  # the server path
+    def discover_then_insert(df, keys, server):
+        assert server is not None  # the server path
+        parts = discover(df, keys, server)
         stub.execute("INSERT INTO grow_dated VALUES (4, 'F', '1996-03-03')")
         return parts
 

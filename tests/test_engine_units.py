@@ -8,165 +8,6 @@ from pyspark.sql import functions as F
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_jdbc_reader_construction(spark):
-    from clickhousemigrators3_spark.sources.clickhouse import jdbc_url, reader
-
-    assert jdbc_url("ch1", 8123, "default") == "jdbc:clickhouse://ch1:8123/default"
-    r = reader(
-        spark,
-        host="ch1",
-        database="db",
-        table="t",
-        partition_column="id",
-        num_partitions=8,
-    )
-    # reader is configured but not loaded (no server in this container)
-    assert r is not None
-
-
-def test_jdbc_roundtrip_embedded_derby(spark):
-    """Round-trip rows through the reader_options path against a REAL JVM
-    JDBC dialect: Spark bundles embedded Derby, so the exact option map the
-    ClickHouse read would use (partitioned ranges, predicate-in-dbtable
-    subquery, fetchsize) is exercised end-to-end — not just constructed.
-    Only url/driver differ from the ClickHouse defaults; the option path is
-    byte-identical."""
-    from clickhousemigrators3_spark.sources.clickhouse import reader, reader_options
-
-    url = "jdbc:derby:memory:chtest;create=true"
-    drv = "org.apache.derby.jdbc.EmbeddedDriver"
-    spark.range(0, 1000).selectExpr(
-        "id", "id % 7 AS grp", "CAST(id * 1.5 AS DOUBLE) AS val"
-    ).write.format("jdbc").options(
-        url=url, dbtable="t", driver=drv, user="default"
-    ).mode("overwrite").save()
-
-    # plain read (unqualified name: Derby resolves t in the user's schema)
-    opts = reader_options(url=url, driver=drv, table="t", qualify=False)
-    assert opts["fetchsize"] == "100000" and opts["dbtable"] == "t"
-    df = spark.read.format("jdbc").options(**opts).load()
-    assert df.count() == 1000
-
-    # partitioned read: 4 id-ranges → 4 parallel partitions, no dup/loss
-    part = reader(
-        spark, url=url, driver=drv, table="t", qualify=False,
-        partition_column="id", num_partitions=4, lower_bound=0, upper_bound=1000,
-    ).load()
-    assert part.rdd.getNumPartitions() == 4
-    assert part.count() == 1000
-    assert part.select("id").distinct().count() == 1000
-
-    # predicate pushed via dbtable subquery — filtering happens server-side
-    # (Derby upcases unquoted identifiers, Spark writes quoted ones, so the
-    # predicate quotes the column — dialect detail, same option path)
-    pred = reader(
-        spark, url=url, driver=drv, table="t", qualify=False, predicate='"grp" = 3'
-    ).load()
-    rows = pred.collect()
-    assert len(rows) == sum(1 for i in range(1000) if i % 7 == 3)
-    assert all(r["grp"] == 3 for r in rows)
-
-    # Catalyst predicate pushdown reaches the JDBC scan (PushedFilters)
-    plan = df.filter("id < 10")._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "LessThan" in plan
-
-
-def test_jdbc_reader_options_contract():
-    """Golden-value contract for every branch of reader_options — the exact
-    option map the JVM JDBC datasource receives (no live server exists, so
-    the contract IS the testable surface)."""
-    import pytest
-
-    from clickhousemigrators3_spark.sources.clickhouse import reader_options
-
-    # plain read: no partitioning keys present at all
-    plain = reader_options(host="ch1", database="db", table="t")
-    assert plain == {
-        "url": "jdbc:clickhouse://ch1:8123/db",
-        "dbtable": "db.t",
-        "user": "default",
-        "password": "",
-        "driver": "com.clickhouse.jdbc.ClickHouseDriver",
-        "pushDownPredicate": "true",
-        "pushDownAggregate": "true",
-        "fetchsize": "100000",
-    }
-
-    # partitioned read: explicit bounds land verbatim, count stringified
-    part = reader_options(
-        host="ch1",
-        database="db",
-        table="t",
-        partition_column="id",
-        num_partitions=8,
-        lower_bound=100,
-        upper_bound=5000,
-    )
-    assert part["partitionColumn"] == "id"
-    assert part["numPartitions"] == "8"
-    assert part["lowerBound"] == "100"
-    assert part["upperBound"] == "5000"
-
-    # default bounds: full non-negative int32 range
-    dflt = reader_options(host="ch1", database="db", table="t", partition_column="id")
-    assert (dflt["lowerBound"], dflt["upperBound"]) == ("0", str(1 << 31))
-    assert dflt["numPartitions"] == "32"
-
-    # predicate → guaranteed server-side subquery pushdown
-    pred = reader_options(
-        host="ch1", database="db", table="t", predicate="d >= '2024-01-01'"
-    )
-    assert pred["dbtable"] == "(SELECT * FROM db.t WHERE d >= '2024-01-01') AS src"
-
-    # custom port/user/password reach the url and auth options
-    auth = reader_options(
-        host="ch2", database="db", table="t", port=9000, user="ro", password="pw"
-    )
-    assert auth["url"] == "jdbc:clickhouse://ch2:9000/db"
-    assert (auth["user"], auth["password"]) == ("ro", "pw")
-
-    # inverted bounds are a config error, not a silent empty read
-    with pytest.raises(ValueError, match="lowerBound"):
-        reader_options(
-            host="ch1",
-            database="db",
-            table="t",
-            partition_column="id",
-            lower_bound=10,
-            upper_bound=10,
-        )
-
-
-def test_migrate_to_parquet_dry_run(spark, tmp_path, monkeypatch):
-    """migrate_to_parquet end-to-end with a parquet-backed stand-in for the
-    JDBC source: the writer path (overwrite mode, partitionBy) is real; only
-    the server read is substituted."""
-    from clickhousemigrators3_spark.catalog import load_table
-    from clickhousemigrators3_spark.sources import clickhouse as ch
-
-    src = load_table(spark, SF_DIR, "orders").limit(500)
-    monkeypatch.setattr(ch, "read_table", lambda spark, **kw: src)
-
-    dest = str(tmp_path / "out")
-    ch.migrate_to_parquet(
-        spark,
-        dest_path=dest,
-        partition_keys=["o_orderpriority"],
-        host="ch1",
-        database="db",
-        table="orders",
-    )
-    back = spark.read.parquet(dest)
-    assert back.count() == 500
-    # partition column became a directory key and survives the round-trip
-    assert sorted(back.columns) == sorted(src.columns)
-    import os
-
-    assert any(
-        d.startswith("o_orderpriority=") for d in os.listdir(dest) if not d.startswith("_")
-    )
-
-
 def test_approx_distinct_error_bound(spark):
     from clickhousemigrators3_spark.operators.analytics import (
         agg_distinct_counts,
@@ -504,47 +345,6 @@ def test_kmeans_convergence_early_stop(spark, tmp_path):
         assert {got[m] for m in members} == {g}
 
 
-def test_udf_surface_matches_jvm_twins(spark):
-    """Row UDF and pandas UDF must agree exactly with their JVM twins."""
-    from pyspark.sql.types import StringType
-    from clickhousemigrators3_spark.catalog import load_table
-    from clickhousemigrators3_spark.functions.udfs import (
-        l2_norm_pandas,
-        quality_band_jvm,
-        quality_band_py,
-        register_udfs,
-    )
-    from clickhousemigrators3_spark.functions.vectors import dot, to_double
-
-    register_udfs(spark)
-    # row UDF vs JVM CASE over the quality scores
-    from clickhousemigrators3_spark.operators.textops import text_quality_scores
-
-    scores = text_quality_scores(spark, SF_DIR).select("doc_id", "quality_score")
-    udf_col = F.udf(quality_band_py, StringType())(F.col("quality_score"))
-    both = scores.select(
-        udf_col.alias("py_band"),
-        quality_band_jvm(F.col("quality_score")).alias("jvm_band"),
-    )
-    assert both.filter(F.col("py_band") != F.col("jvm_band")).count() == 0
-
-    # pandas UDF vs higher-order JVM expression (exact: same double math)
-    e = load_table(spark, SF_DIR, "embeddings").select(
-        to_double(F.col("embedding")).alias("v")
-    )
-    cmp = e.select(
-        l2_norm_pandas(F.col("v")).alias("py_norm"),
-        F.sqrt(dot(F.col("v"), F.col("v"))).alias("jvm_norm"),
-    )
-    mismatch = cmp.filter(
-        F.abs(F.col("py_norm") - F.col("jvm_norm")) > 1e-12
-    ).count()
-    assert mismatch == 0
-
-    # SQL registration path
-    spark.sql("SELECT quality_band(3) AS b").collect()[0]["b"] == "high"
-
-
 def test_merge_upsert_partition_grain(spark, tmp_path):
     """MERGE semantics: matched keys take source values, unmatched insert;
     untouched partitions are not rewritten (their files stay identical)."""
@@ -716,57 +516,6 @@ def test_dml_model_equivalence(spark, tmp_path):
             r["key"]: r["val"] for r in spark.read.parquet(path).collect()
         }
         assert got == model, f"diverged at step {step} after {op} {sorted(ks)}"
-
-
-def test_grouped_trend_pandas_twin_matches_native(spark):
-    """The applyInPandas normal-equations form must agree with the native
-    regr_slope aggregate (same discipline as the udfs.py JVM twins)."""
-    from clickhousemigrators3_spark.operators.grouped_pandas import (
-        grouped_linear_trend_pandas_twin,
-        grouped_linear_trend_per_user,
-    )
-
-    native = {
-        r["user_id"]: (r["slope_per_day"], r["n"])
-        for r in grouped_linear_trend_per_user(spark, SF_DIR).collect()
-    }
-    twin = {
-        r["user_id"]: (r["slope_per_day"], r["n"])
-        for r in grouped_linear_trend_pandas_twin(spark, SF_DIR).collect()
-    }
-    assert set(native) == set(twin)
-    for uid, (slope, n) in native.items():
-        assert twin[uid][1] == n
-        # both rounded to 6dp; allow a last-digit rounding-boundary flip
-        assert abs(twin[uid][0] - slope) <= 2e-6, uid
-
-
-def test_grouped_zscore_pandas_twin_matches_jvm(spark):
-    """The applyInPandas z-score must agree with the registered JVM window
-    form, and the registered plan must carry NO Python boundary (the pandas
-    version is the demo twin, not the shipped query)."""
-    import math
-
-    from clickhousemigrators3_spark.operators.grouped_pandas import (
-        grouped_zscore_pandas_twin,
-        grouped_zscore_per_lang,
-    )
-
-    jvm_df = grouped_zscore_per_lang(spark, SF_DIR)
-    plan = jvm_df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" not in plan and "ArrowEvalPython" not in plan
-
-    jvm = {r["doc_id"]: r["z"] for r in jvm_df.collect()}
-    twin = {r["doc_id"]: r["z"] for r in grouped_zscore_pandas_twin(spark, SF_DIR).collect()}
-    assert set(jvm) == set(twin)
-    for doc_id, z in jvm.items():
-        t = twin[doc_id]
-        if z is None or (isinstance(t, float) and math.isnan(t)):
-            # single-row language: stddev_samp is NULL (JVM) / NaN (pandas)
-            assert z is None and (t is None or math.isnan(t))
-        else:
-            # both rounded to 6dp; allow a last-digit rounding-boundary flip
-            assert abs(t - z) <= 2e-6, doc_id
 
 
 def test_codecs_png_wav_roundtrip():
@@ -1897,55 +1646,6 @@ def test_semdedup_trained_centroid_paths_agree(spark):
     assert [tuple(r) for r in via_generic] == [tuple(r) for r in registered]
 
 
-def _ac_engines():
-    engines = ["python"]
-    try:
-        import ahocorasick  # noqa: F401
-
-        engines.append("c")
-    except ImportError:
-        pass
-    return engines
-
-
-@pytest.mark.parametrize("engine", _ac_engines())
-def test_blocklist_ac_twin_matches_jvm_form(spark, engine):
-    """The Aho-Corasick mapInPandas scale path must agree exactly with the
-    registered JVM higher-order form on the fixture blocklist — for every
-    available engine (pure-Python always; the pyahocorasick C automaton
-    when the package is importable)."""
-    from clickhousemigrators3_spark.operators.textops import (
-        blocklist_filter_ac,
-        text_blocklist_filter,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    jvm = text_blocklist_filter(spark, sf).collect()
-    ac = blocklist_filter_ac(spark, sf, engine=engine).collect()
-    assert len(jvm) == len(ac) > 0
-    assert [tuple(r) for r in jvm] == [tuple(r) for r in ac]
-
-    # overlapping-term automaton correctness: 'he' inside 'she', 'hers'
-    rows = blocklist_filter_ac(
-        spark, sf, terms=["he", "she", "hers"], engine=engine
-    ).limit(1)
-    rows.collect()  # just exercises the automaton with nested outputs
-
-
-def test_blocklist_ac_engine_validation(spark):
-    from clickhousemigrators3_spark.operators.textops import blocklist_filter_ac
-
-    with pytest.raises(ValueError):
-        blocklist_filter_ac(spark, "/root/testdata/sf0.001", engine="bogus")
-    try:
-        import ahocorasick  # noqa: F401
-    except ImportError:
-        # engine='c' must fail loudly when the package is absent, never
-        # silently fall back to the slow path the caller opted out of
-        with pytest.raises(ImportError):
-            blocklist_filter_ac(spark, "/root/testdata/sf0.001", engine="c")
-
-
 def test_window_funnel_strict_dedup_cases(spark):
     """Independent check of the strict_dedup funnel fold (the oracle is a
     recursive CTE implementing the same machine, so parity alone can't
@@ -2057,38 +1757,6 @@ def test_cluster_representative_is_best_member(spark):
     for cid, docs in members.items():
         best = max(docs, key=lambda d: (chars[d], -d))
         assert reps[cid] == (best, len(docs))
-
-
-def test_semdedup_gram_prune_equals_jvm_twin(spark):
-    """The Arrow/BLAS gram-matrix prune must reproduce the pure-JVM
-    self-join prune row-for-row (6-decimal rounded cosines) — same
-    clusters, same pruned set, same witnesses."""
-    from pyspark.sql import functions as F
-
-    from clickhousemigrators3_spark.catalog import load_table
-    from clickhousemigrators3_spark.functions.vectors import to_double
-    from clickhousemigrators3_spark.operators.dedup import (
-        SEMDEDUP_K,
-        _semdedup_prune_assigned,
-        _semdedup_prune_assigned_jvm,
-    )
-    from clickhousemigrators3_spark.operators.embeddings_ops import (
-        assign_to_literal_centroids,
-    )
-
-    e = load_table(spark, SF_DIR, "embeddings").select(
-        "vec_id", to_double(F.col("embedding")).alias("v")
-    )
-    cent_rows = {
-        int(r["vec_id"]): list(r["v"])
-        for r in e.filter(F.col("vec_id") < SEMDEDUP_K).collect()
-    }
-    assign = assign_to_literal_centroids(e, cent_rows)
-    assign.persist()
-    gram = [tuple(r) for r in _semdedup_prune_assigned(assign).collect()]
-    jvm = [tuple(r) for r in _semdedup_prune_assigned_jvm(assign).collect()]
-    assert len(gram) > 0
-    assert gram == jvm
 
 
 def test_segment_overlap_hll_error_bound(spark):

@@ -66,7 +66,7 @@ def test_migrate_per_partition_resume(spark, tmp_path):
     src = load_table(spark, SF_DIR, "orders")
     _copy_partitions(src, _staging_path(cfg.dest_dir, "orders"), ["o_orderstatus"], [("F",)])
     progress = ledger.init_table({}, "default", "orders")
-    ledger.mark_partition(progress, "default", "orders", "F", cfg.progress_path)
+    ledger.mark_partition(progress, "default", "orders", ["F"], cfg.progress_path)
 
     res = migrate_single_table(spark, cfg, "orders")
     assert res["status"] == "completed", res.get("error")
@@ -91,7 +91,7 @@ def test_validation_blocks_swap_on_corruption(spark, tmp_path, monkeypatch):
         corrupted = src.filter(
             ~((F.col("l_returnflag") == "A") & (F.col("l_linenumber") == 1))
         )
-        real_copy(corrupted, staging, keys, parts)
+        return real_copy(corrupted, staging, keys, parts)
 
     monkeypatch.setattr(mig, "_copy_partitions", corrupt_copy)
     res = migrate_single_table(spark, cfg, "lineitem")
@@ -116,7 +116,7 @@ def test_checksum_catches_content_corruption(spark, tmp_path, monkeypatch):
                 F.col("l_quantity")
             ),
         )
-        real_copy(mutated, staging, keys, parts)
+        return real_copy(mutated, staging, keys, parts)
 
     monkeypatch.setattr(mig, "_copy_partitions", mutate_copy)
     res = migrate_single_table(spark, cfg, "lineitem")
@@ -656,7 +656,7 @@ def test_batch_resume_copies_null_partitions(spark, tmp_path, keys, done):
     _copy_partitions(src, _staging_path(cfg.dest_dir, "t"), keys, [done])
     progress = ledger.init_table({}, "default", "t")
     ledger.mark_partition(
-        progress, "default", "t", ledger.serialize_partition(done), cfg.progress_path
+        progress, "default", "t", [ledger.serialize_partition(done)], cfg.progress_path
     )
 
     res = migrate_single_table(spark, cfg, "t")
@@ -776,6 +776,54 @@ def test_checksummed_batch_migration_runs_at_most_five_jobs(spark, tmp_path):
     assert res["status"] == "completed", res.get("error")
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert 0 < len(jobs) <= 5, jobs
+
+
+def test_batch_migration_flushes_the_ledger_once_per_write(spark, tmp_path, monkeypatch):
+    """A batch copy of three partitions checkpoints all three in one flush;
+    marking the table completed is the only other one."""
+    flushes = []
+    real_save = ledger.save_progress
+
+    def counting_save(path, progress):
+        flushes.append(json.loads(json.dumps(progress)))
+        real_save(path, progress)
+
+    monkeypatch.setattr(ledger, "save_progress", counting_save)
+    cfg = make_cfg(tmp_path, partition_keys=["o_orderstatus"])
+    res = migrate_single_table(spark, cfg, "orders")
+    assert res["status"] == "completed", res.get("error")
+    assert len(flushes) == 2
+    entry = flushes[0]["default"]["orders"]
+    assert (sorted(entry["completed_partitions"]), entry["status"]) == (
+        ["F", "O", "P"],
+        "in_progress",
+    )
+
+
+def test_per_partition_throttle_sleeps_between_checkpointed_writes(
+    spark, tmp_path, monkeypatch
+):
+    """``insert_interval`` is slept between writes only, after the partition
+    just copied is in the ledger."""
+    import time
+    import types
+
+    import clickhousemigrators3_spark.operators.migrate as mig
+
+    cfg = make_cfg(
+        tmp_path, partition_keys=["o_orderstatus"], strategy="per_partition", insert_interval=0.5
+    )
+    at_sleep = []
+
+    def record(seconds):
+        progress = ledger.load_progress(cfg.progress_path)
+        at_sleep.append((seconds, ledger.completed_partitions(progress, "default", "orders")))
+
+    clock = types.SimpleNamespace(time=time.time, strftime=time.strftime, sleep=record)
+    monkeypatch.setattr(mig, "time", clock)
+    res = migrate_single_table(spark, cfg, "orders")
+    assert res["status"] == "completed", res.get("error")
+    assert at_sleep == [(0.5, ["F"]), (0.5, ["F", "O"])]
 
 
 # --- empty keyed tables, empty-string keys ----------------------------------

@@ -207,16 +207,19 @@ def test_ann_recall_broadcasts_queries(spark):
 
 def test_grouped_trend_is_jvm_hashaggregate(spark):
     """The per-user regression slope is a native regr_slope aggregate: one
-    HashAggregate pair, no Python/Arrow boundary in the plan."""
+    HashAggregate pair. Neither it nor the per-language z-score window has
+    a Python/Arrow boundary in its plan."""
     from clickhousemigrators3_spark.operators.grouped_pandas import (
         grouped_linear_trend_per_user,
+        grouped_zscore_per_lang,
     )
 
-    plan = _plan(grouped_linear_trend_per_user(spark, SF_DIR))
-    assert "HashAggregate" in plan
-    assert "FlatMapGroupsInPandas" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "BatchEvalPython" not in plan
+    trend = _plan(grouped_linear_trend_per_user(spark, SF_DIR))
+    assert "HashAggregate" in trend
+    for plan in (trend, _plan(grouped_zscore_per_lang(spark, SF_DIR))):
+        assert "FlatMapGroupsInPandas" not in plan
+        assert "ArrowEvalPython" not in plan
+        assert "BatchEvalPython" not in plan
 
 
 def test_emb_lsh_dedup_no_cartesian(spark):
