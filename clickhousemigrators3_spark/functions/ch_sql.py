@@ -89,7 +89,8 @@ Covered surface (the high-frequency ClickHouse idioms):
   runningAccumulate — block-order functions, translated to lag/lead/sum
   windows when the SELECT carries a top-level ORDER BY that pins the
   order (_rewrite_running_funcs) or reads FROM a single ordered subquery
-  (the idiomatic ClickHouse pin, _subquery_pin); refused loudly otherwise
+  (the idiomatic ClickHouse pin, _subquery_pin_keys); refused loudly
+  otherwise
 * groupArrayMovingSum/Avg — per-row moving-window unrolling of the array
   result under the same pin; deltaSum / deltaSumTimestamp — aggregate
   shape preserved via a derived clamped-delta subquery
@@ -169,6 +170,14 @@ without a pinning ORDER BY, engine-specific hash families
 three-plus-array lambdas, non-literal extract()/dateDiff units,
 ARRAY JOIN with bare non-identifier expressions, quantified
 ``<cmp> ALL/ANY (SELECT …)`` comparisons.
+
+Scanning: a rewrite reads one SELECT's clauses with ``_depth0(tokens,
+start[, end])``, which yields the depth-0 tokens of the group holding
+``start`` (nested groups skipped whole, the group's closing ')' last), or
+``_depth0_back`` backward to the group's '('; ``_group_end`` /
+``_group_start`` give those bracket indices and ``_scan_select_clauses``
+the FROM/GROUP/HAVING/ORDER/tail positions. A new rewrite calls these
+instead of keeping its own paren depth.
 """
 
 from __future__ import annotations
@@ -1191,6 +1200,55 @@ def _find_close(tokens: list[str], i_open: int) -> int:
             if depth == 0:
                 return j
     raise UnsupportedCHSQL("unbalanced parentheses in ClickHouse SQL")
+
+
+def _depth0(tokens: list[str], start: int, end: int | None = None):
+    """Yield ``(index, lowercased token)`` for each token of
+    ``tokens[start:end]`` at the paren depth of ``start``: nested groups
+    are skipped whole, and the ')' closing the group that contains
+    ``start`` is yielded last (the scan stops there)."""
+    depth = 0
+    for i in range(start, len(tokens) if end is None else end):
+        t = tokens[i]
+        if t == "(":
+            depth += 1
+        elif t == ")":
+            if depth == 0:
+                yield i, ")"
+                return
+            depth -= 1
+        elif depth == 0:
+            yield i, t.lower()
+
+
+def _depth0_back(tokens: list[str], start: int):
+    """_depth0 scanning backward from ``start`` (inclusive) to the list's
+    head: the '(' opening the group that contains ``start`` is yielded
+    last."""
+    depth = 0
+    for i in range(start, -1, -1):
+        t = tokens[i]
+        if t == ")":
+            depth += 1
+        elif t == "(":
+            if depth == 0:
+                yield i, "("
+                return
+            depth -= 1
+        elif depth == 0:
+            yield i, t.lower()
+
+
+def _group_end(tokens: list[str], start: int) -> int:
+    """Index of the ')' closing the group that contains ``start``;
+    ``len(tokens)`` at statement level."""
+    return next((i for i, t in _depth0(tokens, start) if t == ")"), len(tokens))
+
+
+def _group_start(tokens: list[str], start: int) -> int:
+    """Index of the '(' opening the group that contains ``start``; -1 at
+    statement level."""
+    return next((i for i, t in _depth0_back(tokens, start) if t == "("), -1)
 
 
 def _split_args(tokens: list[str]) -> list[list[str]]:
@@ -2988,34 +3046,18 @@ def _rewrite_bare_array_joins(tokens: list[str]) -> list[str]:
         sel_idx = _owning_select_idx(tokens, aj_idx)
         start = sel_idx if sel_idx is not None else 0
         # scope: to the enclosing group's close or a same-depth UNION
-        depth = 0
-        span_end = len(tokens)
-        for q in range(start, len(tokens)):
-            t = tokens[q]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-                if depth < 0:
-                    span_end = q
-                    break
-            elif depth == 0 and t.lower() == "union":
-                span_end = q
-                break
+        span_end = next(
+            (q for q, lw in _depth0(tokens, start) if lw in (")", "union")),
+            len(tokens),
+        )
         new = list(tokens)
         # first depth-0 FROM after the SELECT bounds the select list — a
         # renamed BARE select item there gets `AS <name>` appended so the
         # result header keeps ClickHouse's column name
-        from_idx = span_end
-        depth = 0
-        for q in range(start, span_end):
-            if new[q] == "(":
-                depth += 1
-            elif new[q] == ")":
-                depth -= 1
-            elif depth == 0 and new[q].lower() == "from":
-                from_idx = q
-                break
+        from_idx = next(
+            (q for q, lw in _depth0(new, start, span_end) if lw == "from"),
+            span_end,
+        )
         alias_back: list[int] = []
         # positions renamed inside the top-level ORDER BY / LIMIT … BY
         # clauses: when the select list aliases the element BACK to the
@@ -3324,16 +3366,7 @@ def _depth0_union(tokens: list[str], start: int, end: int) -> bool:
     """True when a depth-0 UNION sits in tokens[start:end] — shared by
     the projection checks and the LIMIT WITH TIES rewrite (a union owns
     its ORDER BY / output names, so best-effort checks skip)."""
-    depth = 0
-    for p in range(start, end):
-        t = tokens[p]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and t.lower() == "union":
-            return True
-    return False
+    return any(lw == "union" for _, lw in _depth0(tokens, start, end))
 
 
 def _select_output_names(tokens: list[str], sel_idx: int) -> set[str] | None:
@@ -3363,33 +3396,19 @@ def _subquery_order_sql(
     parens — plain output-column identifiers with optional ASC/DESC only
     (the list moves into a window spec where only the subquery's output
     is visible); anything else returns None (→ refusal upstream)."""
-    depth = 0
     ord_start = None
-    for p in range(i_open + 1, i_close):
-        t = tokens[p]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and t.lower() == "order"
-            and _next_word_is(tokens, p, "by")
-        ):
+    for p, lw in _depth0(tokens, i_open + 1, i_close):
+        if lw == "order" and _next_word_is(tokens, p, "by"):
             ord_start = _next_code(tokens, p + 1) + 1  # past BY
     if ord_start is None:
         return None
-    end = i_close
-    depth = 0
-    for p in range(ord_start, i_close):
-        t = tokens[p]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and t.lower() in ("limit", "settings", "format"):
-            end = p
-            break
+    end = next(
+        (
+            p for p, lw in _depth0(tokens, ord_start, i_close)
+            if lw in ("limit", "settings", "format")
+        ),
+        i_close,
+    )
     items = [t for t in tokens[ord_start:end] if not _is_ws(t)]
     idents: list[str] = []
     for t in items:
@@ -3476,17 +3495,8 @@ def _any_right_join_rewrite(
             "((SELECT * FROM t ORDER BY <cols>) AS t ANY RIGHT JOIN …), "
             f"or see {_ANY_JOIN_PTR}"
         )
-    depth = 0
-    open_i = None
-    for q in range(close_i, -1, -1):
-        if tokens[q] == ")":
-            depth += 1
-        elif tokens[q] == "(":
-            depth -= 1
-            if depth == 0:
-                open_i = q
-                break
-    if open_i is None:
+    open_i = _group_start(tokens, close_i - 1)
+    if open_i < 0:
         raise UnsupportedCHSQL("unbalanced parentheses before ANY RIGHT JOIN")  # no-golden: unreachable: the tokenizer pass balances parens before rewrites run
     ord_sql = _subquery_order_sql(tokens, open_i, close_i, side="left")
     if ord_sql is None:
@@ -3496,24 +3506,15 @@ def _any_right_join_rewrite(
             f"{_ANY_JOIN_PTR}"
         )
     # --- ON/USING after the right relation -------------------------------
-    depth = 0
-    c = None
-    for q in range(j + 1, n):
-        t = tokens[q]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            if depth == 0:
-                break
-            depth -= 1
-        elif depth == 0 and t.lower() in ("on", "using"):
-            c = q
-            break
-        elif depth == 0 and t.lower() in ("where", "group", "order",
-                                          "limit", "union", "settings",
-                                          "format", "having"):
-            break
-    if c is None:
+    c = next(
+        (
+            q for q, lw in _depth0(tokens, j + 1)
+            if lw in (")", "on", "using", "where", "group", "order", "limit",
+                      "union", "settings", "format", "having")
+        ),
+        None,
+    )
+    if c is None or tokens[c].lower() not in ("on", "using"):
         raise UnsupportedCHSQL(
             "ANY JOIN needs an ON or USING clause to read the join keys"
         )
@@ -3591,32 +3592,18 @@ def _any_join_keys(
             "ANY JOIN needs an ON or USING clause to read the join keys"
         )
     # conjuncts until a depth-0 clause stop
-    depth = 0
-    end = n
-    for p in range(c + 1, n):
-        t = tokens[p]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            if depth == 0:
-                end = p
-                break
-            depth -= 1
-        elif depth == 0 and (t == "," or t.lower() in _ON_STOPS):
-            end = p
-            break
-    conj: list[list[str]] = [[]]
-    depth = 0
-    for p in range(c + 1, end):
-        t = tokens[p]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        if depth == 0 and t.lower() == "and":
-            conj.append([])
-        elif not _is_ws(t):
-            conj[-1].append(t)
+    end = next(
+        (
+            p for p, lw in _depth0(tokens, c + 1)
+            if lw in (")", ",") or lw in _ON_STOPS
+        ),
+        n,
+    )
+    cuts = [c] + [p for p, lw in _depth0(tokens, c + 1, end) if lw == "and"]
+    conj = [
+        [t for t in tokens[a + 1 : b] if not _is_ws(t)]
+        for a, b in zip(cuts, cuts[1:] + [end])
+    ]
     keys: list[str] = []
     for cj in conj:
         ok = (
@@ -3791,29 +3778,22 @@ def _rewrite_colon_casts(tokens: list[str]) -> list[str]:
             raise UnsupportedCHSQL("'::' cast without a left operand")
         start = None
         if out[p] == ")":
-            depth = 0
-            for q in range(p, -1, -1):
-                if out[q] == ")":
-                    depth += 1
-                elif out[q] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        start = q
-                        # include a call name before the paren group — but
-                        # never a structural keyword ((a + b)::Float64 in
-                        # a select list must not swallow SELECT)
-                        r = q - 1
-                        while r >= 0 and _is_ws(out[r]):
-                            r -= 1
-                        if r >= 0 and out[r] and (
-                            out[r][0].isalpha() or out[r][0] == "_"
-                        ) and out[r].lower() not in _COLON_STOP_KEYWORDS:
-                            start = r
-                        break
-            if start is None:
+            q = _group_start(out, p - 1)
+            if q < 0:
                 raise UnsupportedCHSQL(
                     "unbalanced parentheses before '::' cast"
                 )
+            start = q
+            # include a call name before the paren group — but never a
+            # structural keyword ((a + b)::Float64 in a select list must
+            # not swallow SELECT)
+            r = q - 1
+            while r >= 0 and _is_ws(out[r]):
+                r -= 1
+            if r >= 0 and out[r] and (
+                out[r][0].isalpha() or out[r][0] == "_"
+            ) and out[r].lower() not in _COLON_STOP_KEYWORDS:
+                start = r
         elif (
             out[p][0].isalnum() or out[p][0] in ("_", "'", '"', "`")
         ) and out[p].lower() not in _COLON_STOP_KEYWORDS:
@@ -4240,18 +4220,8 @@ def _rewrite_limit_ties(tokens: list[str], idx: int) -> list[str]:
         raise UnsupportedCHSQL("LIMIT n WITH TIES without an owning SELECT")  # no-golden: unreachable: the marker is raised inside an owning SELECT
     # ORDER BY inside [sel_idx, idx): required — it DEFINES the ties
     order_idx = None
-    depth = 0
-    for p in range(sel_idx + 1, idx):
-        t = tokens[p]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and t.lower() == "order"
-            and _next_word_is(tokens, p, "by")
-        ):
+    for p, lw in _depth0(tokens, sel_idx + 1, idx):
+        if lw == "order" and _next_word_is(tokens, p, "by"):
             order_idx = p
     if order_idx is None:
         raise UnsupportedCHSQL(
@@ -4372,18 +4342,8 @@ def _rewrite_limit_by(tokens: list[str], idx: int) -> list[str]:
         raise UnsupportedCHSQL("LIMIT n BY without an owning SELECT")  # no-golden: unreachable: the LIMIT BY marker is raised inside an owning SELECT
     # --- ORDER BY inside [sel_idx, idx): required for determinism ---------
     order_idx = None
-    depth = 0
-    for p in range(sel_idx + 1, idx):
-        t = tokens[p]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and t.lower() == "order"
-            and _next_word_is(tokens, p, "by")
-        ):
+    for p, lw in _depth0(tokens, sel_idx + 1, idx):
+        if lw == "order" and _next_word_is(tokens, p, "by"):
             order_idx = p
     if order_idx is None:
         raise UnsupportedCHSQL(
@@ -4394,22 +4354,15 @@ def _rewrite_limit_by(tokens: list[str], idx: int) -> list[str]:
     ord_start = _next_code(tokens, order_idx + 1) + 1  # past the BY word
     # --- BY expr list end + optional trailing LIMIT m ---------------------
     def _clause_end(start: int) -> int:
-        d = 0
-        for p in range(start, n):
-            t = tokens[p]
-            if t == "(":
-                d += 1
-            elif t == ")":
-                if d == 0:
-                    return p
-                d -= 1
-            elif d == 0:
-                lw = t.lower()
-                if lw in ("limit", "union") or (
+        return next(
+            (
+                p for p, lw in _depth0(tokens, start)
+                if lw in (")", "limit", "union") or (
                     lw in ("settings", "format") and _looks_clause(tokens, p)
-                ):
-                    return p
-        return n
+                )
+            ),
+            n,
+        )
 
     by_start = k + 1
     by_end = _clause_end(by_start)
@@ -4530,32 +4483,12 @@ def _expand_with_macros(tokens: list[str]) -> list[str]:
     if i >= len(tokens) or tokens[i].lower() != "with":
         return tokens
     # collect items up to the depth-0 SELECT that starts the body
-    j = i + 1
-    depth = 0
-    items: list[list[str]] = []
-    cur: list[str] = []
-    body_start = None
-    while j < len(tokens):
-        t = tokens[j]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0:
-            lw = t.lower()
-            if lw == "select":
-                body_start = j
-                break
-            if t == ",":
-                items.append(cur)
-                cur = []
-                j += 1
-                continue
-        cur.append(t)
-        j += 1
+    body_start = next(
+        (j for j, lw in _depth0(tokens, i + 1) if lw == "select"), None
+    )
     if body_start is None:
         return tokens  # not a WITH…SELECT shape; leave for spark.sql
-    items.append(cur)
+    items = _split_args(tokens[i + 1 : body_start]) or [[]]
 
     def _is_cte(item: list[str]) -> bool:
         # name AS ( SELECT … )
@@ -4652,15 +4585,7 @@ def _primary_start(out: list[str]) -> int | None:
         return None
     t = out[i]
     if t == ")":
-        depth = 0
-        while i >= 0:
-            if out[i] == ")":
-                depth += 1
-            elif out[i] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            i -= 1
+        i = _group_start(out, i - 1)
         if i < 0:
             return None
         j = i - 1
@@ -4847,34 +4772,24 @@ def _merge_prewhere(tokens: list[str], idx: int) -> list[str]:
     FORMAT) — trailing clauses are re-emitted AFTER the closing paren, never
     swallowed into the conjunct (``PREWHERE a=1 WHERE b=2 ORDER BY x`` →
     ``WHERE ( a=1 ) AND ( b=2 ) ORDER BY x``)."""
-    depth = 0
     where_idx = None
     stop = len(tokens)
-    for j in range(idx + 1, len(tokens)):
-        t = tokens[j]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:  # closing paren of an enclosing subquery ends it
-                stop = j
-                break
-        elif depth == 0:
-            lw = t.lower()
-            if lw == "prewhere":
-                raise UnsupportedCHSQL(
-                    "multiple PREWHERE clauses in one SELECT are not valid "
-                    "ClickHouse SQL"
-                )
-            if lw == "where" and where_idx is None:
-                where_idx = j
-            elif lw in ("limit", "having", "window", "qualify", "union") or (
-                lw in ("group", "order") and _next_word_is(tokens, j, "by")
-            ) or (
-                lw in ("settings", "format") and _looks_clause(tokens, j)
-            ):
-                stop = j
-                break
+    for j, lw in _depth0(tokens, idx + 1):
+        if lw == "prewhere":
+            raise UnsupportedCHSQL(
+                "multiple PREWHERE clauses in one SELECT are not valid "
+                "ClickHouse SQL"
+            )
+        if lw == "where" and where_idx is None:
+            where_idx = j
+        # the closing paren of an enclosing subquery ends it too
+        elif lw in (")", "limit", "having", "window", "qualify", "union") or (
+            lw in ("group", "order") and _next_word_is(tokens, j, "by")
+        ) or (
+            lw in ("settings", "format") and _looks_clause(tokens, j)
+        ):
+            stop = j
+            break
     if where_idx is None:
         # PREWHERE cond [GROUP BY …] → WHERE cond [GROUP BY …]
         return tokens[:idx] + ["WHERE"] + tokens[idx + 1 :]
@@ -5012,6 +4927,31 @@ def _check_pin_preaggregate(sql: str, what: str) -> None:
                 )
 
 
+def _scan_select_clauses(span: list[str]):
+    """``(frm, grp, hav, orde, tail, stop_word)``: depth-0 clause indices
+    of the SELECT span (span[0] is the SELECT keyword) — tail is the first
+    LIMIT/SETTINGS/FORMAT, which ends the scan. A UNION/WINDOW/QUALIFY
+    ends it too, as stop_word (None otherwise); the caller decides what
+    that word means for its rewrite."""
+    frm = grp = hav = orde = None
+    for k, lw in _depth0(span, 1):
+        if lw == "from" and frm is None:
+            frm = k
+        elif lw == "group" and grp is None and _next_word_is(span, k, "by"):
+            grp = k
+        elif lw == "having" and hav is None:
+            hav = k
+        elif lw == "order" and orde is None and _next_word_is(span, k, "by"):
+            orde = k
+        elif lw in ("union", "window", "qualify"):
+            return frm, grp, hav, orde, None, lw
+        elif lw == "limit" or (
+            lw in ("settings", "format") and _looks_clause(span, k)
+        ):
+            return frm, grp, hav, orde, k, None
+    return frm, grp, hav, orde, None, None
+
+
 def _rewrite_delta_select(tokens: list[str], call_idx: int) -> list[str] | None:
     """Restructure the SELECT owning a pinned block-order aggregate
     (deltaSum / deltaSumTimestamp, and — when grouped — also
@@ -5050,57 +4990,16 @@ def _rewrite_delta_select(tokens: list[str], call_idx: int) -> list[str] | None:
     if ord_keys is None:
         return None
     # span of this SELECT: to its subquery close (exclusive) or statement end
-    end = len(tokens)
-    depth = 0
-    for k in range(sel + 1, len(tokens)):
-        t = tokens[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:
-                end = k
-                break
+    end = _group_end(tokens, sel + 1)
     span = list(tokens[sel:end])
-
-    def _scan_clauses(sp):
-        depth = 0
-        frm = grp = hav = orde = tail = None
-        for k in range(1, len(sp)):
-            t = sp[k]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0:
-                lw = t.lower()
-                if lw == "from" and frm is None:
-                    frm = k
-                elif lw == "group" and grp is None and _next_word_is(sp, k, "by"):
-                    grp = k
-                elif lw == "having" and hav is None:
-                    hav = k
-                elif lw == "order" and orde is None and _next_word_is(sp, k, "by"):
-                    orde = k
-                elif lw == "union":
-                    return "union"
-                elif tail is None and (
-                    lw == "limit"
-                    or (lw in ("settings", "format") and _looks_clause(sp, k))
-                ):
-                    tail = k
-                    break
-                elif lw in ("window", "qualify"):
-                    raise UnsupportedCHSQL(
-                        "deltaSum/groupArrayMoving* with a WINDOW/QUALIFY "
-                        "clause is not mapped"
-                    )
-        return frm, grp, hav, orde, tail
-
-    scanned = _scan_clauses(span)
-    if scanned == "union":
+    frm, grp, hav, orde, tail, stop_word = _scan_select_clauses(span)
+    if stop_word == "union":
         return None  # pin across union arms is undefined
-    frm, grp, hav, orde, tail = scanned
+    if stop_word is not None:
+        raise UnsupportedCHSQL(
+            "deltaSum/groupArrayMoving* with a WINDOW/QUALIFY "
+            "clause is not mapped"
+        )
     if frm is None:
         return None  # FROM-less scalar select: nothing to pin on
     stop = len(span)
@@ -5256,8 +5155,7 @@ def _rewrite_delta_select(tokens: list[str], call_idx: int) -> list[str] | None:
     dcols.reverse()
 
     # re-scan: replacements shifted every clause position
-    scanned = _scan_clauses(span)
-    frm, grp, hav, orde, tail = scanned
+    frm, grp, hav, orde, tail, _ = _scan_select_clauses(span)
     stop = len(span)
     first_clause_after_from = min(
         x for x in (grp, hav, orde, tail, stop) if x is not None
@@ -5285,29 +5183,18 @@ def _group_by_keys(tokens: list[str], sel: int) -> list[str] | None:
     """Rendered GROUP BY key texts of the SELECT at ``sel`` (ordinals and
     select-list aliases resolved to base expressions) — None when there is
     no depth-0 GROUP BY."""
-    depth = 0
     grp = None
     end = len(tokens)
-    for k in range(sel + 1, len(tokens)):
-        t = tokens[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:
-                end = k
-                break
-        elif depth == 0:
-            lw = t.lower()
-            if lw == "group" and _next_word_is(tokens, k, "by"):
-                grp = k
-            elif grp is not None and (
-                lw in ("having", "limit", "window", "union")
-                or (lw == "order" and _next_word_is(tokens, k, "by"))
-                or (lw in ("settings", "format") and _looks_clause(tokens, k))
-            ):
-                end = k
-                break
+    for k, lw in _depth0(tokens, sel + 1):
+        if lw == "group" and _next_word_is(tokens, k, "by"):
+            grp = k
+        elif lw == ")" or grp is not None and (
+            lw in ("having", "limit", "window", "union")
+            or (lw == "order" and _next_word_is(tokens, k, "by"))
+            or (lw in ("settings", "format") and _looks_clause(tokens, k))
+        ):
+            end = k
+            break
     if grp is None:
         return None
     by = _next_code(tokens, grp + 1)
@@ -5517,38 +5404,6 @@ _CC_SCALAR_WRAPPERS = frozenset({
 })
 
 
-def _cc_scan_clauses(span: list[str]):
-    """(frm, grp, hav, orde, tail) indices of the SELECT span (span[0] is
-    the SELECT keyword), or the string 'bail' on UNION/WINDOW/QUALIFY."""
-    depth = 0
-    frm = grp = hav = orde = tail = None
-    for k in range(1, len(span)):
-        t = span[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0:
-            lw = t.lower()
-            if lw == "from" and frm is None:
-                frm = k
-            elif lw == "group" and grp is None and _next_word_is(span, k, "by"):
-                grp = k
-            elif lw == "having" and hav is None:
-                hav = k
-            elif lw == "order" and orde is None and _next_word_is(span, k, "by"):
-                orde = k
-            elif lw in ("union", "window", "qualify"):
-                return "bail"
-            elif tail is None and (
-                lw == "limit"
-                or (lw in ("settings", "format") and _looks_clause(span, k))
-            ):
-                tail = k
-                break
-    return frm, grp, hav, orde, tail
-
-
 def _cc_parse_call(span, i):
     """Parse a [parametric] aggregate call at span[i]: returns
     ``(close, args, params)`` or None when span[i] isn't called."""
@@ -5723,24 +5578,19 @@ def _cc_rebuild_item(item, val_norm, measures, allowed_idents):
     out: list[str] = []
     # lambda parameters declared inside the item stay legal bare idents
     lambda_params: set[str] = set()
-    code = [(ix, t) for ix, t in enumerate(toks) if not _is_ws(t)]
-    for p, (ix, t) in enumerate(code):
+    code = [t for t in toks if not _is_ws(t)]
+    for p, t in enumerate(code):
         if t == "->" and p > 0:
-            prev_ix, prev = code[p - 1]
+            prev = code[p - 1]
             if prev != ")":
                 lambda_params.add(prev.lower())
-            else:  # (a, b) -> …: find the matching open paren
-                depth = 0
-                for q in range(p - 1, -1, -1):
-                    if code[q][1] == ")":
-                        depth += 1
-                    elif code[q][1] == "(":
-                        depth -= 1
-                        if depth == 0:
-                            for _, w in code[q + 1 : p - 1]:
-                                if w and (w[0].isalpha() or w[0] == "_"):
-                                    lambda_params.add(w.lower())
-                            break
+                continue
+            # (a, b) -> …: the params sit in the group this ')' closes
+            q = _group_start(code, p - 2)
+            if q >= 0:
+                for w in code[q + 1 : p - 1]:
+                    if w and (w[0].isalpha() or w[0] == "_"):
+                        lambda_params.add(w.lower())
     i = 0
     n = len(toks)
     while i < n:
@@ -5816,38 +5666,15 @@ def _rewrite_count_combinators(tokens: list[str]) -> list[str]:
 
 
 def _cc_span_sig(tokens: list[str], sel: int) -> tuple[str, ...]:
-    depth = 0
-    end = len(tokens)
-    for k in range(sel + 1, len(tokens)):
-        t = tokens[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:
-                end = k
-                break
+    end = _group_end(tokens, sel + 1)
     return tuple(t for t in tokens[sel:end] if not _is_ws(t))
 
 
 def _cc_restructure_select(tokens: list[str], sel: int) -> list[str] | None:
-    depth = 0
-    end = len(tokens)
-    for k in range(sel + 1, len(tokens)):
-        t = tokens[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:
-                end = k
-                break
+    end = _group_end(tokens, sel + 1)
     span = list(tokens[sel:end])
-    scanned = _cc_scan_clauses(span)
-    if scanned == "bail":
-        return None
-    frm, grp, hav, orde, tail = scanned
-    if frm is None or hav is not None:
+    frm, grp, hav, orde, tail, stop_word = _scan_select_clauses(span)
+    if stop_word is not None or frm is None or hav is not None:
         return None
     first_code = _next_code(span, 1)
     if first_code < len(span) and span[first_code].lower() in ("distinct", "*"):
@@ -5991,16 +5818,11 @@ def _owning_select(tokens: list[str], at: int) -> int | None:
     balanced paren groups are skipped, an unmatched '(' is transparent (it
     can only be a function/expression paren — a subquery paren is followed
     by SELECT, which the scan reaches first)."""
-    depth = 0
-    for k in range(at, -1, -1):
-        t = tokens[k]
-        if t == ")":
-            depth += 1
-        elif t == "(":
-            if depth > 0:
-                depth -= 1
-        elif depth == 0 and t.lower() == "select":
+    for k, lw in _depth0_back(tokens, at):
+        if lw == "select":
             return k
+        if lw == "(":
+            return _owning_select(tokens, k - 1)
     return None
 
 
@@ -6024,44 +5846,25 @@ def _running_order_keys(
     sel = _owning_select(tokens, call_idx)
     if sel is None:
         return None
-    depth = 0
     by = None
-    for k in range(sel + 1, len(tokens)):
-        t = tokens[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:
-                break
-        elif depth == 0:
-            lw = t.lower()
-            if lw == "union":
-                break
-            if lw == "order" and _next_word_is(tokens, k, "by"):
-                by = _next_code(tokens, k + 1)  # index of BY
-                break
+    for k, lw in _depth0(tokens, sel + 1):
+        if lw in (")", "union"):
+            break
+        if lw == "order" and _next_word_is(tokens, k, "by"):
+            by = _next_code(tokens, k + 1)  # index of BY
+            break
     if by is None:
         # the idiomatic ClickHouse pin: ORDER BY inside the immediate
         # FROM-subquery (how users actually guarantee block order)
         return _subquery_pin_keys(tokens, sel)
     # key list: from after BY to the next depth-0 clause stop / WITH FILL
-    depth = 0
-    end = len(tokens)
-    for k in range(by + 1, len(tokens)):
-        t = tokens[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:
-                end = k
-                break
-        elif depth == 0:
-            lw = t.lower()
-            if lw in _ORDER_STOPS or lw == "with":
-                end = k
-                break
+    end = next(
+        (
+            k for k, lw in _depth0(tokens, by + 1)
+            if lw in (")", "with") or lw in _ORDER_STOPS
+        ),
+        len(tokens),
+    )
     keys = [k for k in _split_args(tokens[by + 1 : end]) if k]
     items, aliases, _names = _select_list_items(tokens, sel)
     rendered = []
@@ -6123,20 +5926,10 @@ def _from_subquery_span(
     exactly one parenthesized subquery (optionally aliased) — None for
     table FROMs, joins, and comma lists (block order is only defined by a
     single ordered subquery)."""
-    depth = 0
-    frm = None
-    for k in range(sel + 1, len(tokens)):
-        t = tokens[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-        elif depth == 0 and t.lower() == "from":
-            frm = k
-            break
-    if frm is None:
+    frm = next(
+        (k for k, lw in _depth0(tokens, sel + 1) if lw in (")", "from")), None
+    )
+    if frm is None or tokens[frm] == ")":
         return None
     f = _next_code(tokens, frm + 1)
     if f >= len(tokens) or tokens[f] != "(":
@@ -6176,34 +5969,22 @@ def _select_order_signals(
     whether a child subquery's block order can still be observed here."""
     clauses: set[str] = set()
     bare_over = False
-    depth = 0
-    k = sel + 1
     n = len(tokens)
-    while k < n:
-        t = tokens[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:
-                break
-        elif depth == 0:
-            lw = t.lower()
-            if lw in ("limit", "offset", "union"):
-                clauses.add(lw)
-            elif lw in ("group", "order") and _next_word_is(tokens, k, "by"):
-                clauses.add(lw)
-            elif lw == "over":
-                j = _next_code(tokens, k + 1)
-                if j < n and tokens[j] == "(":
-                    close = _find_close(tokens, j)
-                    spec = [
-                        x.lower() for x in tokens[j + 1 : close]
-                        if x and (x[0].isalpha() or x[0] == "_")
-                    ]
-                    if "order" not in spec:
-                        bare_over = True
-        k += 1
+    for k, lw in _depth0(tokens, sel + 1):
+        if lw in ("limit", "offset", "union"):
+            clauses.add(lw)
+        elif lw in ("group", "order") and _next_word_is(tokens, k, "by"):
+            clauses.add(lw)
+        elif lw == "over":
+            j = _next_code(tokens, k + 1)
+            if j < n and tokens[j] == "(":
+                close = _find_close(tokens, j)
+                spec = [
+                    x.lower() for x in tokens[j + 1 : close]
+                    if x and (x[0].isalpha() or x[0] == "_")
+                ]
+                if "order" not in spec:
+                    bare_over = True
     return clauses, bare_over
 
 
@@ -6239,29 +6020,19 @@ def _strip_dead_subquery_orders(tokens: list[str]) -> list[str]:
             i += 1
             continue
         close = _find_close(tokens, i)
-        depth = 0
         ob = None
         live = False
-        k = i + 1
-        while k < close:
-            t = tokens[k]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0:
-                lw = t.lower()
-                if lw in ("limit", "offset", "union"):
-                    live = True
-                    break
-                if lw == "order" and _next_word_is(tokens, k, "by"):
-                    ob = k
-                elif ob is not None and lw in (
-                    "with", "interpolate", "settings", "format",
-                ):
-                    live = True  # FILL/INTERPOLATE tail or further clause
-                    break
-            k += 1
+        for k, lw in _depth0(tokens, i + 1, close):
+            if lw in ("limit", "offset", "union"):
+                live = True
+                break
+            if lw == "order" and _next_word_is(tokens, k, "by"):
+                ob = k
+            elif ob is not None and lw in (
+                "with", "interpolate", "settings", "format",
+            ):
+                live = True  # FILL/INTERPOLATE tail or further clause
+                break
         if ob is None or live:
             i += 1
             continue
@@ -6289,14 +6060,6 @@ def _strip_dead_subquery_orders(tokens: list[str]) -> list[str]:
     return tokens
 
 
-def _subquery_pin(tokens: list[str], sel: int) -> str | None:
-    """Rendered FROM-subquery pin as one SQL string."""
-    keys = _subquery_pin_keys(tokens, sel)
-    if keys is None:
-        return None
-    return ", ".join((e + " " + t).strip() for e, t in keys)
-
-
 def _subquery_pin_keys(
     tokens: list[str], sel: int
 ) -> list[tuple[str, str]] | None:
@@ -6311,36 +6074,22 @@ def _subquery_pin_keys(
     if span is None:
         return None
     sub_sel, sub_close = span
-    depth = 0
     by = None
-    for k in range(sub_sel + 1, sub_close):
-        t = tokens[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0:
-            lw = t.lower()
-            if lw == "union":
-                return None
-            if lw == "order" and _next_word_is(tokens, k, "by"):
-                by = _next_code(tokens, k + 1)
-                break
+    for k, lw in _depth0(tokens, sub_sel + 1, sub_close):
+        if lw == "union":
+            return None
+        if lw == "order" and _next_word_is(tokens, k, "by"):
+            by = _next_code(tokens, k + 1)
+            break
     if by is None:
         return None
-    depth = 0
-    end = sub_close
-    for k in range(by + 1, sub_close):
-        t = tokens[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and (
-            t.lower() in _ORDER_STOPS or t.lower() == "with"
-        ):
-            end = k
-            break
+    end = next(
+        (
+            k for k, lw in _depth0(tokens, by + 1, sub_close)
+            if lw in _ORDER_STOPS or lw == "with"
+        ),
+        sub_close,
+    )
     keys = [k for k in _split_args(tokens[by + 1 : end]) if k]
     items, aliases, names = _select_list_items(tokens, sub_sel)
     has_star = any(it.strip() == "*" for it in items)
@@ -6393,6 +6142,19 @@ def _subquery_pin_keys(
     return rendered
 
 
+def _select_list_end(tokens: list[str], sel: int) -> int:
+    """Index just past the SELECT list of the SELECT at ``sel``: its first
+    depth-0 clause keyword or the enclosing ')'."""
+    return next(
+        (
+            k for k, lw in _depth0(tokens, sel + 1)
+            if lw in (")", "from", "where", "having", "limit", "window")
+            or (lw in ("group", "order") and _next_word_is(tokens, k, "by"))
+        ),
+        len(tokens),
+    )
+
+
 def _select_list_items(
     tokens: list[str], sel: int
 ) -> tuple[list[str], dict[str, str], list[str | None]]:
@@ -6403,28 +6165,10 @@ def _select_list_items(
     against select aliases; Spark window ORDER BY cannot), names are the
     per-item OUTPUT column names — the alias, a bare identifier, or None
     for an unaliased expression."""
-    depth = 0
-    end = len(tokens)
-    for k in range(sel + 1, len(tokens)):
-        t = tokens[k]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:
-                end = k
-                break
-        elif depth == 0:
-            lw = t.lower()
-            if lw in ("from", "where", "having", "limit", "window") or (
-                lw in ("group", "order") and _next_word_is(tokens, k, "by")
-            ):
-                end = k
-                break
     items: list[str] = []
     aliases: dict[str, str] = {}
     names: list[str | None] = []
-    for item in _split_args(tokens[sel + 1 : end]):
+    for item in _split_args(tokens[sel + 1 : _select_list_end(tokens, sel)]):
         code_idx = [ix for ix, t in enumerate(item) if not _is_ws(t)]
         if not code_idx:
             continue
@@ -6694,18 +6438,12 @@ def _text_key_default(key_sql: str) -> str | None:
         return None  # bare identifier: type unknown
     # depth-0 operators decide the class before any function name does
     # (`toString(x) || y` is string concat; `toYear(d) % 7` is numeric)
-    depth = 0
     has_arith = False
-    for t in toks:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0:
-            if t == "||":
-                return "''"
-            if t in ("%", "+", "-", "*", "/"):
-                has_arith = True
+    for _, t in _depth0(toks, 0):
+        if t == "||":
+            return "''"
+        if t in ("%", "+", "-", "*", "/"):
+            has_arith = True
     if has_arith:
         return "0"
     name = toks[0].lower() if toks[0][0].isalpha() or toks[0][0] == "_" else ""
@@ -6802,24 +6540,7 @@ def _rewrite_group_modifiers(
 
         # select-list span and items
         items, aliases, names = _select_list_items(tokens, sel)
-        sel_end = len(tokens)
-        depth = 0
-        for k in range(sel + 1, len(tokens)):
-            t = tokens[k]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-                if depth < 0:
-                    sel_end = k
-                    break
-            elif depth == 0:
-                lw = t.lower()
-                if lw in ("from", "where", "having", "limit", "window") or (
-                    lw in ("group", "order") and _next_word_is(tokens, k, "by")
-                ):
-                    sel_end = k
-                    break
+        sel_end = _select_list_end(tokens, sel)
         first_code = _next_code(tokens, sel + 1)
         if first_code < len(tokens) and tokens[first_code].lower() in (
             "distinct",
@@ -6848,23 +6569,17 @@ def _rewrite_group_modifiers(
         # (the rewrite splices a UNION ALL tail); nested/unioned shapes
         # keep the refusal.
         limit_at = None
-        depth = 0
-        for k in range(mod_idx + 1, len(tokens)):
-            t = tokens[k]
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-                if depth < 0:
-                    break
-            elif depth == 0 and t.lower() == "having":
+        for k, lw in _depth0(tokens, mod_idx + 1):
+            if lw == ")":
+                break
+            if lw == "having":
                 raise UnsupportedCHSQL(
                     f"WITH {kind.upper()} combined with HAVING is not "
                     "mapped — ClickHouse's totals_mode setting decides "
                     "whether HAVING filters the subtotal/totals rows; "
                     "filter in an outer SELECT instead"
                 )
-            elif depth == 0 and kind == "totals" and t.lower() == "limit":
+            elif kind == "totals" and lw == "limit":
                 if not top:
                     raise UnsupportedCHSQL(
                         "WITH TOTALS combined with LIMIT translates only "
@@ -6873,7 +6588,7 @@ def _rewrite_group_modifiers(
                         "that excludes the all-keys-defaulted totals row"
                     )
                 limit_at = k
-            elif depth == 0 and limit_at is not None and t.lower() == "by":
+            elif limit_at is not None and lw == "by":
                 raise UnsupportedCHSQL(
                     "WITH TOTALS combined with LIMIT … BY is not mapped — "
                     "ClickHouse's totals block is exempt from the "
@@ -6881,15 +6596,15 @@ def _rewrite_group_modifiers(
                     "SELECT that excludes the all-keys-defaulted totals "
                     "row"
                 )
-            elif depth == 0 and limit_at is not None and t.lower() in (
+            elif limit_at is not None and lw in (
                 "settings", "format"
             ) and _looks_clause(tokens, k):
                 raise UnsupportedCHSQL(
                     f"WITH TOTALS + LIMIT with a trailing "
-                    f"{t.upper()} clause is not mapped — drop the "
+                    f"{lw.upper()} clause is not mapped — drop the "
                     "clause or apply the LIMIT in an outer SELECT"
                 )
-            elif depth == 0 and t.lower() == "union":
+            elif lw == "union":
                 if kind == "totals" and limit_at is not None:
                     raise UnsupportedCHSQL(
                         "WITH TOTALS + LIMIT in a UNION operand is not "
@@ -7198,17 +6913,13 @@ def _extract_with_fill(sql: str) -> tuple[str, _FillSpec] | None:
     while wi >= 0 and _is_ws(tokens[wi]):
         wi -= 1
     # locate the ORDER BY backwards from WITH (balanced-paren walk)
-    rdepth = 0
-    order_i = None
-    for p in range(wi - 1, -1, -1):
-        t = tokens[p]
-        if t == ")":
-            rdepth += 1
-        elif t == "(":
-            rdepth -= 1
-        elif rdepth == 0 and t.lower() == "order" and _next_word_is(tokens, p, "by"):
-            order_i = p
-            break
+    order_i = next(
+        (
+            p for p, lw in _depth0_back(tokens, wi - 1)
+            if lw == "order" and _next_word_is(tokens, p, "by")
+        ),
+        None,
+    )
     if order_i is None:  # pragma: no cover - _scan_top_fill guarantees one
         return None
     by_i = _next_code(tokens, order_i + 1)
@@ -7545,15 +7256,7 @@ def _star_replace_is_matcher(tokens: list[str], ri: int) -> bool:
     if j >= len(tokens) or tokens[j] != "(":
         return True  # bare-identifier form (REPLACE c) — no call ambiguity
     close = _find_close(tokens, j)
-    depth = 0
-    for t in tokens[j + 1 : close]:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and t.lower() == "as":
-            return True
-    return False
+    return any(lw == "as" for _, lw in _depth0(tokens, j + 1, close))
 
 
 def _has_column_matchers(sql: str) -> bool:
@@ -7595,40 +7298,21 @@ def _has_column_matchers(sql: str) -> bool:
 
 def _owning_select_idx(tokens: list[str], i: int) -> int | None:
     """Nearest SELECT at the same paren depth scanning backward from i."""
-    depth = 0
-    for p in range(i - 1, -1, -1):
-        t = tokens[p]
-        if t == ")":
-            depth += 1
-        elif t == "(":
-            if depth == 0:
-                return None
-            depth -= 1
-        elif depth == 0 and t.lower() == "select":
-            return p
-    return None
+    return next(
+        (p for p, lw in _depth0_back(tokens, i - 1) if lw == "select"), None
+    )
 
 
 def _in_select_list(tokens: list[str], i: int) -> bool:
     """True when token i sits in a SELECT list: the nearest depth-0 clause
     keyword to its LEFT is SELECT (not FROM/WHERE/GROUP/…)."""
-    depth = 0
-    for p in range(i - 1, -1, -1):
-        t = tokens[p]
-        if t == ")":
-            depth += 1
-        elif t == "(":
-            if depth == 0:
-                return False
-            depth -= 1
-        elif depth == 0:
-            low = t.lower()
-            if low == "select":
-                return True
-            if low in _MATCHER_CLAUSE_STOPS or low in ("from", "by", "on",
-                                                        "using", "when",
-                                                        "then", "else"):
-                return False
+    for _, low in _depth0_back(tokens, i - 1):
+        if low == "select":
+            return True
+        if low in _MATCHER_CLAUSE_STOPS or low in ("from", "by", "on",
+                                                    "using", "when",
+                                                    "then", "else"):
+            return False
     return False
 
 
@@ -7637,25 +7321,14 @@ def _from_clause_span(tokens: list[str], sel_idx: int) -> tuple[int, int]:
     for the SELECT at sel_idx — exclusive of the FROM keyword, bounded by
     the next same-depth clause keyword or the subquery's closing paren.
     Raises when the SELECT has no FROM (nothing to expand against)."""
-    depth = 0
     from_idx = None
     end = len(tokens)
-    for p in range(sel_idx + 1, len(tokens)):
-        t = tokens[p]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-            if depth < 0:
-                end = p
-                break
-        elif depth == 0:
-            low = t.lower()
-            if low == "from" and from_idx is None:
-                from_idx = p
-            elif from_idx is not None and low in _MATCHER_CLAUSE_STOPS:
-                end = p
-                break
+    for p, low in _depth0(tokens, sel_idx + 1):
+        if low == "from" and from_idx is None:
+            from_idx = p
+        elif low == ")" or from_idx is not None and low in _MATCHER_CLAUSE_STOPS:
+            end = p
+            break
     if from_idx is None:
         raise UnsupportedCHSQL(  # no-golden: run-path (_expand_column_matchers) -- pytest test_column_matcher_refusals
             "a column matcher (*/COLUMNS with APPLY/REPLACE, untuple) "
@@ -7677,17 +7350,9 @@ def _with_prefix(tokens: list[str], before: int | None = None) -> str:
     first = _next_code(tokens, 0)
     if first >= len(tokens) or tokens[first].lower() != "with":
         return ""
-    depth = 0
-    end = None
-    for p in range(first + 1, len(tokens)):
-        t = tokens[p]
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and t.lower() == "select":
-            end = p
-            break
+    end = next(
+        (p for p, lw in _depth0(tokens, first + 1) if lw == "select"), None
+    )
     if end is None:
         return ""
     if before is None or before >= end:
@@ -7785,13 +7450,8 @@ def _apply_modifier_chain(
             for piece in _split_args(arg):
                 code = [t for t in piece if not _is_ws(t)]
                 as_pos = None
-                depth = 0
-                for q, t in enumerate(piece):
-                    if t == "(":
-                        depth += 1
-                    elif t == ")":
-                        depth -= 1
-                    elif depth == 0 and t.lower() == "as":
+                for q, lw in _depth0(piece, 0):
+                    if lw == "as":
                         as_pos = q
                 if as_pos is None or not code:
                     raise UnsupportedCHSQL(  # no-golden: run-path (_expand_column_matchers) -- pytest test_column_matcher_refusals

@@ -52,8 +52,16 @@ from .validate import count_validation
 DB = "default"
 
 
-def _staging_path(dest_dir: str, table: str) -> str:
-    return os.path.join(dest_dir, f"_staging_{table}")
+def _staging_path(cfg: MigrationConfig, table: str) -> str:
+    """Where a run stages ``table`` before cutover. Both names are stable
+    across a crash and its resume, so a resumed run finds the partitions
+    the ledger says were copied: ``_staging_<table>`` in rename mode, and
+    in manifest mode the versioned prefix of the version it will publish
+    (``<table>__v<N>``, one past the last published version)."""
+    if cfg.publish_mode == "manifest":
+        version = _next_version(list_versions(cfg.dest_dir, table))
+        return os.path.join(cfg.dest_dir, f"{table}__v{version}")
+    return os.path.join(cfg.dest_dir, f"_staging_{table}")
 
 
 def _final_path(dest_dir: str, table: str) -> str:
@@ -64,7 +72,8 @@ def _final_path(dest_dir: str, table: str) -> str:
 #
 # Directory rename is atomic on HDFS/local but NOT on S3 (copy+delete). The
 # manifest pattern makes cutover a single small-object PUT instead: data
-# lands in an immutable versioned prefix (`<table>__v<epoch>`), and
+# lands in an immutable versioned prefix (`<table>__v<N>`, N the version it
+# publishes as), and
 # `<table>.manifest.json` names the current version. Readers resolve the
 # manifest; publish = rewrite one tiny JSON (S3 PUTs of a single key are
 # atomic and strongly consistent). Old versions stay for time-travel/GC.
@@ -85,19 +94,15 @@ def _load_manifest(dest_dir: str, table: str) -> dict | None:
 
 
 def _write_manifest(dest_dir: str, table: str, manifest: dict) -> str:
-    """Replace the manifest in one step: write a temp file beside it, then
-    ``os.replace`` (the local analogue of the single-object PUT)."""
-    import json
-    import tempfile
-
+    """Replace the manifest in one step (the local analogue of the
+    single-object PUT)."""
     path = _manifest_path(dest_dir, table)
-    d = os.path.dirname(os.path.abspath(path))
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".manifest_")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, path)
+    ledger._write_json_atomic(path, manifest)
     return path
+
+
+def _next_version(history: list[dict]) -> int:
+    return history[-1]["version"] + 1 if history else 1
 
 
 def publish_manifest(dest_dir: str, table: str, data_path: str) -> str:
@@ -109,7 +114,7 @@ def publish_manifest(dest_dir: str, table: str, data_path: str) -> str:
     history = list_versions(dest_dir, table)
     manifest = {
         "table": table,
-        "version": history[-1]["version"] + 1 if history else 1,
+        "version": _next_version(history),
         "data_path": data_path,
         "published_at": time.time(),
         "history": history,
@@ -391,16 +396,13 @@ def migrate_single_table(
     if is_locked(cfg.lock_dir, DB, table):
         result["status"] = "locked"
         return result
+    staging = None
     try:
         with table_lock(cfg.lock_dir, DB, table):
             final = _final_path(cfg.dest_dir, table)
-            if cfg.publish_mode == "manifest":
-                # immutable versioned prefix; cutover = manifest pointer PUT
-                staging = os.path.join(
-                    cfg.dest_dir, f"{table}__v{int(time.time())}"
-                )
-            else:
-                staging = _staging_path(cfg.dest_dir, table)
+            # manifest mode: an immutable versioned prefix, cutover = a
+            # manifest pointer PUT
+            staging = _staging_path(cfg, table)
 
             # 3. idempotence guard (C5; Q7 fix: ledger status + dest
             # existence, not a DDL substring probe)
@@ -532,10 +534,13 @@ def migrate_single_table(
         result["status"] = "failed"
         result["error"] = str(exc)
         result["recovery_hints"] = [
-            "re-run with --resume to skip completed partitions",
-            f"staging data (if any) is at {_staging_path(cfg.dest_dir, table)}; "
-            "it is never promoted without passing validation",
+            "re-run with --resume to skip completed partitions"
         ]
+        if staging is not None:  # None: failed before choosing a path
+            result["recovery_hints"].append(
+                f"staging data (if any) is at {staging}; "
+                "it is never promoted without passing validation"
+            )
         return result
 
 

@@ -819,12 +819,6 @@ def pack_sequence_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CCNET_ALPHA = 1.0  # Laplace smoothing
 
-# per session: the last dataset whose ccnet intermediates are persisted,
-# as (session, tag, frames) — see ccnet_bigram_perplexity: the previous
-# dataset's cache is evicted when a new dataset is driven, bounding
-# residency to one dataset per session
-_CCNET_CACHE: dict[int, tuple] = {}
-
 CCNET_PPL_ORACLE = """
 WITH d AS (
   SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS w
@@ -875,7 +869,7 @@ def ccnet_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Py4J round-trips PER CALL (40% of this query's bench-min) — the same
     finding that shaped the Lloyd trainer. Expressions are character-
     identical to the previous Column form, so values are bit-equal."""
-    from ..catalog import dataset_tag, session_stopped
+    from ..catalog import dataset_tag, persist_owned
 
     tag = dataset_tag(sf_dir)
     load_table(spark, sf_dir, "documents").createOrReplaceTempView(
@@ -898,7 +892,14 @@ def ccnet_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d_df = spark.sql(f"""
 SELECT doc_id, split(trim(lower(text)), '\\\\s+') AS w
 FROM _ccnet_docs_{tag} WHERE trim(text) != ''""")
-    d_df.persist()
+    # the two persists must OUTLIVE this call (the returned plan's action
+    # reads them), so in-call unpersist is impossible — each is owned per
+    # session instead, which unpersists the frame a PREVIOUS dataset left
+    # (one dataset per session: per-sf_dir plans would otherwise
+    # accumulate cache entries without bound) and forgets stopped sessions.
+    # Same-dataset repeat calls re-persist plan-identical frames, which the
+    # CacheManager dedups. One owner per frame: an owner holds one frame.
+    persist_owned(spark, "ccnet_words", sf_dir, d_df)
     d_df.createOrReplaceTempView(f"_ccnet_d_{tag}")
     db_df = spark.sql(f"""
 SELECT doc_id,
@@ -906,25 +907,8 @@ SELECT doc_id,
                         slice(w, 2, size(w) - 1),
                         (a, b) -> concat(a, ' ', b))) AS bg
 FROM _ccnet_d_{tag} WHERE size(w) >= 2""")
-    db_df.persist()
+    persist_owned(spark, "ccnet_bigrams", sf_dir, db_df)
     db_df.createOrReplaceTempView(f"_ccnet_db_{tag}")
-    # the two persists must OUTLIVE this call (the returned plan's action
-    # reads them), so in-call unpersist is impossible — instead evict the
-    # cache a PREVIOUS dataset left behind, bounding residency to one
-    # dataset per session (advice r14: per-sf_dir plans otherwise
-    # accumulate cache entries without bound). Same-dataset repeat calls
-    # re-persist plan-identical frames, which the CacheManager dedups.
-    # Slots of stopped sessions are dropped, never unpersisted (that would
-    # raise); keying by session keeps two live sessions from evicting each
-    # other's cache.
-    for key in [k for k, v in list(_CCNET_CACHE.items()) if session_stopped(v[0])]:
-        del _CCNET_CACHE[key]
-    key = id(spark._jsparkSession)
-    prev = _CCNET_CACHE.get(key)
-    if prev is not None and prev[1] != tag:
-        for f in prev[2]:
-            f.unpersist()
-    _CCNET_CACHE[key] = (spark, tag, (d_df, db_df))
     return spark.sql(f"""
 WITH d AS (SELECT doc_id, w FROM _ccnet_d_{tag}),
 db AS (SELECT doc_id, bg FROM _ccnet_db_{tag}),

@@ -36,17 +36,24 @@ def load_progress(path: str) -> dict:
         return json.load(f)
 
 
-def save_progress(path: str, progress: dict) -> None:
+def _write_json_atomic(path: str, obj, indent: int | None = None) -> None:
+    """Replace ``path`` with ``obj`` as JSON in one step: write a unique
+    temp file in the same directory, then ``os.replace`` it (atomic on
+    POSIX), so a crash leaves the old file or the new one, never a part."""
     d = os.path.dirname(os.path.abspath(path))
     os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d, prefix=".progress_")
+    fd, tmp = tempfile.mkstemp(dir=d, prefix=f".{os.path.basename(path)}.")
     try:
         with os.fdopen(fd, "w") as f:
-            json.dump(progress, f, indent=2)
-        os.replace(tmp, path)  # atomic on POSIX
+            json.dump(obj, f, indent=indent)
+        os.replace(tmp, path)
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+
+
+def save_progress(path: str, progress: dict) -> None:
+    _write_json_atomic(path, progress, indent=2)
 
 
 def init_table(progress: dict, db: str, table: str) -> dict:

@@ -395,17 +395,13 @@ def incremental_sync(
     import json as _json
     import os as _os
 
+    from ..resume import _write_json_atomic
+
     state: dict = {"cursor": None}
     if _os.path.exists(state_path):
         with open(state_path) as f:
             state = _json.load(f)
     watermark = state.get("cursor")
-
-    def _persist(payload: dict) -> None:
-        tmp = f"{state_path}.tmp"
-        with open(tmp, "w") as f:
-            _json.dump(payload, f)
-        _os.replace(tmp, state_path)
 
     intent = state.get("intent_hi")
     if intent is not None and (watermark is None or int(intent) > int(watermark)):
@@ -417,7 +413,9 @@ def incremental_sync(
         ):
             return {"rows": 0, "cursor": watermark, "batch": None}
         hi = int(probed)
-        _persist({"cursor": watermark, "intent_hi": hi, "table": table})
+        _write_json_atomic(
+            state_path, {"cursor": watermark, "intent_hi": hi, "table": table}
+        )
 
     from .clickhouse_ds import ClickHouseHTTPDataSource
 
@@ -456,5 +454,5 @@ def incremental_sync(
     from ..catalog import table_exists
 
     n = spark.read.parquet(batch_dir).count() if table_exists(spark, batch_dir) else 0
-    _persist({"cursor": hi, "table": table})
+    _write_json_atomic(state_path, {"cursor": hi, "table": table})
     return {"rows": int(n), "cursor": hi, "batch": batch_dir if n else None}

@@ -2256,31 +2256,21 @@ def test_grouping_sets_views_are_dataset_scoped(spark):
         assert not spark.catalog.tableExists(view)
 
 
-def test_ccnet_cache_skips_stopped_sessions(spark):
-    """The ccnet cache slot is per session: a slot left by a stopped
-    session is dropped without unpersisting (that would raise), and the
-    live session's slot holds the dataset it just drove."""
-    from clickhousemigrators3_spark.catalog import dataset_tag
+def test_ccnet_cache_is_owned_per_session(spark):
+    """One ccnet call leaves exactly its two persisted frames owned for this
+    session and dataset, and ``catalog.release`` unpersists them."""
+    from clickhousemigrators3_spark import catalog
     from clickhousemigrators3_spark.operators import traindata
 
-    class Stopped:
-        _sc = None
-
-    class Frame:
-        def unpersist(self):
-            raise AssertionError("unpersist on a stopped session's frame")
-
-    traindata._CCNET_CACHE[-1] = (Stopped(), "other", (Frame(),))
-    try:
-        traindata.ccnet_bigram_perplexity(spark, SF_DIR)
-        assert -1 not in traindata._CCNET_CACHE
-        sess, tag, _ = traindata._CCNET_CACHE[id(spark._jsparkSession)]
-        assert sess is spark and tag == dataset_tag(SF_DIR)
-    finally:
-        traindata._CCNET_CACHE.pop(-1, None)
-        slot = traindata._CCNET_CACHE.pop(id(spark._jsparkSession), None)
-        for f in slot[2] if slot else ():
-            f.unpersist()
+    catalog.release(spark)
+    traindata.ccnet_bigram_perplexity(spark, SF_DIR)
+    sid, tag = id(spark._jsparkSession), catalog.dataset_tag(SF_DIR)
+    owned = {k: df for k, (_, df) in catalog._OWNED.items() if k[0] == sid}
+    assert set(owned) == {(sid, "ccnet_words", tag), (sid, "ccnet_bigrams", tag)}
+    assert all(df.storageLevel.useMemory for df in owned.values())
+    catalog.release(spark)
+    assert not any(df.storageLevel.useMemory for df in owned.values())
+    assert not any(k[0] == sid for k in catalog._OWNED)
 
 
 def test_python_tasks_run_without_spark_archives(spark):

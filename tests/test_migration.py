@@ -64,7 +64,7 @@ def test_migrate_per_partition_resume(spark, tmp_path):
     from clickhousemigrators3_spark.catalog import load_table
 
     src = load_table(spark, SF_DIR, "orders")
-    _copy_partitions(src, _staging_path(cfg.dest_dir, "orders"), ["o_orderstatus"], [("F",)])
+    _copy_partitions(src, _staging_path(cfg, "orders"), ["o_orderstatus"], [("F",)])
     progress = ledger.init_table({}, "default", "orders")
     ledger.mark_partition(progress, "default", "orders", ["F"], cfg.progress_path)
 
@@ -229,6 +229,49 @@ def test_manifest_publish_mode(spark, tmp_path):
     v2 = resolve_manifest(cfg.dest_dir, "orders")
     assert v2 != v1
     assert os.path.exists(v1)  # old version retained for time-travel/GC
+    assert read_published(spark, cfg.dest_dir, "orders").count() == 1500
+
+
+def test_manifest_publish_mode_resumes_into_the_crashed_runs_prefix(
+    spark, tmp_path, monkeypatch
+):
+    """A resumed manifest migration stages into the prefix the crashed run
+    wrote, so the partitions the ledger marks copied are there; the crashed
+    run's recovery hint names that prefix."""
+    import time as _time
+
+    import clickhousemigrators3_spark.operators.migrate as mig
+    from clickhousemigrators3_spark.operators.migrate import list_versions, read_published
+
+    cfg = make_cfg(
+        tmp_path, publish_mode="manifest", strategy="per_partition",
+        resume=True, partition_keys=["o_orderstatus"],
+    )
+    real_copy = mig._copy_partitions
+    calls = []
+
+    def crash_after_first_checkpoint(src, staging, keys, parts):
+        calls.append(parts)
+        if len(calls) == 2:
+            raise RuntimeError("injected crash")
+        return real_copy(src, staging, keys, parts)
+
+    monkeypatch.setattr(mig, "_copy_partitions", crash_after_first_checkpoint)
+    res = migrate_single_table(spark, cfg, "orders")
+    assert res["status"] == "failed" and "injected crash" in res["error"]
+    assert ledger.completed_partitions(
+        ledger.load_progress(cfg.progress_path), "default", "orders"
+    ) == [ledger.serialize_partition(calls[0][0])]
+    [hinted] = [h for h in res["recovery_hints"] if "staging data" in h]
+    staged = hinted.split(" is at ")[1].split(";")[0]
+    assert os.path.isdir(staged)
+
+    _time.sleep(1.1)  # the resume starts in a later second than the crash
+    monkeypatch.setattr(mig, "_copy_partitions", real_copy)
+    res = migrate_single_table(spark, cfg, "orders")
+    assert res["status"] == "completed", res.get("error")
+    assert [v["version"] for v in list_versions(cfg.dest_dir, "orders")] == [1]
+    assert [d for d in os.listdir(cfg.dest_dir) if "__v" in d] == ["orders__v1"]
     assert read_published(spark, cfg.dest_dir, "orders").count() == 1500
 
 
@@ -653,7 +696,7 @@ def test_batch_resume_copies_null_partitions(spark, tmp_path, keys, done):
     src_dir = _null_key_source(spark, tmp_path)
     cfg = make_cfg(tmp_path, source_dir=src_dir, partition_keys=keys, resume=True)
     src = spark.read.parquet(os.path.join(src_dir, "t.parquet"))
-    _copy_partitions(src, _staging_path(cfg.dest_dir, "t"), keys, [done])
+    _copy_partitions(src, _staging_path(cfg, "t"), keys, [done])
     progress = ledger.init_table({}, "default", "t")
     ledger.mark_partition(
         progress, "default", "t", [ledger.serialize_partition(done)], cfg.progress_path
