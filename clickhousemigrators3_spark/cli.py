@@ -3,18 +3,59 @@
 migrate → report → exit code.
 
 Beyond the reference's migration modes, the CLI exposes the query registry
-(``list-queries`` / ``query <name>``) so the engine is drivable as an
-analytics tool, not only a migrator.
+(``list-queries`` / ``query <name>``), ClickHouse SQL (``chsql``) and the
+maintenance operators as subcommands of one argparse parser, so the engine
+is drivable as an analytics tool, not only a migrator. A first argument
+that is not a subcommand goes to the migration parser
+(``config.resolve_config``). Exit codes: 0 done, 1 failed, 2 usage error,
+3 ClickHouse SQL the translator refuses.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
+from contextlib import contextmanager
 
 
-def cli_list_queries() -> int:
+@contextmanager
+def _session(app_name: str):
+    """The one SparkSession a CLI command owns: started here, stopped on
+    the way out whatever happens."""
+    from .session import get_spark
+
+    spark = get_spark(app_name=app_name)
+    try:
+        yield spark
+    finally:
+        spark.stop()
+
+
+def _print_result(df, limit: int, explain: bool) -> int:
+    """Print the formatted plan, or the header and the first ``limit`` rows
+    tab-separated (the limit applies BEFORE collect, so the driver never
+    holds a full result)."""
+    if explain:
+        df.explain("formatted")
+        return 0
+    rows = df.limit(limit).collect()
+    print("\t".join(df.columns))
+    for r in rows:
+        print("\t".join(str(v) for v in r))
+    return 0
+
+
+def _usage(msg: str) -> int:
+    print(msg, file=sys.stderr)
+    return 2
+
+
+_NEED_SF_DIR = "--sf-dir is required (or set SPARK_GRAFT_SF_DIR)"
+
+
+def cli_list_queries(args) -> int:
     from .registry import load_all
 
     for name, q in sorted(load_all().items()):
@@ -23,64 +64,33 @@ def cli_list_queries() -> int:
     return 0
 
 
-def cli_query(argv: list[str]) -> int:
-    """``query <name> [--sf-dir D] [--limit N] [--explain]`` — run one
-    registered query and print its rows (tab-separated, driver-side limit
-    applied BEFORE collect so the driver never holds a full result).
-
+def cli_query(args) -> int:
+    """``query <name>`` — run one registered query and print its rows.
     ``--sf-dir`` defaults to ``$SPARK_GRAFT_SF_DIR`` — there is no baked-in
-    path, so outside a fixture container the flag (or env var) is required."""
+    path, so outside a fixture container the flag (or env var) is
+    required."""
     from .registry import load_all
-    from .session import get_spark
 
-    if not argv or argv[0].startswith("-"):
-        print("usage: query <name> [--sf-dir D] [--limit N] [--explain]", file=sys.stderr)
-        return 2
-    name, rest = argv[0], argv[1:]
-    sf_dir, limit, explain = os.environ.get("SPARK_GRAFT_SF_DIR", ""), 20, False
-    it = iter(rest)
-    for a in it:
-        if a == "--sf-dir":
-            sf_dir = next(it)
-        elif a == "--limit":
-            limit = int(next(it))
-        elif a == "--explain":
-            explain = True
-        else:
-            print(f"unknown option {a}", file=sys.stderr)
-            return 2
     reg = load_all()
-    if name not in reg:
-        print(f"unknown query {name!r} (see list-queries)", file=sys.stderr)
-        return 2
-    if not sf_dir:
-        print(
-            "--sf-dir is required (or set SPARK_GRAFT_SF_DIR)", file=sys.stderr
+    if args.name not in reg:
+        return _usage(f"unknown query {args.name!r} (see list-queries)")
+    if not args.sf_dir:
+        return _usage(_NEED_SF_DIR)
+    with _session(f"query-{args.name}") as spark:
+        return _print_result(
+            reg[args.name].fn(spark, args.sf_dir), args.limit, args.explain
         )
-        return 2
-    spark = get_spark(app_name=f"query-{name}")
-    try:
-        df = reg[name].fn(spark, sf_dir)
-        if explain:
-            df.explain("formatted")
-            return 0
-        rows = df.limit(limit).collect()
-        print("\t".join(df.columns))
-        for r in rows:
-            print("\t".join(str(v) for v in r))
-        return 0
-    finally:
-        spark.stop()
 
 
-def cli_chsql(argv: list[str]) -> int:
-    """``chsql "<ClickHouse SQL>" [--sf-dir D] [--limit N] [--explain]
-    [--translate-only]`` — run a ClickHouse SQL string as-is: translate
-    (``functions/ch_sql.py``) → register fixture views → ``spark.sql``.
-    The SURVEY §0 story made drivable: reference users paste their query
-    text unchanged. ``--translate-only`` prints the emitted Spark SQL
-    without starting a session; unsupported constructs refuse with a
-    pointer to the operator that implements them (exit 3)."""
+def cli_chsql(args) -> int:
+    """``chsql "<ClickHouse SQL>"`` — run a ClickHouse SQL string as-is
+    through ``run_ch_sql`` (an ``INSERT`` through ``run_ch_insert``), so
+    the session-only constructs (FINAL, SAMPLE, WITH FILL, column matchers,
+    the 2-arg neighbor, typed ROLLUP/CUBE keys, EXPLAIN SYNTAX) work here
+    too. The SURVEY §0 story made drivable: reference users paste their
+    query text unchanged. ``--translate-only`` prints the string-only
+    translation without starting a session; refused constructs exit 3 with
+    a pointer to the operator that implements them."""
     from .functions.ch_sql import (
         UnsupportedCHSQL,
         run_ch_insert,
@@ -89,241 +99,98 @@ def cli_chsql(argv: list[str]) -> int:
         translate_ch_sql,
     )
 
-    if not argv or argv[0].startswith("-"):
-        print(
-            'usage: chsql "<ClickHouse SQL>" [--sf-dir D] [--limit N] '
-            "[--explain] [--translate-only] [--dest-root R]",
-            file=sys.stderr,
-        )
-        return 2
-    sql, rest = argv[0], argv[1:]
-    sf_dir, limit = os.environ.get("SPARK_GRAFT_SF_DIR", ""), 20
-    dest_root = ""
-    explain = translate_only = False
-    it = iter(rest)
-    for a in it:
-        if a == "--sf-dir":
-            sf_dir = next(it)
-        elif a == "--limit":
-            limit = int(next(it))
-        elif a == "--dest-root":
-            dest_root = next(it)
-        elif a == "--explain":
-            explain = True
-        elif a == "--translate-only":
-            translate_only = True
-        else:
-            print(f"unknown option {a}", file=sys.stderr)
-            return 2
     try:
-        insert = split_ch_insert(sql)
-        translated = translate_ch_sql(insert[2] if insert else sql)
-    except UnsupportedCHSQL as exc:
-        print(f"unsupported ClickHouse SQL: {exc}", file=sys.stderr)
-        return 3
-    if insert and not translate_only:
-        if explain:
-            # Dry-run: explain the translated source SELECT instead of
-            # executing the side-effecting write.
-            if not sf_dir:
-                print(
-                    "--sf-dir is required (or set SPARK_GRAFT_SF_DIR)",
-                    file=sys.stderr,
-                )
-                return 2
-            from .session import get_spark
-
-            spark = get_spark(app_name="chsql")
-            try:
-                run_ch_sql(spark, insert[2], sf_dir).explain("formatted")
-                return 0
-            finally:
-                spark.stop()
-        if not dest_root:
-            print("INSERT needs --dest-root", file=sys.stderr)
-            return 2
-        from .session import get_spark
-
-        spark = get_spark(app_name="chsql")
-        try:
-            row = run_ch_insert(
-                spark, sql, dest_root, sf_dir or None
-            ).collect()[0]
+        insert = split_ch_insert(args.sql)
+        source = insert[2] if insert else args.sql
+        if args.translate_only:
+            print(translate_ch_sql(source))
+            return 0
+        if insert and not args.explain:
+            # --explain on an INSERT is a dry run: it explains the source
+            # SELECT below instead of executing the side-effecting write
+            if not args.dest_root:
+                return _usage("INSERT needs --dest-root")
+            with _session("chsql") as spark:
+                row = run_ch_insert(
+                    spark, args.sql, args.dest_root, args.sf_dir or None
+                ).collect()[0]
             print(
                 f"{row.target}\t{row.path}\t{row.rows_inserted} rows\t"
                 f"{row.files_added} files"
             )
             return 0
-        finally:
-            spark.stop()
-    if translate_only:
-        print(translated)
-        return 0
-    if not sf_dir:
-        print("--sf-dir is required (or set SPARK_GRAFT_SF_DIR)", file=sys.stderr)
-        return 2
-    from .session import get_spark
-
-    spark = get_spark(app_name="chsql")
-    try:
-        df = run_ch_sql(spark, sql, sf_dir)
-        if explain:
-            df.explain("formatted")
-            return 0
-        rows = df.limit(limit).collect()
-        print("\t".join(df.columns))
-        for r in rows:
-            print("\t".join(str(v) for v in r))
-        return 0
-    finally:
-        spark.stop()
+        if not args.sf_dir:
+            return _usage(_NEED_SF_DIR)
+        with _session("chsql") as spark:
+            return _print_result(
+                run_ch_sql(spark, source, args.sf_dir), args.limit, args.explain
+            )
+    except UnsupportedCHSQL as exc:
+        print(f"unsupported ClickHouse SQL: {exc}", file=sys.stderr)
+        return 3
 
 
-def cli_optimize(argv: list[str]) -> int:
-    """``optimize --path P --keys k1,k2 --versions v1 --partitions p1`` —
-    OPTIMIZE FINAL DEDUPLICATE: compact a dataset keeping the latest
+def cli_optimize(args) -> int:
+    """OPTIMIZE FINAL DEDUPLICATE: compact a dataset keeping the latest
     version per key within each partition (``operators/maintenance.py``)."""
     from .operators.maintenance import optimize_final_deduplicate
-    from .session import get_spark
 
-    opts = _kv_opts(argv, {"--path", "--keys", "--versions", "--partitions"})
-    if opts is None or not all(
-        k in opts for k in ("--path", "--keys", "--versions", "--partitions")
-    ):
-        print(
-            "usage: optimize --path P --keys k1,k2 --versions v1 "
-            "--partitions p1,p2",
-            file=sys.stderr,
-        )
-        return 2
-    spark = get_spark(app_name="optimize-final")
-    try:
-        stats = optimize_final_deduplicate(
-            spark,
-            opts["--path"],
-            key_cols=opts["--keys"].split(","),
-            version_cols=opts["--versions"].split(","),
-            partition_cols=opts["--partitions"].split(","),
-        )
-        print(stats)
-        return 0
-    finally:
-        spark.stop()
+    with _session("optimize-final") as spark:
+        print(optimize_final_deduplicate(
+            spark, args.path, key_cols=args.keys, version_cols=args.versions,
+            partition_cols=args.partitions,
+        ))
+    return 0
 
 
-def cli_ttl(argv: list[str]) -> int:
-    """``ttl --path P --ts-col ts --cutoff '2024-01-01' --partitions p1`` —
-    expire rows older than the cutoff: fully-expired partitions drop as
-    directories, boundary partitions rewrite."""
+def cli_ttl(args) -> int:
+    """Expire rows older than the cutoff: fully-expired partitions drop as
+    directories, boundary partitions rewrite. The cutoff is read as an
+    int, a float or an ISO datetime, else kept as text."""
+    from datetime import datetime
+
     from .operators.maintenance import apply_ttl
-    from .session import get_spark
 
-    opts = _kv_opts(argv, {"--path", "--ts-col", "--cutoff", "--partitions"})
-    if opts is None or not all(
-        k in opts for k in ("--path", "--ts-col", "--cutoff", "--partitions")
-    ):
-        print(
-            "usage: ttl --path P --ts-col C --cutoff V --partitions p1,p2",
-            file=sys.stderr,
-        )
-        return 2
-    cutoff: object = opts["--cutoff"]
-    for parse in (int, float, __import__("datetime").datetime.fromisoformat):
+    cutoff: object = args.cutoff
+    for parse in (int, float, datetime.fromisoformat):
         try:
-            cutoff = parse(opts["--cutoff"])
+            cutoff = parse(args.cutoff)
             break
         except ValueError:
             continue
-    spark = get_spark(app_name="apply-ttl")
-    try:
-        stats = apply_ttl(
-            spark,
-            opts["--path"],
-            opts["--ts-col"],
-            cutoff,
-            opts["--partitions"].split(","),
-        )
-        print(stats)
-        return 0
-    finally:
-        spark.stop()
+    with _session("apply-ttl") as spark:
+        print(apply_ttl(spark, args.path, args.ts_col, cutoff, args.partitions))
+    return 0
 
 
-def cli_update(argv: list[str]) -> int:
-    """``update --path P --set col=expr[,col2=expr2] --where pred
-    --partitions p1`` — ALTER UPDATE mutation: partition-grain
-    copy-on-write; only partitions containing matching rows rewrite."""
+def cli_update(args) -> int:
+    """ALTER UPDATE mutation: partition-grain copy-on-write; only
+    partitions containing matching rows rewrite."""
     from .operators.maintenance import alter_update_where
-    from .session import get_spark
 
-    opts = _kv_opts(argv, {"--path", "--set", "--where", "--partitions"})
-    if opts is None or not all(
-        k in opts for k in ("--path", "--set", "--where", "--partitions")
-    ):
-        print(
-            "usage: update --path P --set col=expr[,col=expr] --where pred "
-            "--partitions p1,p2",
-            file=sys.stderr,
-        )
-        return 2
     assignments = {}
-    for item in _split_top_level(opts["--set"]):
+    for item in _split_top_level(args.set):
         col, _, expr = item.partition("=")
         if not expr:
-            print(f"bad assignment: {item!r}", file=sys.stderr)
-            return 2
+            return _usage(f"bad assignment: {item!r}")
         assignments[col.strip()] = expr.strip()
-    spark = get_spark(app_name="alter-update")
-    try:
-        stats = alter_update_where(
-            spark,
-            opts["--path"],
-            assignments,
-            opts["--where"],
-            opts["--partitions"].split(","),
-        )
-        print(stats)
-        return 0
-    finally:
-        spark.stop()
+    with _session("alter-update") as spark:
+        print(alter_update_where(
+            spark, args.path, assignments, args.where, args.partitions
+        ))
+    return 0
 
 
-def cli_attach_partition(argv: list[str]) -> int:
-    """``attach-partition --src S --dst D --partitions p1 --values v1
-    [--mode copy|move|replace]`` — file-level partition exchange
-    (ATTACH/MOVE/REPLACE PARTITION FROM)."""
+def cli_attach_partition(args) -> int:
+    """File-level partition exchange (ATTACH/MOVE/REPLACE PARTITION FROM)."""
     from .operators.maintenance import attach_partition_from
-    from .session import get_spark
 
-    opts = _kv_opts(argv, {"--src", "--dst", "--partitions", "--values", "--mode"})
-    if opts is None or not all(
-        k in opts for k in ("--src", "--dst", "--partitions", "--values")
-    ):
-        print(
-            "usage: attach-partition --src S --dst D --partitions p1,p2 "
-            "--values v1,v2 [--mode copy|move|replace]",
-            file=sys.stderr,
-        )
-        return 2
-    mode = opts.get("--mode", "copy")
-    if mode not in ("copy", "move", "replace"):
-        print(f"bad --mode {mode!r}", file=sys.stderr)
-        return 2
-    spark = get_spark(app_name="attach-partition")
-    try:
-        stats = attach_partition_from(
-            spark,
-            opts["--src"],
-            opts["--dst"],
-            opts["--partitions"].split(","),
-            opts["--values"].split(","),
-            move=mode == "move",
-            replace=mode == "replace",
-        )
-        print(stats)
-        return 0
-    finally:
-        spark.stop()
+    with _session("attach-partition") as spark:
+        print(attach_partition_from(
+            spark, args.src, args.dst, args.partitions, args.values,
+            move=args.mode == "move", replace=args.mode == "replace",
+        ))
+    return 0
 
 
 def _split_top_level(s: str, sep: str = ",") -> list[str]:
@@ -358,57 +225,83 @@ def _split_top_level(s: str, sep: str = ",") -> list[str]:
     return [p for p in parts if p.strip()]
 
 
-def _kv_opts(argv: list[str], known: set[str]) -> dict | None:
-    opts: dict = {}
-    it = iter(argv)
-    for a in it:
-        if a in known:
-            try:
-                opts[a] = next(it)
-            except StopIteration:
-                return None
-        else:
-            print(f"unknown option {a}", file=sys.stderr)
-            return None
-    return opts
+def _parser() -> tuple[argparse.ArgumentParser, dict]:
+    """One parser with one subparser per command, each setting ``func``;
+    returned with the command-name → subparser map. Comma-list flags
+    arrive split."""
+    p = argparse.ArgumentParser(
+        prog="spark-migrator",
+        description="Without a subcommand, the arguments configure a "
+        "migration (spark-migrator --mode single|full …).",
+    )
+    sub = p.add_subparsers(dest="command", required=True)
+
+    def command(name, func, help_text, *required):
+        sp = sub.add_parser(name, help=help_text, description=help_text)
+        sp.set_defaults(func=func)
+        for flag in required:
+            csv = flag in ("--keys", "--versions", "--partitions", "--values")
+            sp.add_argument(
+                flag, required=True, type=(lambda v: v.split(",")) if csv else str
+            )
+        return sp
+
+    command("list-queries", cli_list_queries, "list the registered queries")
+    query = command("query", cli_query, "run one registered query")
+    query.add_argument("name")
+    chsql = command("chsql", cli_chsql, "run a ClickHouse SQL statement")
+    chsql.add_argument("sql")
+    chsql.add_argument("--translate-only", action="store_true")
+    chsql.add_argument("--dest-root", default="")
+    for sp in (query, chsql):
+        sp.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", ""))
+        sp.add_argument("--limit", type=int, default=20)
+        sp.add_argument("--explain", action="store_true")
+    command(
+        "optimize", cli_optimize, "OPTIMIZE FINAL DEDUPLICATE",
+        "--path", "--keys", "--versions", "--partitions",
+    )
+    command(
+        "ttl", cli_ttl, "expire rows older than a cutoff",
+        "--path", "--ts-col", "--cutoff", "--partitions",
+    )
+    command(
+        "update", cli_update, "ALTER UPDATE … WHERE",
+        "--path", "--set", "--where", "--partitions",
+    )
+    command(
+        "attach-partition", cli_attach_partition,
+        "ATTACH/MOVE/REPLACE PARTITION FROM",
+        "--src", "--dst", "--partitions", "--values",
+    ).add_argument("--mode", choices=("copy", "move", "replace"), default="copy")
+    return p, sub.choices
 
 
 def main(argv: list[str] | None = None) -> int:
     args = list(sys.argv[1:]) if argv is None else list(argv)
-    if args and args[0] == "list-queries":
-        return cli_list_queries()
-    if args and args[0] == "query":
-        return cli_query(args[1:])
-    if args and args[0] == "chsql":
-        return cli_chsql(args[1:])
-    if args and args[0] == "optimize":
-        return cli_optimize(args[1:])
-    if args and args[0] == "ttl":
-        return cli_ttl(args[1:])
-    if args and args[0] == "update":
-        return cli_update(args[1:])
-    if args and args[0] == "attach-partition":
-        return cli_attach_partition(args[1:])
-    return _migrate_main(argv)
+    parser, commands = _parser()
+    if not args or args[0] not in commands:
+        return _migrate_main(argv)
+    try:
+        ns = parser.parse_args(args)
+    except SystemExit as exc:  # usage error (2) or -h (0)
+        return exc.code
+    return ns.func(ns)
 
 
 def _migrate_main(argv: list[str] | None = None) -> int:
     from .catalog import probe_sink
     from .config import resolve_config
+    from .logging_setup import setup_logger
     from .operators.migrate import migrate_full_database, migrate_single_table
     from .report import exit_code, generate_report
-    from .session import get_spark
-
-    from .logging_setup import setup_logger
 
     cfg = resolve_config(argv)
     if not cfg.source_dir or not cfg.dest_dir:
-        print("--source-dir and --dest-dir are required", file=sys.stderr)
-        return 2
+        return _usage("--source-dir and --dest-dir are required")
     logger = setup_logger(cfg.log_dir)
     start = time.time()
-    spark = get_spark(app_name="spark-migrator")
-    try:
+    with _session("spark-migrator") as spark:
         # S2: sink capability probe (ch_client.py:27-77 parity)
         if not probe_sink(spark, cfg.dest_dir):
             print(f"sink probe failed for {cfg.dest_dir}", file=sys.stderr)
@@ -420,16 +313,14 @@ def _migrate_main(argv: list[str] | None = None) -> int:
         path = generate_report(
             results, cfg.report_dir, start, config_snapshot=vars(cfg)
         )
-        logger.info("report written: %s", path)
-        print(f"report: {path}")
-        for r in results:
-            print(
-                f"  {r['table']}: {r['status']}"
-                + (f" ({r.get('error')})" if r.get("error") else "")
-            )
-        return exit_code(results)  # C11
-    finally:
-        spark.stop()
+    logger.info("report written: %s", path)
+    print(f"report: {path}")
+    for r in results:
+        print(
+            f"  {r['table']}: {r['status']}"
+            + (f" ({r.get('error')})" if r.get("error") else "")
+        )
+    return exit_code(results)  # C11
 
 
 if __name__ == "__main__":

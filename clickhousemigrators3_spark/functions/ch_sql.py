@@ -1199,7 +1199,7 @@ def _find_close(tokens: list[str], i_open: int) -> int:
             depth -= 1
             if depth == 0:
                 return j
-    raise UnsupportedCHSQL("unbalanced parentheses in ClickHouse SQL")
+    raise UnsupportedCHSQL("unbalanced parentheses in ClickHouse SQL")  # no-golden: run-path (split_ch_insert's column list, before any balance check) -- pytest test_insert_parser_refusals
 
 
 def _depth0(tokens: list[str], start: int, end: int | None = None):
@@ -3043,7 +3043,7 @@ def _rewrite_bare_array_joins(tokens: list[str]) -> list[str]:
         aj_idx, ident_idx, clause_end = target
         name = tokens[ident_idx]
         alias = f"__aj_{name.strip('`')}"
-        sel_idx = _owning_select_idx(tokens, aj_idx)
+        sel_idx = _owning_select(tokens, aj_idx)
         start = sel_idx if sel_idx is not None else 0
         # scope: to the enclosing group's close or a same-depth UNION
         span_end = next(
@@ -3495,9 +3495,7 @@ def _any_right_join_rewrite(
             "((SELECT * FROM t ORDER BY <cols>) AS t ANY RIGHT JOIN …), "
             f"or see {_ANY_JOIN_PTR}"
         )
-    open_i = _group_start(tokens, close_i - 1)
-    if open_i < 0:
-        raise UnsupportedCHSQL("unbalanced parentheses before ANY RIGHT JOIN")  # no-golden: unreachable: the tokenizer pass balances parens before rewrites run
+    open_i = _group_start(tokens, close_i - 1)  # >= 0: parens are balanced
     ord_sql = _subquery_order_sql(tokens, open_i, close_i, side="left")
     if ord_sql is None:
         raise UnsupportedCHSQL(
@@ -3778,11 +3776,7 @@ def _rewrite_colon_casts(tokens: list[str]) -> list[str]:
             raise UnsupportedCHSQL("'::' cast without a left operand")
         start = None
         if out[p] == ")":
-            q = _group_start(out, p - 1)
-            if q < 0:
-                raise UnsupportedCHSQL(
-                    "unbalanced parentheses before '::' cast"
-                )
+            q = _group_start(out, p - 1)  # >= 0: parens are balanced
             start = q
             # include a call name before the paren group — but never a
             # structural keyword ((a + b)::Float64 in a select list must
@@ -4214,8 +4208,7 @@ def _rewrite_limit_ties(tokens: list[str], idx: int) -> list[str]:
     n_sql = tokens[j]
     ties_word = _next_code(tokens, k + 1)  # the TIES token
     ties_end = ties_word + 1
-    # owning SELECT: nearest depth-0 `select` scanning backward
-    sel_idx = _owning_select_idx(tokens, idx)
+    sel_idx = _owning_select(tokens, idx)
     if sel_idx is None:
         raise UnsupportedCHSQL("LIMIT n WITH TIES without an owning SELECT")  # no-golden: unreachable: the marker is raised inside an owning SELECT
     # ORDER BY inside [sel_idx, idx): required — it DEFINES the ties
@@ -4336,8 +4329,7 @@ def _rewrite_limit_by(tokens: list[str], idx: int) -> list[str]:
             )
     n_sql = tokens[j]
     # k is the BY keyword; the expr list starts after it
-    # --- owning SELECT: nearest depth-0 `select` scanning backward --------
-    sel_idx = _owning_select_idx(tokens, idx)
+    sel_idx = _owning_select(tokens, idx)
     if sel_idx is None:
         raise UnsupportedCHSQL("LIMIT n BY without an owning SELECT")  # no-golden: unreachable: the LIMIT BY marker is raised inside an owning SELECT
     # --- ORDER BY inside [sel_idx, idx): required for determinism ---------
@@ -4636,11 +4628,18 @@ def _rewrite_array_literals(tokens: list[str]) -> list[str]:
       ClickHouse fills the type default (the documented LEFT ARRAY JOIN
       posture, docs/CHSQL.md).
 
-    Runs before every other pass so all machinery sees plain parens."""
+    Runs before every other pass so all machinery sees plain parens, and
+    refuses unbalanced brackets or parentheses here: the rewrites stop at
+    a group's ``)``, so an unbalanced statement would otherwise come back
+    half translated."""
     out: list[str] = []
     stack: list[str] = []  # per open bracket: "lit" | "acc" | "raw"
     prev: str | None = None
+    depth = 0  # paren depth, checked only for balance
     for t in tokens:
+        depth += (t == "(") - (t == ")")
+        if depth < 0:
+            break
         if t == "[":
             access = prev is not None and (
                 prev in (")", "]")
@@ -4672,6 +4671,8 @@ def _rewrite_array_literals(tokens: list[str]) -> list[str]:
         out.append(t)
         if not _is_ws(t):
             prev = t
+    if depth:
+        raise UnsupportedCHSQL("unbalanced parentheses in ClickHouse SQL")
     if stack:
         raise UnsupportedCHSQL("unbalanced brackets in ClickHouse SQL")
     return out
@@ -7296,13 +7297,6 @@ def _has_column_matchers(sql: str) -> bool:
     return False
 
 
-def _owning_select_idx(tokens: list[str], i: int) -> int | None:
-    """Nearest SELECT at the same paren depth scanning backward from i."""
-    return next(
-        (p for p, lw in _depth0_back(tokens, i - 1) if lw == "select"), None
-    )
-
-
 def _in_select_list(tokens: list[str], i: int) -> bool:
     """True when token i sits in a SELECT list: the nearest depth-0 clause
     keyword to its LEFT is SELECT (not FROM/WHERE/GROUP/…)."""
@@ -7557,7 +7551,7 @@ def _expand_column_matchers(spark, sql: str) -> str:
                     "expanded — alias-scoped column sets are ambiguous "
                     "here; spell the columns explicitly"
                 )
-            sel_idx = _owning_select_idx(tokens, i)
+            sel_idx = _owning_select(tokens, i)
             if sel_idx is None:
                 raise UnsupportedCHSQL(  # no-golden: unreachable: _in_select_list already requires an owning SELECT
                     "column matcher outside a SELECT list"
@@ -8119,7 +8113,7 @@ def _expand_neighbor_defaults(spark, sql: str) -> str:
         if site is None:
             return sql
         i, open_i, close, args = site
-        sel_idx = _owning_select_idx(tokens, i)
+        sel_idx = _owning_select(tokens, i)
         if sel_idx is None:
             raise UnsupportedCHSQL(  # no-golden: run-path (run_ch_sql neighbor) -- pytest test_neighbor_type_default
                 "neighbor(x, offset) outside a SELECT list — pass an "
@@ -8156,6 +8150,70 @@ def _merged_engines(engines) -> dict:
     return merged
 
 
+_SYSTEM_VIEW_REF = re.compile(
+    r"(?i)\bsystem\s*(?:\.\s*|_)(?:tables|parts|columns|storage_policies)\b"
+)
+
+
+def _session_translate(
+    spark, sql: str, sf_dir: str | None = None, tables=None, engines=None
+) -> str:
+    """ClickHouse SQL → Spark SQL text with a session at hand: the one
+    pipeline behind :func:`run_ch_sql` (its SELECTs and EXPLAIN SYNTAX)
+    and :func:`run_ch_insert`'s source query. With ``sf_dir`` the fixture
+    tables (all of them, or the ``tables`` subset) are registered as temp
+    views first, and the emulated system views when the text names one,
+    because the expansions below analyze probe queries against them.
+    Nothing executes: every probe is analysis only.
+
+    * ``ORDER BY … WITH FILL`` is cut off first and expanded last
+      (:func:`_expand_with_fill`): the dense axis needs the result schema.
+    * ``FROM t FINAL`` / ``SAMPLE k [OFFSET m]`` expand against the
+      table's MergeTree metadata (``catalog.MERGETREE_ENGINES`` under the
+      per-call ``engines`` override), before the matcher pass so a
+      matcher's FROM probe sees the collapsed/sampled subquery
+      (:func:`_expand_table_modifiers`).
+    * ``COLUMNS(…)`` / ``* APPLY|EXCEPT|REPLACE`` / ``untuple`` probe the
+      FROM clause's schema (:func:`_expand_column_matchers`).
+    * a 2-arg ``neighbor(x, offset)`` gets x's type default as its third
+      argument (:func:`_expand_neighbor_defaults`).
+    * ``GROUP BY … WITH ROLLUP/CUBE/TOTALS`` over keys whose types the
+      text does not give is typed from a probe translation's analyzed
+      schema (:func:`_rewrite_group_modifiers`)."""
+    if sf_dir is not None:
+        from ..catalog import register_system_views, register_tables
+
+        from .. import TABLES
+
+        register_tables(
+            spark, sf_dir, tuple(TABLES if tables is None else tables)
+        )
+        if _SYSTEM_VIEW_REF.search(sql):
+            register_system_views(spark, sf_dir)
+    fill = _extract_with_fill(sql)
+    base_sql = sql if fill is None else fill[0]
+    if re.search(r"(?i)\b(?:final|sample)\b", base_sql):
+        base_sql = _expand_table_modifiers(
+            spark, base_sql, _merged_engines(engines)
+        )
+    if _has_column_matchers(base_sql):
+        base_sql = _expand_column_matchers(spark, base_sql)
+    if re.search(r"(?i)\bneighbor\s*\(", base_sql):
+        base_sql = _expand_neighbor_defaults(spark, base_sql)
+    try:
+        text = translate_ch_sql(base_sql)
+    except _NeedsSchemaTyping:
+        probe = _translate_impl(base_sql, gm_mode="plain")
+        types = {
+            i: f.dataType.simpleString()
+            for i, f in enumerate(spark.sql(probe).schema.fields)
+        }
+        text = _translate_impl(base_sql, gm_mode="typed", gm_types=types)
+    if fill is not None:
+        text = _expand_with_fill(spark, text, fill[1])
+    return text
+
+
 def run_ch_sql(
     spark, sql: str, sf_dir: str | None = None, tables=None, engines=None
 ):
@@ -8166,139 +8224,28 @@ def run_ch_sql(
     ``system.storage_policies`` trigger the catalog's system-view
     emulation, so the reference's orchestration SQL runs verbatim too.
 
-    ``FROM t FINAL`` and ``SAMPLE k [OFFSET m]`` expand here (round 14)
-    against the table's MergeTree metadata — ``catalog.MERGETREE_ENGINES``
-    merged under the per-call ``engines={name: spec}`` override — into the
-    explicit window-dedup / hash-range subqueries; see
-    :func:`_expand_table_modifiers`.
+    Beyond the string-only :func:`translate_ch_sql`, this path supports
+    the constructs that need the session (see :func:`_session_translate`):
+    ``FROM t FINAL`` and ``SAMPLE k [OFFSET m]`` (engine metadata from
+    ``catalog.MERGETREE_ENGINES`` merged under the per-call
+    ``engines={name: spec}`` override), ``ORDER BY … WITH FILL``, column
+    matchers, the 2-arg ``neighbor`` and ``GROUP BY … WITH
+    ROLLUP/CUBE/TOTALS`` over bare-column keys.
 
-    ``ORDER BY <col> WITH FILL [FROM …] [TO …] [STEP …]`` is supported here
-    (not in the string-only :func:`translate_ch_sql` path) because the dense
-    axis needs the result schema: other columns are filled with ClickHouse
-    type defaults (0 / '' / epoch), which requires knowing their Spark
-    types. See :func:`_expand_with_fill`.
-
-    ``GROUP BY … WITH ROLLUP/CUBE/TOTALS`` whose key types are not
-    derivable from the query text (bare-column keys) is typed here the
-    same way: a probe translation (structural rewrite, no key wraps) is
-    ANALYZED — nothing executes — and the output schema supplies each
-    key's type for the ClickHouse subtotal defaults. See
-    :func:`_rewrite_group_modifiers`."""
+    ``EXPLAIN SYNTAX <query>`` — ClickHouse's "show the rewritten query" —
+    returns this translator's emitted Spark SQL for the query as rows of
+    one ``statement`` column, one per line; nothing executes."""
     toks = _tokenize(sql)
-    lead_i = _next_code(toks, 0)
-    if lead_i < len(toks) and toks[lead_i].lower() == "explain":
-        m_i = _next_code(toks, lead_i + 1)
-        if m_i < len(toks) and toks[m_i].lower() == "syntax":
-            # ClickHouse's EXPLAIN SYNTAX shows the rewritten query — here
-            # that IS this translator's emitted Spark SQL (round 13):
-            # translate the inner statement (views registered so matcher
-            # expansion and typed-probe paths work; ANALYSIS only, nothing
-            # executes) and return the text as rows, one per line.
-            inner_sql = "".join(toks[m_i + 1 :])
-            if sf_dir is not None:
-                from ..catalog import register_system_views, register_tables
-
-                from .. import TABLES
-
-                register_tables(
-                    spark, sf_dir,
-                    tuple(TABLES) if tables is None else tuple(tables),
-                )
-                # the typed-probe / matcher-expansion fallbacks below
-                # analyze against system_* views when referenced — same
-                # registration the non-SYNTAX path performs (round-13
-                # review fix)
-                if re.search(
-                    r"\bsystem\s*\.\s*(?:tables|parts|columns|"
-                    r"storage_policies)\b",
-                    inner_sql,
-                ):
-                    register_system_views(spark, sf_dir)
-            fill2 = _extract_with_fill(inner_sql)
-            base2 = inner_sql if fill2 is None else fill2[0]
-            if re.search(r"(?i)\b(?:final|sample)\b", base2):
-                base2 = _expand_table_modifiers(
-                    spark, base2, _merged_engines(engines)
-                )
-            if _has_column_matchers(base2):
-                base2 = _expand_column_matchers(spark, base2)
-            if re.search(r"(?i)\bneighbor\s*\(", base2):
-                base2 = _expand_neighbor_defaults(spark, base2)
-            try:
-                text = translate_ch_sql(base2)
-            except _NeedsSchemaTyping:
-                probe = _translate_impl(base2, gm_mode="plain")
-                types = {
-                    i: f.dataType.simpleString()
-                    for i, f in enumerate(spark.sql(probe).schema.fields)
-                }
-                text = _translate_impl(
-                    base2, gm_mode="typed", gm_types=types
-                )
-            if fill2 is not None:
-                text = _expand_with_fill(spark, text, fill2[1])
-            return spark.createDataFrame(
-                [(line,) for line in (text.splitlines() or [text])],
-                "statement string",
-            )
-
-    fill = _extract_with_fill(sql)
-    base_sql = sql if fill is None else fill[0]
-    if sf_dir is not None:
-        from ..catalog import register_system_views, register_tables
-
-        if tables is None:
-            from .. import TABLES
-
-            tables = TABLES
-        register_tables(spark, sf_dir, tuple(tables))
-    if re.search(r"(?i)\b(?:final|sample)\b", base_sql):
-        # FINAL/SAMPLE expand BEFORE the matcher pass: a matcher's FROM
-        # probe must see the already-deduped/sampled subquery, not refuse
-        # on the raw modifier
-        base_sql = _expand_table_modifiers(
-            spark, base_sql, _merged_engines(engines)
+    lead = [i for i, t in enumerate(toks) if not _is_ws(t)][:2]
+    if [toks[i].lower() for i in lead] == ["explain", "syntax"]:
+        text = _session_translate(
+            spark, "".join(toks[lead[1] + 1 :]), sf_dir, tables, engines
         )
-    if _has_column_matchers(base_sql):
-        # round 13: matcher expansion probes the FROM clause's schema, so
-        # the views must already exist; system views too when referenced
-        if sf_dir is not None and re.search(
-            r"\bsystem\s*\.\s*(?:tables|parts|columns|storage_policies)\b", base_sql
-        ):
-            from ..catalog import register_system_views
-
-            register_system_views(spark, sf_dir)
-        base_sql = _expand_column_matchers(spark, base_sql)
-    if re.search(r"(?i)\bneighbor\s*\(", base_sql):
-        # round 14: the 2-arg form's implicit TYPE default is probed from
-        # the FROM schema here; the 3-arg result still needs the pin
-        base_sql = _expand_neighbor_defaults(spark, base_sql)
-    try:
-        translated = translate_ch_sql(base_sql)
-    except _NeedsSchemaTyping:
-        translated = None  # typed below, after the views exist to analyze
-    if translated is None:
-        probe = _translate_impl(base_sql, gm_mode="plain")
-        if sf_dir is not None and re.search(
-            r"\bsystem_(?:tables|parts|columns|storage_policies)\b", probe
-        ):
-            from ..catalog import register_system_views
-
-            register_system_views(spark, sf_dir)
-        schema = spark.sql(probe).schema  # analysis only
-        types = {
-            i: f.dataType.simpleString() for i, f in enumerate(schema.fields)
-        }
-        translated = _translate_impl(base_sql, gm_mode="typed", gm_types=types)
-    elif sf_dir is not None and re.search(
-        r"\bsystem_(?:tables|parts|columns|storage_policies)\b", translated
-    ):
-        from ..catalog import register_system_views
-
-        register_system_views(spark, sf_dir)
-    if fill is not None:
-        translated = _expand_with_fill(spark, translated, fill[1])
-    return spark.sql(translated)
+        return spark.createDataFrame(
+            [(line,) for line in (text.splitlines() or [text])],
+            "statement string",
+        )
+    return spark.sql(_session_translate(spark, sql, sf_dir, tables, engines))
 
 
 # --- INSERT statement surface ----------------------------------------------
@@ -8394,8 +8341,11 @@ def _list_data_files(spark, path: str) -> set[str]:
 
 def run_ch_insert(spark, sql: str, dest_root: str, sf_dir: str | None = None):
     """Execute a ClickHouse ``INSERT INTO … SELECT/VALUES`` statement:
-    translate the source query (same path as :func:`run_ch_sql`), then
-    parquet-APPEND the result under ``{dest_root}/{db}/{table}``.
+    translate the source query through the same session pipeline as
+    :func:`run_ch_sql` (``FINAL``/``SAMPLE``, ``WITH FILL``, column
+    matchers, the 2-arg ``neighbor`` and typed ``ROLLUP``/``CUBE`` keys
+    included; with ``sf_dir`` the fixture tables are registered first),
+    then parquet-APPEND the result under ``{dest_root}/{db}/{table}``.
 
     One source pass: the inserted-row count comes from the parquet footers
     of the files the write just added (before/after manifest diff), not
@@ -8419,16 +8369,7 @@ def run_ch_insert(spark, sql: str, dest_root: str, sf_dir: str | None = None):
     if parsed is None:
         raise UnsupportedCHSQL("not an INSERT statement — use run_ch_sql")  # no-golden: run-path (run_ch_insert on a non-INSERT; split returns None -- pytest test_insert_parser_refusals)
     target, cols, source_sql = parsed
-    translated = translate_ch_sql(source_sql)
-    if sf_dir is not None:
-        from ..catalog import register_system_views, register_tables
-
-        from .. import TABLES
-
-        register_tables(spark, sf_dir, tuple(TABLES))
-        if re.search(r"\bsystem_(?:tables|parts|columns|storage_policies)\b", translated):
-            register_system_views(spark, sf_dir)
-    df = spark.sql(translated)
+    df = spark.sql(_session_translate(spark, source_sql, sf_dir))
     if cols:
         if len(cols) != len(df.columns):
             raise UnsupportedCHSQL(  # no-golden: run-path (run_ch_insert column-list mismatch, session-only)

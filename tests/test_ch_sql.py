@@ -906,6 +906,59 @@ def test_cli_chsql_explain_insert_is_dry_run(capsys, tmp_path, monkeypatch):
     assert not os.path.exists(dest)  # nothing was written
 
 
+def test_cli_chsql_runs_session_only_constructs(spark, capsys, monkeypatch):
+    """chsql runs its statement through run_ch_sql, so constructs that need
+    the session work from the CLI: FROM … FINAL prints the collapsed rows,
+    and EXPLAIN SYNTAX prints the emitted statement. Refused at the parent
+    by the string-only pre-check ("run it through run_ch_sql", exit 3)."""
+    import pyspark.sql
+
+    from clickhousemigrators3_spark.cli import main
+
+    monkeypatch.setattr(pyspark.sql.SparkSession, "stop", lambda self: None)
+    sf = "/root/testdata/sf0.001"
+    rc = main(["chsql", "SELECT user_id FROM events FINAL LIMIT 3", "--sf-dir", sf])
+    out = capsys.readouterr()
+    assert rc == 0, out.err
+    lines = out.out.splitlines()
+    assert lines[0] == "user_id" and len(lines) == 4
+    assert all(v.isdigit() for v in lines[1:])
+
+    inner = "SELECT countIf(o_totalprice > 1) AS c FROM orders PREWHERE o_orderkey = 2"
+    rc = main(["chsql", f"EXPLAIN SYNTAX {inner}", "--sf-dir", sf])
+    out = capsys.readouterr()
+    assert rc == 0, out.err
+    assert out.out.splitlines() == ["statement", translate_ch_sql(inner)]
+
+
+def test_insert_source_runs_the_session_pipeline(spark, tmp_path):
+    """run_ch_insert translates its source like run_ch_sql: FROM events
+    FINAL appends the collapsed rows (the parent refused it string-only)."""
+    from clickhousemigrators3_spark.functions.ch_sql import run_ch_insert
+
+    sf = "/root/testdata/sf0.001"
+    row = run_ch_insert(
+        spark,
+        "INSERT INTO default.t SELECT user_id FROM events FINAL",
+        str(tmp_path),
+        sf,
+    ).collect()[0]
+    final = run_ch_sql(spark, "SELECT user_id FROM events FINAL", sf)
+    assert row.rows_inserted == final.count() < spark.table("events").count()
+    written = spark.read.parquet(row.path)
+    assert sorted(written.collect()) == sorted(final.collect())
+
+
+def test_nested_two_arg_neighbor(spark):
+    """A 2-arg neighbor nested in a function call gets its type default
+    like a bare one (the owning SELECT is found through the call's paren)."""
+    sf = "/root/testdata/sf0.001"
+    q = "SELECT o_orderkey, round({}, 0) AS n FROM orders ORDER BY o_orderkey LIMIT 5"
+    got = run_ch_sql(spark, q.format("neighbor(o_totalprice, 1)"), sf).collect()
+    want = run_ch_sql(spark, q.format("neighbor(o_totalprice, 1, 0)"), sf).collect()
+    assert got == want and len(got) == 5
+
+
 def test_system_table_emulation(spark):
     """The reference's orchestration SQL (partition.py:12-16,107-114,
     migration.py:139,549, ch_client.py:34) runs VERBATIM: system.tables /
@@ -4258,12 +4311,12 @@ def test_any_join_refusals(ch: str, needle: str):
         # golden here or in a sibling suite; scripts/audit_refusals.py
         # instruments the constructor and fails the evidence gate when a
         # site has neither a golden nor a `# no-golden:` marker.
-        # tokenizer / bracket structure (the paren case reaches
-        # _find_close through the ANY JOIN subquery scan — the plain
-        # call-emit path treats an unclosed call as a non-call and
-        # streams it through to Spark's own parser)
+        # tokenizer / bracket structure: brackets and parens are
+        # balance-checked before any rewrite, so an unclosed group or a
+        # stray `)` refuses instead of coming back half translated
         ("SELECT * FROM t ANY LEFT JOIN (SELECT k FROM u ORDER BY o",
          "unbalanced parentheses"),
+        ("WITH )  1 +  ( 1 SELECT 2", "unbalanced parentheses"),
         ("SELECT a[1 FROM t", "unbalanced brackets"),
         ("SELECT a]1 FROM t", "unbalanced brackets"),
         # scalar-function argument shapes
@@ -4379,7 +4432,7 @@ def test_any_join_refusals(ch: str, needle: str):
         ("SELECT a::1 FROM t", "needs a type name"),
         ("SELECT a::Nullable('x') FROM t", "not mapped"),
         ("::Int64", "without a left operand"),
-        ("SELECT )::Int64 FROM t", "unbalanced parentheses before"),
+        ("SELECT )::Int64 FROM t", "unbalanced parentheses"),
         ("SELECT a FROM t ORDER BY a OFFSET 1 ROW "
          "FETCH NEXT 2 ROWS WITH TIES", "ties-bounded"),
         ("SELECT sumState(v) FROM t", "partial aggregate"),
@@ -4701,6 +4754,7 @@ def test_insert_parser_refusals():
         ("INSERT INTO orders", "SELECT, WITH, or VALUES"),
         ("INSERT INTO orders FORMAT CSV", "out-of-band"),
         ("INSERT INTO orders DROP TABLE x", "not supported"),
+        ("INSERT INTO orders (a, b SELECT 1", "unbalanced parentheses"),
     ]
     for sql, needle in cases:
         with pytest.raises(UnsupportedCHSQL) as exc:

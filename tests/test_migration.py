@@ -623,6 +623,37 @@ def test_split_top_level_assignments():
     assert _split_top_level("arr=array(1, 2)[1],z=3") == ["arr=array(1, 2)[1]", "z=3"]
 
 
+@pytest.mark.parametrize(
+    "argv",
+    [
+        ["list-queries", "--bogus"],
+        ["query"],
+        ["query", "a1_total_count", "--limit", "many"],
+        ["chsql"],
+        ["chsql", "SELECT 1", "--bogus"],
+        ["optimize", "--path", "p"],
+        ["ttl", "--bogus", "x"],
+        ["update", "--path", "p"],
+        ["attach-partition", "--src", "s"],
+        ["attach-partition", "--src", "s", "--dst", "d", "--partitions", "p",
+         "--values", "v", "--mode", "swap"],
+    ],
+    ids=lambda argv: " ".join(argv),
+)
+def test_cli_usage_errors_exit_2_without_a_session(argv, monkeypatch, capsys):
+    """Every subcommand's missing required argument or bad --mode is a
+    usage error (exit 2) found before any SparkSession starts."""
+    import clickhousemigrators3_spark.session as session
+    from clickhousemigrators3_spark.cli import main
+
+    def no_session(**_kw):
+        raise AssertionError("a session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    assert main(argv) == 2
+    assert "usage:" in capsys.readouterr().err
+
+
 # --- NULL partition values, keyless checksums, the validation's plan -------
 
 _NULL_KEY_ROWS = [("a", "x", 1), ("a", "y", 2), (None, "x", 3), (None, None, 4), ("b", "x", 5)]
